@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Link-graph scoring — the crawl-curation signal family: PageRank-style
@@ -20,20 +23,21 @@ import org.apache.spark.sql.functions._
   * distribution; documented, deterministic, and identical in the DuckDB
   * oracle's unrolled spelling).
   *
-  * Scale shape per iteration: one equi-join edges⋈ranks on src (both
-  * sides hash-partitioned on the join key; ranks is |V| rows, edges |E|),
-  * one hash aggregate on dst (map-side combinable long sums), one 1-row
-  * dangling-mass aggregate broadcast back, and a left join onto the node
-  * table. No cross product, no window, no driver data path; lineage is
-  * cut per iteration with `localCheckpoint` exactly like the
-  * connected-components loop.
+  * Scale shape per PageRank/PPR iteration: a narrow join of the rank RDD
+  * with the co-partitioned, checkpointed adjacency (|V| rows, out-neighbour
+  * arrays), and ONE shuffle — a map-side-combined `reduceByKey` of long
+  * contributions on dst that also carries the dangling mass. No job per
+  * iteration: one job builds the adjacency and counts |V|, the caller's
+  * action runs every superstep. No cross product, no window, no driver
+  * data path. Alternatives measured and rejected are in LEDGER.md.
   */
 object Graph {
 
   /** Fixed-point PageRank. `edges` is a directed `(src, dst)` table
-    * (longs, self-loops allowed, duplicates contribute multiplicity);
-    * returns `(node, rank)` where rank is in SCALE=10^12 fixed-point
-    * units (Σ rank ≈ SCALE up to floor loss).
+    * (longs, self-loops allowed, duplicates contribute multiplicity, an
+    * edge with a null endpoint is ignored); returns `(node, rank)` where
+    * rank is in SCALE=10^12 fixed-point units (Σ rank ≈ SCALE up to floor
+    * loss).
     *
     * Per iteration, with integer division throughout:
     * {{{
@@ -43,164 +47,122 @@ object Graph {
     * }}}
     * i.e. damping 0.85 expressed as the exact rational 85/100.
     *
-    * `checkpointEvery` bounds lineage depth: within a window the
-    * iterations stay LAZY — one final job executes the whole chain with
-    * ReuseExchange deduplicating the identical static subtrees (the
-    * checkpointed edge table's exchange) — measured slightly faster than
-    * checkpointing every round (8.4 vs 9.8 s warm at sf0.1 pre-subset).
-    * Past the window, a `localCheckpoint` cuts the
-    * (per-iteration-doubling) logical-plan growth, exactly like the CC
-    * loop. */
+    * `checkpointEvery` marks every that-many-th rank RDD for
+    * `localCheckpoint`: the caller's action materializes it, and later
+    * actions on the result start from there. */
   def pageRank(edges: DataFrame, iters: Int = 5,
                scale: Long = 1000000000000L,
-               checkpointEvery: Int = 6): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val div = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      call_function("div", a, b)
-    // The edge table is materialized once (localCheckpoint) and then
-    // hash-joined per iteration — a slim 2-long-column shuffle per round,
-    // the standard Spark PageRank cost. Exchange-ELIMINATION spellings
-    // were measured and rejected at this scale: a persisted
-    // repartition(src) table does satisfy the join's distribution
-    // (GraphSpec pins that premise — it is the co-location lever a
-    // cluster deployment gets from a bucketed edge table,
-    // ops.Bucketing), but at bench scale the planner then prefers a
-    // sort-based join whose per-iteration sort costs MORE than the slim
-    // hash shuffle it saves (12.1 s vs 5.5 s warm at sf0.1); and a
-    // checkpointed LogicalRDD reports UnknownPartitioning, so
-    // checkpoint-after-repartition buys nothing.
-    //
-    // Round-14 re-test of the full co-location spelling (VERDICT item 1)
-    // — persist(repartition(parallelism, src)) so the InMemoryRelation
-    // REPORTS hashpartitioning + SHUFFLE_HASH hints so the join stays
-    // sort-free — measured WORSE in every regime on this host and was
-    // reverted (numbers in OPTIMIZATION_r14.md, plans in plans/r14/):
-    //   · sf0.1, default broadcast threshold: 6.3 vs 5.8 s (hints
-    //     suppress the planner's broadcast: forced-SHJ spellings hit
-    //     10–22 s, and persisting the live lineage 36–88 s driver-side);
-    //   · sf1eq (~510k nodes, 4M edges), default threshold: ~equal;
-    //   · sf1eq with the broadcast threshold forced to 1 KB (the true
-    //     past-broadcast regime a 100 TB graph lives in): plain unhinted
-    //     SMJ 13.4 s vs the persist+SHJ route 35–38 s — the per-superstep
-    //     SMJ sort of the slim 2-long edge row is CHEAPER here than
-    //     5 supersteps of InMemoryTableScan decompression + forced hash
-    //     builds. The no-op "after" plan is the measured optimum of the
-    //     spellings tried; at genuine cluster scale the lever remains a
-    //     BUCKETED edge table (ops.Bucketing) whose scan reports the
-    //     partitioning without an in-memory cache in the loop.
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    // |V| is a 1-row driver bound (like the CC loop's convergence probe)
-    // and the rank table carries each node's STATIC out-degree from the
-    // start — no per-iteration rank⋈outdeg join
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val n = nodes.count()
-    require(n > 0, "pageRank needs a non-empty edge table")
-    val base = scale / n
-
-    var r = nodes.join(outdeg, Seq("node"), "left")
-      .select(col("node"), lit(base).as("rank"), col("deg"))
-      .repartition(col("node"))
-      .localCheckpoint()
-    var it = 0
-    while (it < iters) {
-      val contribs = e.join(r.where(col("deg").isNotNull),
-          e("src") === r("node"))
-        .select(col("dst"), div(col("rank"), col("deg")).as("c"))
-        .groupBy("dst").agg(sum("c").as("contrib"))
-      val dang = r.where(col("deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0L)).as("dm"))
-      val next = r.select(col("node"), col("deg"))
-        .join(contribs, r("node") === contribs("dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          div(lit(15L) * lit(base) +
-            lit(85L) * (coalesce(col("contrib"), lit(0L)) +
-              div(col("dm"), lit(n))),
-            lit(100L)).as("rank"),
-          col("deg"))
-      it += 1
-      r = if (it % checkpointEvery == 0 && it < iters) next.localCheckpoint()
-          else next
-    }
-    r.select(col("node"), col("rank"))
-  }
+               checkpointEvery: Int = 6): DataFrame =
+    rankSupersteps(edges, None, iters, scale, checkpointEvery)
 
   /** Personalized (topic-sensitive) PageRank: the restart mass teleports
     * to a SEED set instead of uniformly — "rank every page by proximity
     * to these trusted/topical pages", the crawl-prioritization and
     * TrustRank-style spam-demotion variant. Same fixed-point integer
-    * arithmetic, same per-iteration shape as [[pageRank]]; the only
+    * arithmetic, same superstep kernel as [[pageRank]]; the only
     * changes are the restart vector (`scale div |S|` on seeds, 0
     * elsewhere) and the dangling mass, which returns to the seeds (the
     * standard PPR convention — lost mass re-enters through the teleport
     * distribution). Seeds outside the edge table still hold restart mass
-    * (they are added to the node set); seed membership rides the rank
-    * table as a static flag, so no per-iteration seed join exists.
-    * Returns `(node, rank)`, bit-identical across partitionings and
-    * engines. */
+    * (they are added to the node set). Returns `(node, rank)`,
+    * bit-identical across partitionings and engines. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 5,
                            scale: Long = 1000000000000L,
-                           checkpointEvery: Int = 6): DataFrame = {
+                           checkpointEvery: Int = 6): DataFrame =
+    rankSupersteps(edges, Some(seeds), iters, scale, checkpointEvery)
+
+  /** Shuffle key of one map task's dangling-mass partial bound for reduce
+    * partition `partition`. */
+  private final case class DanglingShare(partition: Int)
+
+  /** Hash partitioning of node ids (the `HashPartitioner` rule) that sends
+    * each [[DanglingShare]] to the reduce partition it names, so every
+    * reduce partition receives the full dangling mass in the same shuffle
+    * as its contributions. */
+  private final case class SuperstepPartitioner(numPartitions: Int)
+      extends Partitioner {
+    def getPartition(key: Any): Int = key match {
+      case DanglingShare(p) => p
+      case k =>
+        val m = k.hashCode % numPartitions
+        if (m < 0) m + numPartitions else m
+    }
+  }
+
+  /** A node's static superstep state: its out-neighbours (duplicates kept,
+    * so multiplicity counts) and whether it takes restart and dangling
+    * mass (every node in PageRank, the seeds in PPR). */
+  private final case class Adjacency(out: Array[Long], restart: Boolean)
+
+  /** The PageRank/PPR superstep kernel. The adjacency is built once,
+    * partitioned by [[SuperstepPartitioner]] and `localCheckpoint`ed; the
+    * job that materializes it also counts the restart nodes. The rank RDD
+    * is always produced by walking the adjacency partition in order, so
+    * each superstep reads both sides position by position (a narrow,
+    * co-partitioned join) and runs ONE shuffle: a `reduceByKey` of the
+    * contributions keyed by `dst`, plus one dangling partial per map task
+    * for every reduce partition. No job runs per superstep — the caller's
+    * action executes all of them. */
+  private def rankSupersteps(edges: DataFrame, seeds: Option[DataFrame],
+                             iters: Int, scale: Long,
+                             checkpointEvery: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val div = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      call_function("div", a, b)
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val spark = edges.sparkSession
+    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val everyNode = seeds.isEmpty
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .na.drop().rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val seedIds = seeds.fold(spark.sparkContext.emptyRDD[(Long, Unit)])(
+      _.select(col("node").cast("long")).na.drop().rdd.map(r => (r.getLong(0), ())))
+    val adj = e.cogroup(e.map { case (_, d) => (d, ()) }, seedIds, part)
+      .mapValues { case (out, _, seed) =>
+        Adjacency(out.toArray, everyNode || seed.nonEmpty) }
       .localCheckpoint()
-    val sd = seeds.select(col("node").cast("long").as("node")).distinct()
-      .localCheckpoint()
-    val sCount = sd.count()
-    require(sCount > 0, "personalizedPageRank needs a non-empty seed set")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .unionByName(sd)
-      .distinct()
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val sBase = scale / sCount
+    val restartNodes = adj.aggregate(0L)(
+      (n, a) => if (a._2.restart) n + 1 else n, _ + _)
+    require(restartNodes > 0,
+      if (everyNode) "pageRank needs a non-empty edge table"
+      else "personalizedPageRank needs a non-empty seed set")
+    val base = scale / restartNodes
 
-    val seedBase = when(col("is_seed"), lit(sBase)).otherwise(lit(0L))
-    var r = nodes.join(outdeg, Seq("node"), "left")
-      .join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .select(col("node"), seedBase.as("rank"), col("deg"), col("is_seed"))
-      .repartition(col("node"))
-      .localCheckpoint()
+    var ranks = adj.mapValues(a => if (a.restart) base else 0L)
     var it = 0
     while (it < iters) {
-      val contribs = e.join(r.where(col("deg").isNotNull),
-          e("src") === r("node"))
-        .select(col("dst"), div(col("rank"), col("deg")).as("c"))
-        .groupBy("dst").agg(sum("c").as("contrib"))
-      val dang = r.where(col("deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0L)).as("dm"))
-      val next = r.select(col("node"), col("deg"), col("is_seed"))
-        .join(contribs, r("node") === contribs("dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          div(lit(15L) * seedBase +
-            lit(85L) * (coalesce(col("contrib"), lit(0L)) +
-              when(col("is_seed"), div(col("dm"), lit(sCount)))
-                .otherwise(lit(0L))),
-            lit(100L)).as("rank"),
-          col("deg"), col("is_seed"))
+      val sums = adj.zipPartitions(ranks) { (as, rs) =>
+        var dm = 0L
+        val contribs = as.zip(rs).flatMap { case ((_, a), (_, r)) =>
+          if (a.out.isEmpty) { dm += r; Iterator.empty }
+          else {
+            val c = r / a.out.length
+            a.out.iterator.map(d => (d: Any, c))
+          }
+        }
+        // `++` takes its operand by name: the partials are built after
+        // the contributions are drained, when `dm` is final
+        contribs ++ (if (dm == 0L) Iterator.empty
+                     else Iterator.tabulate(part.numPartitions)(p =>
+                       (DanglingShare(p): Any, dm)))
+      }.reduceByKey(part, _ + _)
+      ranks = adj.zipPartitions(sums) { (as, ss) =>
+        val contrib = new mutable.LongMap[Long]
+        var dm = 0L
+        ss.foreach {
+          case (DanglingShare(_), x) => dm = x
+          case (v: Long, x) => contrib(v) = x
+        }
+        val share = dm / restartNodes
+        as.map { case (v, a) =>
+          val (b, d) = if (a.restart) (base, share) else (0L, 0L)
+          (v, (15L * b + 85L * (contrib.getOrElse(v, 0L) + d)) / 100L)
+        }
+      }
       it += 1
-      r = if (it % checkpointEvery == 0 && it < iters) next.localCheckpoint()
-          else next
+      if (it % checkpointEvery == 0 && it < iters) ranks.localCheckpoint()
     }
-    r.select(col("node"), col("rank"))
+    spark.createDataFrame(ranks).toDF("node", "rank")
   }
 
   /** Exact per-node triangle counts on an undirected graph — the local
@@ -323,18 +285,17 @@ object Graph {
     * survivor set (hash joins on the endpoint; the survivor side is |V|
     * rows and usually broadcasts). Rounds = cascade depth, NOT diameter —
     * real graphs peel in a handful of rounds; lineage is cut per round
-    * like the CC/PageRank loops, and non-convergence within `maxRounds`
-    * fails loudly rather than returning a half-peeled set. */
+    * like the CC loop, two jobs per round (survivors, peeled edges — the
+    * convergence count rides the second), and non-convergence within
+    * `maxRounds` fails loudly rather than returning a half-peeled set. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var e = edges
+    var (e, nEdges) = checkpointObserving(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    var nEdges = e.count()
+      .distinct(), count(lit(1)))
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
@@ -347,12 +308,10 @@ object Graph {
       // 12.1 → 8.9 s at sf1eq (4M-edge co-occurrence graph), ~2.0 vs
       // 2.4 s control-corrected at sf0.1.
       val keep = deg.where(col("deg") >= k).select("node").localCheckpoint()
-      val next = e
+      val (next, m) = checkpointObserving(e
         .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint()
-      val m = next.count()
+        .select(col("u"), col("v")), count(lit(1)))
       // peeling only removes edges, so an unchanged count IS the fixpoint
       if (m == nEdges) converged = true
       else { e = next; nEdges = m; rounds += 1 }
@@ -365,6 +324,17 @@ object Graph {
     e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg"))
       .where(col("deg") >= k)
+  }
+
+  /** `localCheckpoint`s `df` and returns it with the value of the
+    * aggregate `metric` over its rows, observed by the materializing job
+    * instead of read by a second one — the convergence probe of the
+    * checkpointed loops here and in [[graft.pipeline.Dedup]]. */
+  private[graft] def checkpointObserving(df: DataFrame,
+                                         metric: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, metric.as("m")).localCheckpoint()
+    (cp, obs.get("m").asInstanceOf[Long])
   }
 
   /** HITS hubs & authorities (Kleinberg's mutual recursion) — the

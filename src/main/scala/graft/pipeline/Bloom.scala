@@ -58,27 +58,6 @@ object Bloom {
     BloomBits(words, k)
   }
 
-  /** Bijective xorshift mixer over raw longs — shifts and xors only, so
-    * the Column form is ANSI-safe (no overflow-checked multiply) and
-    * byte-identical to the JVM form (pinned by BloomSpec). Needed when
-    * probe keys are NOT already hashes (e.g. small sequential doc ids,
-    * whose low bits would otherwise collide structurally with the
-    * double-hashing probe's `h & (m-1)` / `h >>> 20` split). */
-  def mix64(h: Long): Long = {
-    var x = h
-    x ^= x << 13
-    x ^= x >>> 7
-    x ^= x << 17
-    x
-  }
-
-  /** Column form of [[mix64]] — same three xorshift steps. */
-  def mix64(c: Column): Column = {
-    val a = c.bitwiseXOR(shiftleft(c, 13))
-    val b = a.bitwiseXOR(shiftrightunsigned(a, 7))
-    b.bitwiseXOR(shiftleft(b, 17))
-  }
-
   /** Membership probe as a pure Column over a 60-bit hash column — the
     * words array rides the plan as ONE array literal (ships with the
     * serialized plan to every task, like a broadcast variable), each

@@ -138,41 +138,21 @@ object Dedup {
     * MinHash verify path; one formula, one implementation). */
   private[pipeline] def jaccardOfShingles(sh: DataFrame, theta: Double,
                                           candidates: Option[DataFrame] = None): DataFrame = {
-    // Candidate-path pre-filter history. Round 13 tried the guide-§3.2
-    // reduction as a candidate-doc SEMI-JOIN with its own checkpoint
-    // barriers and measured it 2.5× WORSE (4.6 vs 1.8 s, q_dedup_minhash
-    // at sf0.1) — the barriers beat the saved exchanges. Round 14
-    // implements the technique AS WRITTEN instead: a driver-built Bloom
-    // over the candidate doc ids, applied MAP-SIDE to the shingle table
-    // (a codegen'd getbit chain — no join node, no extra exchange, no
-    // barrier beyond the candidate materialization the collect needs
-    // anyway), so the sizes aggregate and both verify-join probes shuffle
-    // only candidate-doc shingle rows instead of the whole corpus's.
-    // False positives only add rows the inner joins drop; a Bloom has no
-    // false negatives and keeps EVERY row of a true candidate doc, so
-    // the per-doc shingle counts stay exact — output unchanged.
-    val (inter, sizes) = candidates match {
+    // candidate-side pre-filters of `sh` were measured and rejected
+    // (LEDGER.md, "Dedup.jaccardOfShingles")
+    val sizes = shingleSizes(sh)
+    val inter = candidates match {
       case None =>
-        val i0 = sh.as("a")
+        sh.as("a")
           .join(sh.as("b"), col("a.sh_hash") === col("b.sh_hash") &&
             col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
           .agg(count(lit(1)).as("c"))
-        (i0, shingleSizes(sh))
-      case Some(cands0) =>
-        // materialized: consumed by the Bloom-build collect AND the join
-        // (lazy, the banded candidate subtree would execute twice)
-        val cands = cands0.localCheckpoint()
-        val ids = cands
-          .select(explode(array(col("i"), col("j"))).as("d")).distinct()
-          .collect().map(r => Bloom.mix64(r.getLong(0)))
-        val bits = Bloom.build(ids)
-        val shF = sh.where(Bloom.mightContain(bits, Bloom.mix64(col("doc_id"))))
-        val i0 = cands
-          .join(shF.select(col("doc_id").as("i"), col("sh_hash")), "i")
-          .join(shF.select(col("doc_id").as("j"), col("sh_hash")), Seq("j", "sh_hash"))
+      case Some(cands) =>
+        cands
+          .join(sh.select(col("doc_id").as("i"), col("sh_hash")), "i")
+          .join(sh.select(col("doc_id").as("j"), col("sh_hash")), Seq("j", "sh_hash"))
           .groupBy("i", "j").agg(count(lit(1)).as("c"))
-        (i0, shingleSizes(shF))
     }
     inter
       .join(sizes.select(col("doc_id").as("i"), col("n_sh").as("ni")), "i")
@@ -401,7 +381,8 @@ object Dedup {
     * from cache), one min-aggregate, one left join back, one labels
     * self-join — all hash-shuffles on the id key, no driver state;
     * lineage is cut per round with `localCheckpoint` exactly like the
-    * optimizer superstep loop, so plans stay O(1) across rounds. Fully
+    * optimizer superstep loop, so plans stay O(1) across rounds, and the
+    * changed-label count is observed by that checkpoint's job. Fully
     * deterministic (min is order-independent).
     *
     * `nodes`: one id column (every doc — singletons cluster to
@@ -472,11 +453,9 @@ object Dedup {
                 .as("cluster"),
               col("a.old").as("old"))
         }
-      val step = stepBase
-        .withColumn("chg", col("cluster") < col("old"))
-        .drop("old")
-        .localCheckpoint()
-      changed = step.where(col("chg")).count()
+      val (step, chg) = graft.ops.Graph.checkpointObserving(stepBase,
+        count(when(col("cluster") < col("old"), lit(1))))
+      changed = chg
       labels = step.select("id", "cluster")
       rounds += 1
     }

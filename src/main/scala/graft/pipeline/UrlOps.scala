@@ -610,7 +610,7 @@ object UrlOps {
     // duplicates its subtree) otherwise fuses into the agg's codegen
     // stage and blows janino's method limit (interpreted fallback), and
     // would be re-analyzed per downstream action — the same internal
-    // materialization pageRank does for its edge table
+    // materialization kCore does for its edge table
     val withPath = urls.select(col(idCol),
       registeredDomain(canonicalHost(col(urlCol))).as("domain"),
       regexp_extract(canon, "://[^/]*(/[^?]*)", 1).as("path"))

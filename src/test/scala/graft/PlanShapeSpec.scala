@@ -527,21 +527,29 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     plan should include("GroupedTopKLimitFinal")
   }
 
-  "Graph.pageRank" should "plan no edge-side exchange in the iteration join" in {
+  "Graph.pageRank" should "submit the same few jobs at 2 and 10 iterations" in {
     import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (3L, 4L))
       .toDF("src", "dst")
-    val r = ops.Graph.pageRank(edges, iters = 2)
-    r.collect()
-    // the edge table is repartition(src)+localCheckpoint'd, so its
-    // LogicalRDD reports HashPartitioning(src): every iteration's
-    // edges⋈ranks join must reuse it — the only exchanges in the final
-    // chain hash the slim rank/contrib side, never re-shuffle a scan of
-    // the checkpointed edges (scan nodes sit DIRECTLY under the join)
-    val plan = r.queryExecution.executedPlan.toString
-    plan should not include "CartesianProduct"
-    // the per-iteration aggregate partial-combines map-side
-    plan should include("HashAggregate")
+    // the supersteps are shuffles inside the caller's one job: building
+    // the adjacency is the only other job, whatever the iteration count
+    def jobs(iters: Int) =
+      SubmittedWork.of(spark)(ops.Graph.pageRank(edges, iters).collect()).jobs
+    val two = jobs(2)
+    two should be <= 3
+    jobs(10) shouldBe two
+  }
+
+  "Graph.kCore" should "run two executions per peel round" in {
+    import spark.implicits._
+    // a path of n nodes peels its two end edges per round at k = 2: 4
+    // rounds for 9 nodes, 8 for 17. Per round one execution materializes
+    // the survivors and one the peeled edges, whose row count rides along
+    def executions(nodes: Long) = {
+      val path = (0L until nodes - 1).map(i => (i, i + 1)).toDF("src", "dst")
+      SubmittedWork.of(spark)(ops.Graph.kCore(path, 2).collect()).executions
+    }
+    executions(17) - executions(9) shouldBe 2 * 4
   }
 
   "q_substring_remove" should "never plan a cartesian product and prune the scan" in {

@@ -33,12 +33,28 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
   }
 
   private def run(edges: Seq[(Long, Long)], iters: Int,
-                  parts: Int = 1): Map[Long, Long] = {
+                  parts: Int = 1, checkpointEvery: Int = 6): Map[Long, Long] = {
     val s = spark
     import s.implicits._
     val df = edges.toDF("src", "dst").repartition(parts)
-    Graph.pageRank(df, iters)
+    Graph.pageRank(df, iters, checkpointEvery = checkpointEvery)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` — the
+    * superstep kernel's partition count, which the dangling-mass sentinel
+    * keys are routed by. */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** A sparse random graph: many dangling nodes, several components. */
+  private def sparseGraph(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(90)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter { case (a, b) => a != b }.distinct
   }
 
   "Graph.pageRank" should "match the integer reference bit-for-bit on a small graph" in {
@@ -60,18 +76,30 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     one shouldBe brute(edges, 4)
   }
 
+  it should "match the reference at 1 and 7 shuffle partitions" in {
+    val edges = sparseGraph(5)
+    val expect = brute(edges, 5)
+    withShufflePartitions(1)(run(edges, 5)) shouldBe expect
+    withShufflePartitions(7)(run(edges, 5)) shouldBe expect
+  }
+
+  it should "match the reference with checkpointEvery = 2 over 5 iterations" in {
+    val edges = sparseGraph(6)
+    run(edges, 5, checkpointEvery = 2) shouldBe brute(edges, 5)
+    run(edges, 5, parts = 5, checkpointEvery = 1) shouldBe brute(edges, 5)
+  }
+
   it should "plan no edge-side exchange over the persisted repartitioned edges (the no-reshuffle premise)" in {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    // The cluster-scale co-location lever SCALE.md cites for pageRank: a
-    // persisted repartition(src) edge table satisfies the iteration
-    // join's distribution, so the join plans no edge-side exchange.
-    // (pageRank itself ships the plain hash-join spelling — at bench
-    // scale the exchange-free plan's per-iteration sort measured slower
-    // than the slim shuffle it saves; a bucketed table gets this
-    // co-location without the sort. localCheckpoint canNOT substitute:
-    // its LogicalRDD reports UnknownPartitioning — also measured.)
+    // The DataFrame co-location premise: a persisted repartition(src) edge
+    // table satisfies an edges⋈scores join's distribution, so the join
+    // plans no edge-side exchange — the lever a DataFrame loop (hits) or
+    // a bucketed edge table gets at cluster scale. localCheckpoint canNOT
+    // substitute: its LogicalRDD reports UnknownPartitioning. pageRank no
+    // longer joins DataFrames: its RDD kernel co-partitions the adjacency
+    // and the ranks itself (LEDGER.md, "Graph.pageRank").
     // Pin the premise with AQE off so the plan string is deterministic.
     val prev = s.conf.get("spark.sql.adaptive.enabled")
     s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -160,6 +188,22 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     // the off-graph seed keeps restart + dangling-return mass
     got(99L) should be > 0L
     got.keySet should contain(99L)
+  }
+
+  it should "match the reference with seeds outside the edge table" in {
+    val edges = sparseGraph(7)
+    val seeds = Seq(0L, 3L, 500L, 501L, 502L)
+    val expect = brutePpr(edges, seeds, 5)
+    runPpr(edges, seeds, 5) shouldBe expect
+    Seq(500L, 501L, 502L).foreach(v => expect(v) should be > 0L)
+  }
+
+  it should "match the reference at 1 and 7 shuffle partitions" in {
+    val edges = sparseGraph(8)
+    val seeds = Seq(1L, 2L, 700L)
+    val expect = brutePpr(edges, seeds, 5)
+    withShufflePartitions(1)(runPpr(edges, seeds, 5)) shouldBe expect
+    withShufflePartitions(7)(runPpr(edges, seeds, 5, parts = 3)) shouldBe expect
   }
 
   it should "be invariant to input partitioning" in {
@@ -290,6 +334,32 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
       runCore(chain, 2, maxRounds = 3)
     // with enough rounds the same chain peels to an empty core
     runCore(chain, 2, maxRounds = 20) shouldBe Map.empty
+  }
+
+  /** Runs `body` on another thread and fails if it has not returned within
+    * two minutes: a convergence count that never arrived would block. */
+  private def noHang[T](body: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    Await.result(Future(body)(ExecutionContext.global), 2.minutes)
+  }
+
+  it should "return an empty core for an empty edge table" in {
+    noHang(runCore(Nil, 2)) shouldBe Map.empty
+  }
+
+  it should "stop in round 0 on a graph that already is a k-core" in {
+    // a 6-cycle is its own 2-core: the first peel removes nothing
+    val cycle = (0L until 6L).map(i => (i, (i + 1) % 6))
+    noHang(runCore(cycle, 2)) shouldBe bruteCore(cycle, 2)
+    noHang(runCore(cycle, 2)).keySet shouldBe (0L until 6L).toSet
+  }
+
+  it should "peel a graph to empty" in {
+    // a binary tree has no 2-core: leaves peel level by level
+    val tree = (1L until 31L).map(i => ((i - 1) / 2, i))
+    bruteCore(tree, 2) shouldBe Map.empty
+    noHang(runCore(tree, 2)) shouldBe Map.empty
   }
 
   private val HitsScale = 1000000000L

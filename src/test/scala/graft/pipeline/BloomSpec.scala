@@ -52,46 +52,6 @@ class BloomSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     df.where(Bloom.mightContain(bits, col("h"))).count() shouldBe 1L
   }
 
-  behavior of "Bloom.mix64 JVM/Column parity"
-
-  it should "compute identical mixed values in both forms" in {
-    import s.implicits._
-    val rnd = new Random(11L)
-    // raw ids, NOT hashes: small sequential + random longs (incl. negatives)
-    val ids = (0L until 500L) ++ Array.fill(500)(rnd.nextLong())
-    val got = ids.toDF("d").select(Bloom.mix64(col("d"))).as[Long].collect()
-    got.toSeq shouldBe ids.map(Bloom.mix64)
-  }
-
-  it should "never false-negative when keys are mixed raw ids" in {
-    import s.implicits._
-    val ids = (0L until 4000L).toArray // worst case: dense sequential ids
-    val bits = Bloom.build(ids.map(Bloom.mix64))
-    val missed = ids.toSeq.toDF("d")
-      .where(!Bloom.mightContain(bits, Bloom.mix64(col("d"))))
-      .count()
-    missed shouldBe 0L
-  }
-
-  behavior of "Dedup.minHashNearDups with the candidate Bloom prefilter"
-
-  it should "equal the unfiltered exact verify pair-for-pair" in {
-    import s.implicits._
-    val rnd = new Random(12L)
-    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
-    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    val base = (0L until 60L).map(i => (i, text(20)))
-    // plant near-dups: copies with one token appended
-    val dups = (0L until 12L).map(i => (100L + i, base(i.toInt)._2 + " eta"))
-    val docs = (base ++ dups).toDF("doc_id", "text")
-    val got = Dedup.minHashNearDups(docs, n = 3, theta = 0.5)
-      .orderBy("i", "j").collect()
-    // ground truth: the full (unbanded, unfiltered) exact jaccard join
-    val want = Dedup.jaccardPairs(docs, n = 3, theta = 0.5)
-      .orderBy("i", "j").collect()
-    got shouldBe want
-  }
-
   behavior of "TextOps.decontaminateBloom"
 
   it should "equal the exact decontaminate operator row-for-row" in {

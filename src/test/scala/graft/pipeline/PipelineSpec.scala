@@ -92,6 +92,38 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     forAll(lsh.toSeq) { p => p._2 should not be 3L }
   }
 
+  it should "equal the exact jaccardPairs pair-for-pair" in {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(12L)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = (0L until 60L).map(i => (i, text(20)))
+    // plant near-dups: copies with one token appended
+    val dups = (0L until 12L).map(i => (100L + i, base(i.toInt)._2 + " eta"))
+    val d = (base ++ dups).toDF("doc_id", "text")
+    val got = Dedup.minHashNearDups(d, n = 3, theta = 0.5)
+      .orderBy("i", "j").collect()
+    // ground truth: the full (unbanded) exact jaccard join
+    val want = Dedup.jaccardPairs(d, n = 3, theta = 0.5)
+      .orderBy("i", "j").collect()
+    got shouldBe want
+  }
+
+  it should "give IntegerType doc ids the same pairs as LongType" in {
+    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")
+    val unrelated = (100 to 140).map(i => s"w$i").mkString(" ")
+    val d = docs((1L, base), (2L, nearDup), (3L, unrelated), (4L, base))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.minHashNearDups(df, 3, 0.7)
+        .select(col("i").cast("long"), col("j").cast("long"), col("jaccard"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val asLong = pairs(d)
+    asLong should not be empty
+    pairs(d.withColumn("doc_id", col("doc_id").cast("int"))) shouldBe asLong
+  }
+
   "Dedup.minHashIncremental" should "equal the full-corpus pair set restricted to cross pairs" in {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")
@@ -284,6 +316,22 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     clusters(2L) shouldBe 1L
     clusters(4L) shouldBe 1L
     clusters(3L) shouldBe 3L // unrelated doc stays its own singleton
+  }
+
+  it should "keep every node a singleton when there are no pairs" in {
+    val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val nodes = Seq(3L, 1L, 2L).toDF("doc_id")
+    val noPairs = s.emptyDataset[(Long, Long)].toDF("i", "j")
+    // the round's changed-label count is observed, not queried: an empty
+    // working set must still report 0 and end the loop
+    val got = Await.result(Future(
+      Dedup.duplicateClusters(nodes, noPairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)(ExecutionContext.global),
+      2.minutes)
+    got shouldBe Map(1L -> 1L, 2L -> 2L, 3L -> 3L)
   }
 
   "Dedup.simHash near-dups" should "equal the all-pairs Hamming filter" in {
