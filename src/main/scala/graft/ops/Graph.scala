@@ -3,7 +3,8 @@ package graft.ops
 import scala.collection.mutable
 
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-graph scoring — the crawl-curation signal family: PageRank-style
@@ -23,13 +24,17 @@ import org.apache.spark.sql.functions._
   * distribution; documented, deterministic, and identical in the DuckDB
   * oracle's unrolled spelling).
   *
-  * Scale shape per PageRank/PPR iteration: a narrow join of the rank RDD
-  * with the co-partitioned, checkpointed adjacency (|V| rows, out-neighbour
-  * arrays), and ONE shuffle — a map-side-combined `reduceByKey` of long
-  * contributions on dst that also carries the dangling mass. No job per
-  * iteration: one job builds the adjacency and counts |V|, the caller's
-  * action runs every superstep. No cross product, no window, no driver
-  * data path. Alternatives measured and rejected are in LEDGER.md.
+  * Scale shape: PageRank/PPR, k-core and the duplicate-cluster components
+  * run as co-partitioned RDD supersteps. The adjacency (|V| rows,
+  * neighbour arrays) is built once, hash-partitioned and checkpointed; a
+  * superstep is a narrow position-by-position join of the node state with
+  * it and ONE map-side-combined `reduceByKey` of messages (the label loop
+  * adds two shuffles for path halving). PageRank/PPR submit no job per
+  * iteration (the dangling mass rides the same shuffle); the peel and
+  * label loops submit one job per round, whose count both materializes the
+  * round's checkpoint and tests convergence. No cross product, no
+  * window, no driver data path. Alternatives measured and rejected are in
+  * LEDGER.md.
   */
 object Graph {
 
@@ -113,8 +118,7 @@ object Graph {
     val spark = edges.sparkSession
     val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
     val everyNode = seeds.isEmpty
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .na.drop().rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val e = longPairs(edges.select("src", "dst"))
     val seedIds = seeds.fold(spark.sparkContext.emptyRDD[(Long, Unit)])(
       _.select(col("node").cast("long")).na.drop().rdd.map(r => (r.getLong(0), ())))
     val adj = e.cogroup(e.map { case (_, d) => (d, ()) }, seedIds, part)
@@ -163,6 +167,30 @@ object Graph {
       if (it % checkpointEvery == 0 && it < iters) ranks.localCheckpoint()
     }
     spark.createDataFrame(ranks).toDF("node", "rank")
+  }
+
+  /** The first two columns of `df` as long pairs, rows with a null dropped. */
+  private def longPairs(df: DataFrame): RDD[(Long, Long)] =
+    df.select(df.columns.take(2).toSeq.map(c => col(c).cast("long")): _*)
+      .na.drop().rdd.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** The undirected simple adjacency `node → distinct neighbours` of
+    * `edges` (self-loops dropped, parallel and reversed edges collapsed),
+    * partitioned by `part` and `localCheckpoint`ed; the caller's first job
+    * materializes it. With a `domain`, only its ids are keys, though their
+    * neighbour arrays may still name ids outside it. */
+  private def undirectedAdjacency(edges: RDD[(Long, Long)],
+                                  domain: Option[RDD[Long]],
+                                  part: Partitioner): RDD[(Long, Array[Long])] = {
+    val restricted = domain.isDefined
+    val arcs = edges.flatMap { case (a, b) =>
+      if (a == b) Iterator.empty else Iterator((a, b), (b, a)) }
+    val keys = domain.fold(edges.sparkContext.emptyRDD[(Long, Unit)])(
+      _.map(v => (v, ())))
+    arcs.cogroup(keys, part)
+      .filter { case (_, (ns, in)) => ns.nonEmpty && (!restricted || in.nonEmpty) }
+      .mapValues { case (ns, _) => ns.toArray.distinct }
+      .localCheckpoint()
   }
 
   /** Exact per-node triangle counts on an undirected graph — the local
@@ -274,67 +302,123 @@ object Graph {
     * touching a thousand degree-1 leaves has huge degree and an empty
     * 2-core): dense duplicate families, link farms, and genuinely
     * interlinked communities survive; stars and tendrils peel away. Emits
-    * `(node, deg)` for core members, `deg` = degree WITHIN the core.
+    * `(node, deg)` for core members, `deg` = degree WITHIN the core and
+    * `node` in the edge table's id type; an edge with a null endpoint is
+    * ignored.
     *
     * Exact and deterministic: peeling is confluent (the k-core is unique
     * regardless of removal order), every round is integer counting — no
     * float anywhere — so the result is partition- and engine-invariant.
     *
-    * Scale shape per round: one explode + map-side-combinable count
-    * (shuffle ∝ E), two left-semi joins of the edge table against the
-    * survivor set (hash joins on the endpoint; the survivor side is |V|
-    * rows and usually broadcasts). Rounds = cascade depth, NOT diameter —
-    * real graphs peel in a handful of rounds; lineage is cut per round
-    * like the CC loop, two jobs per round (survivors, peeled edges — the
-    * convergence count rides the second), and non-convergence within
+    * Scale shape: the state is each node's live degree (−1 once dead). Per
+    * round every node below k dies and sends one loss to each neighbour
+    * (ONE `reduceByKey`, shuffle ∝ the peeled edges), then a narrow apply
+    * and a `localCheckpoint` whose job also counts the nodes the NEXT
+    * round peels: one job per round, and a zero count is the fixpoint.
+    * Rounds = cascade depth, NOT diameter; a cascade deeper than
     * `maxRounds` fails loudly rather than returning a half-peeled set. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var (e, nEdges) = checkpointObserving(edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct(), count(lit(1)))
+    val spark = edges.sparkSession
+    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val idType = edges.select(least(col("src"), col("dst"))).schema.head.dataType
+    val adj = undirectedAdjacency(longPairs(edges.select("src", "dst")), None, part)
+    val peels = (d: Int) => d >= 0 && d < k
+    var deg = adj.mapValues(_.length).localCheckpoint()
+    var dying = deg.filter(v => peels(v._2)).count()
     var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      // materialize the survivor set once per round: it feeds BOTH
-      // semi-joins, and lazily the explode+agg subtree would execute
-      // twice (the u- and v-aliased broadcast subtrees differ textually,
-      // so ReuseExchange cannot dedup them). |V|-bounded rows. Measured
-      // 12.1 → 8.9 s at sf1eq (4M-edge co-occurrence graph), ~2.0 vs
-      // 2.4 s control-corrected at sf0.1.
-      val keep = deg.where(col("deg") >= k).select("node").localCheckpoint()
-      val (next, m) = checkpointObserving(e
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")), count(lit(1)))
-      // peeling only removes edges, so an unchanged count IS the fixpoint
-      if (m == nEdges) converged = true
-      else { e = next; nEdges = m; rounds += 1 }
-      if (nEdges == 0L) converged = true // empty core: nothing left to peel
+    while (dying > 0) {
+      if (rounds == maxRounds)
+        throw new IllegalStateException(
+          s"kCore(k=$k) did not reach the fixpoint in $maxRounds rounds " +
+            "(pathologically deep cascade) — raise maxRounds")
+      val lost = adj.zipPartitions(deg) { (as, ds) =>
+        as.zip(ds).flatMap { case ((_, ns), (_, d)) =>
+          if (peels(d)) ns.iterator.map(n => (n, 1)) else Iterator.empty }
+      }.reduceByKey(part, _ + _)
+      val next = deg.zipPartitions(lost) { (ds, ls) =>
+        val m = mutable.LongMap.from(ls)
+        ds.map { case (v, d) => (v, if (d < k) -1 else d - m.getOrElse(v, 0)) }
+      }.localCheckpoint()
+      dying = next.filter(v => peels(v._2)).count()
+      deg.unpersist()
+      deg = next
+      rounds += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not reach the fixpoint in $maxRounds rounds " +
-          "(pathologically deep cascade) — raise maxRounds")
-    e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .where(col("deg") >= k)
+    adj.unpersist()
+    spark.createDataFrame(deg.filter(_._2 >= k).mapValues(_.toLong))
+      .toDF("node", "deg").select(col("node").cast(idType), col("deg"))
   }
 
-  /** `localCheckpoint`s `df` and returns it with the value of the
-    * aggregate `metric` over its rows, observed by the materializing job
-    * instead of read by a second one — the convergence probe of the
-    * checkpointed loops here and in [[graft.pipeline.Dedup]]. */
-  private[graft] def checkpointObserving(df: DataFrame,
-                                         metric: Column): (DataFrame, Long) = {
-    val obs = Observation()
-    val cp = df.observe(obs, metric.as("m")).localCheckpoint()
-    (cp, obs.get("m").asInstanceOf[Long])
+  /** The connected-components kernel of
+    * [[graft.pipeline.Dedup.duplicateClusters]], which states the contract.
+    * The state is each connected node's label and whether it changed last
+    * round (only a changed label is sent). Per round: ONE `reduceByKey` of
+    * neighbour minima, a narrow apply, from the third round
+    * [[halvePaths]], then a `localCheckpoint` whose job counts the changed
+    * labels. Ids without an edge skip the rounds and are unioned back. */
+  private[graft] def components(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
+    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val id = nodes.schema.head
+    val ids = nodes.select(col(id.name).cast("long")).na.drop().rdd.map(_.getLong(0))
+    val adj = undirectedAdjacency(longPairs(edges), Some(ids), part)
+    var labels = adj.mapPartitions(_.map { case (v, _) => (v, (v, true)) },
+      preservesPartitioning = true)
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0 && rounds < 50) {
+      val nbrMin = adj.zipPartitions(labels) { (as, ls) =>
+        as.zip(ls).flatMap { case ((_, ns), (_, (l, fresh))) =>
+          if (fresh) ns.iterator.map(n => (n, l)) else Iterator.empty }
+      }.reduceByKey(part, math.min(_, _))
+      val prop = labels.zipPartitions(nbrMin, preservesPartitioning = true) { (ls, ms) =>
+        val m = mutable.LongMap.from(ms)
+        ls.map { case (v, (l, _)) => val b = math.min(l, m.getOrElse(v, l)); (v, (b, b < l)) }
+      }
+      // plain propagation settles the shallow stars of real near-dup
+      // graphs in two rounds; halving from the third keeps a deep chain
+      // at O(log D) rounds
+      val next = (if (rounds < 2) prop else halvePaths(prop, part)).localCheckpoint()
+      changed = next.filter(_._2._2).count()
+      labels.unpersist()
+      labels = next
+      rounds += 1
+    }
+    adj.unpersist()
+    // convergence is a CORRECTNESS property, not best-effort: exiting on
+    // the round cap with changes still flowing would silently return split
+    // components for any duplicate chain of diameter > cap
+    require(changed == 0,
+      s"duplicateClusters did not converge after $rounds rounds " +
+        "(a duplicate chain longer than the round cap exists); " +
+        "raise the cap or pre-collapse exact duplicates first")
+    val singletons = ids.map(v => (v, ())).subtractByKey(labels, part)
+      .map { case (v, _) => (v, v) }
+    spark.createDataFrame(labels.mapValues(_._1).union(singletons))
+      .toDF("id", "cluster")
+      .select(col("id").cast(id.dataType), col("cluster").cast(id.dataType))
+  }
+
+  /** One path-halving step, `l(v) ← min(l(v), l(l(v)))`: every label is
+    * a node of the same state, so each node asks its label's owner (two
+    * shuffles, there and back) and a chain's depth halves. */
+  private def halvePaths(labels: RDD[(Long, (Long, Boolean))],
+                         part: Partitioner): RDD[(Long, (Long, Boolean))] = {
+    val asks = labels.flatMap { case (v, (l, _)) =>
+      if (l == v) Iterator.empty else Iterator((l, v)) }.partitionBy(part)
+    val answers = labels.zipPartitions(asks) { (ls, qs) =>
+      val own = mutable.LongMap.from(ls.map { case (v, (l, _)) => (v, l) })
+      qs.map { case (t, v) => (v, own(t)) }
+    }.partitionBy(part)
+    labels.zipPartitions(answers, preservesPartitioning = true) { (ls, as) =>
+      val m = mutable.LongMap.from(as)
+      ls.map { case (v, (l, fresh)) =>
+        val j = m.getOrElse(v, l)
+        if (j < l) (v, (j, true)) else (v, (l, fresh))
+      }
+    }
   }
 
   /** HITS hubs & authorities (Kleinberg's mutual recursion) — the

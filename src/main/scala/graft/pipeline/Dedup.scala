@@ -227,22 +227,18 @@ object Dedup {
     * missing a pair at s=0.7 is (1−0.49)⁶⁴ ≈ 1e−19 — the output is the
     * exact ≥θ pair set with overwhelming probability, which is what the
     * DuckDB oracle checks. Shuffles: shingles (N·s rows), signatures
-    * (N·bands rows), candidate verify (candidates only). No all-pairs. */
+    * (N·bands rows), candidate verify (candidates only). No all-pairs.
+    * The call is eager: it returns the verified `(i, j, jaccard)` pairs
+    * `localCheckpoint`ed, so every consumer reads them as a leaf. */
   def minHashNearDups(docs: DataFrame, n: Int = 3, theta: Double = 0.7,
                       bands: Int = 64, rowsPerBand: Int = 2,
                       seed: Long = 42L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val fam = MinHashFamily(seed, bands * rowsPerBand)
-    // localCheckpoint, not persist: the shingle table is referenced FOUR
-    // times downstream (signatures, sizes, both verify sides), and with a
-    // lazy lineage each referencing action re-plans the shingle expression
-    // tree — measured ~3 s of pure driver planning per action on this
-    // pipeline's plans. The checkpoint evaluates the narrow map once and
-    // every consumer plans against a 2-column leaf; blocks are freed by
-    // the ContextCleaner when the returned frame is dropped, so nothing
-    // leaks per call. (Cost: the call is now eager — the right trade for
-    // a table consumed 4x by construction.)
+    // the shingle table is read four times (signatures, sizes, both verify
+    // sides): checkpointed, the tokenize+hash map runs once and every read
+    // plans against a 2-column leaf
     val sh = shingles(docs, n).localCheckpoint()
     val banded = bandKeysOf(sh, fam, bands, rowsPerBand)
 
@@ -253,8 +249,11 @@ object Dedup {
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
       .distinct()
 
-    // exact verify on candidates only — same formula as the full join
-    jaccardOfShingles(sh, theta, candidates = Some(cands))
+    // exact verify on candidates only — same formula as the full join;
+    // checkpointed because its consumers (a collect, clusters, keep-best,
+    // backfill, source overlap) would each re-run the band join and the
+    // verify, and the verified pairs are far smaller than the corpus
+    jaccardOfShingles(sh, theta, candidates = Some(cands)).localCheckpoint()
   }
 
   /** Banded signature table `(doc_id, band, bkey)` of a shingle table:
@@ -368,109 +367,23 @@ object Dedup {
   /** Duplicate-cluster assignment — the step a real dedup pipeline runs
     * AFTER any pair generator here (near-dup pairs are edges; keeping one
     * canonical doc per transitive group needs the connected component):
-    * min-label propagation accelerated by pointer jumping — the relational
-    * form of GraphX's Pregel connectedComponents plus the path-halving
-    * step of classic PRAM CC (the same O(log D) trick as
-    * large-star/small-star, Kiveris et al. 2014). Each round every node
-    * takes the minimum label among itself and its neighbors, then chases
-    * one hop of the label graph (l(v) <- min(l(v), l(l(v)))), so chain
-    * depth halves per round; converged when no label changes, after
-    * O(log diameter) rounds (a 50-round cap therefore guards only
-    * adversarial inputs beyond ~2^50 deep). Per round: one edges ⋈ labels
-    * join (the symmetric edge table is hash-partitioned once and reused
-    * from cache), one min-aggregate, one left join back, one labels
-    * self-join — all hash-shuffles on the id key, no driver state;
-    * lineage is cut per round with `localCheckpoint` exactly like the
-    * optimizer superstep loop, so plans stay O(1) across rounds, and the
-    * changed-label count is observed by that checkpoint's job. Fully
+    * min-label propagation with the path-halving step of classic PRAM CC
+    * (the O(log D) trick of large-star/small-star, Kiveris et al. 2014).
+    * Each round every node takes the minimum label among itself and its
+    * neighbors; from the third round it also chases one hop of the label
+    * graph (l(v) <- min(l(v), l(l(v)))), so chain depth halves per round.
+    * Converged when no label changes, after O(log diameter) rounds; the
+    * 50-round cap guards only adversarial inputs, and hitting it fails.
+    * One Spark job per round ([[graft.ops.Graph.components]]). Fully
     * deterministic (min is order-independent).
     *
-    * `nodes`: one id column (every doc — singletons cluster to
-    * themselves). `pairs`: two id columns. Returns `(id, cluster)` with
-    * cluster = min doc id of the component.
+    * `nodes`: one integral id column (every doc — singletons cluster to
+    * themselves). `pairs`: two id columns; a pair with a null id is
+    * ignored, and only ids in `nodes` hold or relay a label. Returns
+    * `(id, cluster)` in `nodes`' id type, cluster = the component's min id.
     */
-  def duplicateClusters(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val idCol = nodes.columns.head
-    val (pi, pj) = (pairs.columns(0), pairs.columns(1))
-    // the pair generator may be a whole pipeline (MinHash LSH + exact
-    // verify) whose LOGICAL PLAN alone is expensive: with a persist, every
-    // downstream action still re-analyzes/canonicalizes the giant
-    // expression tree for the cache lookup (measured ~3 s of driver time
-    // per action at bands=64). localCheckpoint cuts the lineage to a
-    // LogicalRDD, so the pipeline is evaluated once and every round plans
-    // against a 2-column leaf.
-    val p0 = pairs.select(col(pi).as("src"), col(pj).as("dst")).localCheckpoint()
-    val sym = p0
-      .union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val allNodes = nodes.select(col(idCol).as("id"))
-    // a node with no edges can never change its label — keep the rounds'
-    // working set to the nodes that actually appear in the pair graph
-    // (near-dup corpora: a small fraction), and union the singletons back
-    // unchanged at the end. One semi/anti join pair once, instead of
-    // dragging every corpus row through every round's join + checkpoint.
-    val connected = allNodes.join(sym.select(col("src").as("id")).distinct(),
-      Seq("id"), "left_semi")
-    var labels = connected.select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val msgs = sym.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min("cluster").as("nbr_min"))
-      val prop0 = labels.join(msgs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
-            .as("cluster"),
-          col("cluster").as("old"))
-      // pointer jumping (path halving): l(v) <- min(l(v), l(l(v))). Every
-      // label is itself a node id in the same component, so chasing one hop
-      // of the label graph halves chain depth each round — min-label
-      // propagation alone needs diameter rounds (a 1000-deep near-dup
-      // chain = 1000 shuffles), with the jump it converges in O(log D).
-      // ADAPTIVE: real near-dup graphs are shallow stars that converge in
-      // ≤2 propagation rounds, where the jump's extra self-join +
-      // materialization is pure overhead (measured ~2× query cost at
-      // sf0.1) — so the first two rounds run plain propagation and the
-      // jump arms from round 3, preserving O(log D) for deep chains.
-      // A left join: the labelled node is in the working set by
-      // construction, but it may still carry a stale label this round.
-      val stepBase =
-        if (rounds < 2) prop0
-        else {
-          // materialized before the self-join: BOTH branches read it, and
-          // an unmaterialized plan would run the propagation join+agg twice
-          val prop = prop0.localCheckpoint()
-          prop.as("a")
-            .join(prop.select(col("id").as("lid"), col("cluster").as("lc"))
-              .as("b"),
-              col("a.cluster") === col("b.lid"), "left")
-            .select(col("a.id").as("id"),
-              least(col("a.cluster"), coalesce(col("b.lc"), col("a.cluster")))
-                .as("cluster"),
-              col("a.old").as("old"))
-        }
-      val (step, chg) = graft.ops.Graph.checkpointObserving(stepBase,
-        count(when(col("cluster") < col("old"), lit(1))))
-      changed = chg
-      labels = step.select("id", "cluster")
-      rounds += 1
-    }
-    sym.unpersist()
-    // convergence is a CORRECTNESS property, not best-effort: exiting on
-    // the round cap with changes still flowing would silently return split
-    // components for any duplicate chain of diameter > cap
-    require(changed == 0,
-      s"duplicateClusters did not converge after $rounds rounds " +
-        "(a duplicate chain longer than the round cap exists); " +
-        "raise the cap or pre-collapse exact duplicates first")
-    val singletons = allNodes.join(labels.select("id"), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster"))
-    labels.unionByName(singletons)
-  }
+  def duplicateClusters(nodes: DataFrame, pairs: DataFrame): DataFrame =
+    graft.ops.Graph.components(nodes, pairs)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) over an embedding
     * corpus: k-means-cell candidate generation with exact cosine

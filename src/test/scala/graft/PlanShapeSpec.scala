@@ -540,16 +540,41 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     jobs(10) shouldBe two
   }
 
-  "Graph.kCore" should "run two executions per peel round" in {
+  "Graph.kCore" should "submit one job per peel round" in {
     import spark.implicits._
-    // a path of n nodes peels its two end edges per round at k = 2: 4
-    // rounds for 9 nodes, 8 for 17. Per round one execution materializes
-    // the survivors and one the peeled edges, whose row count rides along
-    def executions(nodes: Long) = {
+    // at k = 2 a path of n nodes loses its two end nodes per round, the
+    // middle one last: 5 rounds for 9 nodes, 9 for 17. A round is one
+    // job: its checkpoint's count is also the convergence test
+    def jobs(nodes: Long) = {
       val path = (0L until nodes - 1).map(i => (i, i + 1)).toDF("src", "dst")
-      SubmittedWork.of(spark)(ops.Graph.kCore(path, 2).collect()).executions
+      SubmittedWork.of(spark)(ops.Graph.kCore(path, 2).collect()).jobs
     }
-    executions(17) - executions(9) shouldBe 2 * 4
+    jobs(17) - jobs(9) shouldBe 4
+  }
+
+  /** Two disjoint stars — one centred on its min id, one not — plus
+    * singletons: the components converge in 2 and 3 rounds. */
+  private def twoStars = {
+    import spark.implicits._
+    ((1L to 12L).toDF("doc_id"),
+      ((2L to 5L).map(l => (1L, l)) ++ (6L to 8L).map(l => (9L, l)))
+        .toDF("i", "j"))
+  }
+
+  "Dedup.duplicateClusters" should "submit at most six jobs for two disjoint stars" in {
+    val (nodes, pairs) = twoStars
+    SubmittedWork.of(spark)(
+      pipeline.Dedup.duplicateClusters(nodes, pairs).collect()).jobs should be <= 6
+  }
+
+  "Graph.kCore and Dedup.duplicateClusters" should "leave at most one RDD persistent" in {
+    import spark.implicits._
+    val path = (0L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
+    SubmittedWork.persistedBy(spark)(
+      ops.Graph.kCore(path, 2).collect()) should be <= 1
+    val (nodes, pairs) = twoStars
+    SubmittedWork.persistedBy(spark)(
+      pipeline.Dedup.duplicateClusters(nodes, pairs).collect()) should be <= 1
   }
 
   "q_substring_remove" should "never plan a cartesian product and prune the scan" in {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Counts what a block submits to Spark: jobs (AQE query stages included)
-  * and root SQL executions (one per action, `localCheckpoint` included). */
+  * and root SQL executions (one per action, `localCheckpoint` included),
+  * and the RDDs it leaves persistent. */
 object SubmittedWork {
 
   final case class Counts(jobs: Int, executions: Int)
@@ -36,5 +37,13 @@ object SubmittedWork {
       sc.removeSparkListener(listener)
     }
     Counts(jobs.get, executions.get)
+  }
+
+  /** How many RDDs `body` leaves persistent that were not before it. */
+  def persistedBy(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    (sc.getPersistentRDDs.keySet -- before).size
   }
 }

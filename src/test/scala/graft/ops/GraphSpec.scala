@@ -3,6 +3,8 @@ package graft.ops
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
+import org.apache.spark.sql.types.{IntegerType, LongType}
+
 import graft.tsne.SparkTestBase
 
 /** [[Graph.pageRank]] — fixed-point integer PageRank. Checked against a
@@ -39,15 +41,6 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     val df = edges.toDF("src", "dst").repartition(parts)
     Graph.pageRank(df, iters, checkpointEvery = checkpointEvery)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` — the
-    * superstep kernel's partition count, which the dangling-mass sentinel
-    * keys are routed by. */
-  private def withShufflePartitions[T](n: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** A sparse random graph: many dangling nodes, several components. */
@@ -360,6 +353,30 @@ class GraphSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     val tree = (1L until 31L).map(i => ((i - 1) / 2, i))
     bruteCore(tree, 2) shouldBe Map.empty
     noHang(runCore(tree, 2)) shouldBe Map.empty
+  }
+
+  it should "match brute force at 1 and 7 shuffle partitions" in {
+    val rnd = new scala.util.Random(17)
+    val edges = Seq.fill(300)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+    val expect = bruteCore(edges, 5)
+    expect should not be Map.empty // fixture sanity: non-trivial core
+    withShufflePartitions(1)(runCore(edges, 5)) shouldBe expect
+    withShufflePartitions(7)(runCore(edges, 5, parts = 3)) shouldBe expect
+  }
+
+  it should "keep IntegerType ids and ignore edges with a null endpoint" in {
+    val s = spark
+    import s.implicits._
+    // K4 {1,2,3,4} with a pendant 4-5: the 3-core is the K4
+    val edges = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5))
+    val withNulls = edges.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(5), None), (None, Some(5)), (None, Some(1)), (None, None))
+    val core = Graph.kCore(withNulls.toDF("src", "dst"), 3)
+    core.schema.map(_.dataType) shouldBe Seq(IntegerType, LongType)
+    val asLong = edges.map { case (a, b) => (a.toLong, b.toLong) }
+    core.collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap shouldBe
+      runCore(asLong, 3)
+    runCore(asLong, 3) shouldBe bruteCore(asLong, 3)
   }
 
   private val HitsScale = 1000000000L

@@ -276,28 +276,78 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
       val nodeIds = (0 until n).map(_.toLong)
       val edges = Seq.fill(m)((rng.nextLong(n), rng.nextLong(n)))
         .filter { case (a, b) => a != b }
-      // reference: plain BFS on the driver
-      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-      val expected = scala.collection.mutable.Map.empty[Long, Long]
-      for (start <- nodeIds if !expected.contains(start)) {
-        val comp = scala.collection.mutable.Set(start)
-        val queue = scala.collection.mutable.Queue(start)
-        while (queue.nonEmpty) {
-          for (nb <- adj.getOrElse(queue.dequeue(), Set.empty) if !comp(nb)) {
-            comp += nb; queue += nb
-          }
-        }
-        val lbl = comp.min
-        comp.foreach(c => expected(c) = lbl)
-      }
-      val got = Dedup.duplicateClusters(
-        nodeIds.toDF("doc_id"), edges.toDF("i", "j"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = clusterMap(nodeIds.toDF("doc_id"), edges.toDF("i", "j"))
       withClue(s"seed=$seed edges=${edges.size}: ") {
-        got shouldBe expected.toMap
+        got shouldBe bfsClusters(nodeIds, edges)
       }
     }
+  }
+
+  /** Reference components: plain BFS on the driver, labelled by min id. */
+  private def bfsClusters(nodeIds: Seq[Long],
+                          edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    val expected = scala.collection.mutable.Map.empty[Long, Long]
+    for (start <- nodeIds if !expected.contains(start)) {
+      val comp = scala.collection.mutable.Set(start)
+      val queue = scala.collection.mutable.Queue(start)
+      while (queue.nonEmpty) {
+        for (nb <- adj.getOrElse(queue.dequeue(), Set.empty) if !comp(nb)) {
+          comp += nb; queue += nb
+        }
+      }
+      val lbl = comp.min
+      comp.foreach(c => expected(c) = lbl)
+    }
+    expected.toMap
+  }
+
+  private def clusterMap(nodes: org.apache.spark.sql.DataFrame,
+                         pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Dedup.duplicateClusters(nodes, pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  it should "match the BFS reference at 1 and 7 shuffle partitions" in {
+    val s = spark
+    import s.implicits._
+    // random components plus a 40-deep chain, so path halving runs
+    val rng = new scala.util.Random(41)
+    val nodeIds = (0L until 120L)
+    val edges = Seq.fill(60)((rng.nextLong(80), rng.nextLong(80))) ++
+      (80L until 119L).map(i => (i + 1, i))
+    val expected = bfsClusters(nodeIds, edges)
+    withShufflePartitions(1)(
+      clusterMap(nodeIds.toDF("doc_id"), edges.toDF("i", "j"))) shouldBe expected
+    withShufflePartitions(7)(clusterMap(nodeIds.toDF("doc_id").repartition(3),
+      edges.toDF("i", "j").repartition(2))) shouldBe expected
+  }
+
+  it should "keep IntegerType ids and ignore pairs with a null id" in {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types.IntegerType
+    val pairs = Seq((1, 2), (2, 3), (5, 6))
+    val withNulls = pairs.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(3), None), (None, Some(7)), (None, None))
+    val got = Dedup.duplicateClusters((1 to 8).toDF("doc_id"),
+      withNulls.toDF("i", "j"))
+    got.schema.map(_.dataType) shouldBe Seq(IntegerType, IntegerType)
+    val longRun = clusterMap((1L to 8L).toDF("doc_id"),
+      pairs.map { case (a, b) => (a.toLong, b.toLong) }.toDF("i", "j"))
+    got.collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong)
+      .toMap shouldBe longRun
+    longRun shouldBe bfsClusters(1L to 8L,
+      pairs.map { case (a, b) => (a.toLong, b.toLong) })
+  }
+
+  it should "not join two nodes through a pair endpoint outside the node set" in {
+    val s = spark
+    import s.implicits._
+    // 9 is not a node: (1, 9), (9, 2) connect nothing; 2 ~ 3 still does
+    clusterMap(Seq(1L, 2L, 3L).toDF("doc_id"),
+      Seq((1L, 9L), (9L, 2L), (3L, 2L)).toDF("i", "j")) shouldBe
+      Map(1L -> 1L, 2L -> 2L, 3L -> 2L)
   }
 
   it should "compose with minHashNearDups into canonical groups" in {
@@ -325,8 +375,8 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     import scala.concurrent.duration._
     val nodes = Seq(3L, 1L, 2L).toDF("doc_id")
     val noPairs = s.emptyDataset[(Long, Long)].toDF("i", "j")
-    // the round's changed-label count is observed, not queried: an empty
-    // working set must still report 0 and end the loop
+    // an empty working set must still count 0 changed labels and end
+    // the loop
     val got = Await.result(Future(
       Dedup.duplicateClusters(nodes, noPairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap)(ExecutionContext.global),

@@ -12,6 +12,14 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 
   def fixturePath(name: String): String =
     getClass.getResource(s"/$name").getPath
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` — the
+    * partition count of the graph superstep kernels. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }
 
 object SparkTestBase {
