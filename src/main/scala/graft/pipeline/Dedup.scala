@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -30,19 +31,27 @@ object Dedup {
     * (nothing to compare). Pure array expressions — one narrow projection. */
   def shingles(docs: DataFrame, n: Int = 3, keepPos: Boolean = false,
                carry: Seq[String] = Nil): DataFrame = {
-    // materialize the token array into its own projection first: a lambda
-    // that references the raw split(...) expression re-evaluates the regex
-    // split on every element_at inside the transform (3n× per shingle) —
-    // an attribute reference reads the array once.
-    // repartition first: the tokenize+hash explode is the CPU hot spot of
+    val exploded = gramHashes(docs, n, "doc_id" +: carry, Nil).select(
+      col("doc_id") +: posexplode(col("g")).as(Seq("pos", "sh_hash")) +: carry.map(col): _*)
+    if (keepPos) exploded
+    else exploded.select("doc_id", "sh_hash").distinct()
+  }
+
+  /** `docs`' `keep` columns plus `g`: the hashes of the token `n`-grams of
+    * its `text`, in order — empty under `n` tokens and for null text. The
+    * one definition of a shingle. Repartitioned on `by` (round-robin when
+    * empty) before the tokenize map. */
+  private def gramHashes(docs: DataFrame, n: Int, keep: Seq[String],
+                         by: Seq[Column]): DataFrame = {
+    // repartition first: the tokenize+hash map is the CPU hot spot of
     // every shingle consumer, and a small-file scan would run it all on
-    // one core; shuffling the slim 1× doc projection is strictly cheaper
-    // than the ~tokens× wider exchanges downstream aggregations do anyway
+    // one core. The token array gets its own projection: a lambda that
+    // references the raw split(...) expression re-evaluates the regex
+    // split on every element_at inside the transform (3n× per shingle)
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val carryCols = carry.map(col)
-    val tokenized = docs.select(col("doc_id") +: col("text") +: carryCols: _*)
-      .repartition(parallelism)
-      .select(col("doc_id") +: TextOps.tokens(col("text")).as("t") +: carryCols: _*)
+    val tokenized = docs.select(("text" +: keep).map(col): _*)
+      .repartition(parallelism, by: _*)
+      .select(keep.map(col) :+ TextOps.tokens(col("text")).as("t"): _*)
     val t = col("t")
     // guard: sequence(0, x) with x < 0 generates a *descending* sequence
     val idxs = when(size(t) >= n, sequence(lit(0), size(t) - n))
@@ -50,11 +59,19 @@ object Dedup {
     val grams = transform(idxs,
       i => Hashing.hash60(
         concat_ws(" ", (0 until n).map(o => element_at(t, i + o + 1)): _*)))
-    val exploded = tokenized
-      .select(col("doc_id") +: posexplode(grams).as(Seq("pos", "sh_hash")) +: carryCols: _*)
-    if (keepPos) exploded
-    else exploded.select("doc_id", "sh_hash").distinct()
+    tokenized.select(keep.map(col) :+ grams.as("g"): _*)
   }
+
+  /** One row per document, `(doc_id, sh)`: `sh` is the sorted, distinct
+    * `array<bigint>` of the shingle hashes [[shingles]] gives it. Rows
+    * sharing a `doc_id` give the union of their shingles; a document
+    * without shingles has no row. Hashed on `doc_id` before the tokenize
+    * map, so the merge needs no second exchange. */
+  private[pipeline] def shingleSets(docs: DataFrame, n: Int): DataFrame =
+    gramHashes(docs, n, Seq("doc_id"), Seq(col("doc_id")))
+      .groupBy("doc_id")
+      .agg(array_sort(array_distinct(flatten(collect_list("g")))).as("sh"))
+      .where(size(col("sh")) > 0)
 
   /** N-gram novelty of a candidate batch against a reference corpus: per
     * batch document, the fraction of its distinct shingles NOT present
@@ -82,10 +99,6 @@ object Dedup {
         round((col("n_sh") - coalesce(col("n_seen"), lit(0L))).cast("double")
           / col("n_sh"), 6).as("novelty_r"))
   }
-
-  /** Distinct-shingle count per doc (the |A| term of Jaccard). */
-  private def shingleSizes(sh: DataFrame): DataFrame =
-    sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
 
   // ---------------- exact dedup ----------------------------------------
 
@@ -133,28 +146,15 @@ object Dedup {
     jaccardOfShingles(sh, theta)
   }
 
-  /** Exact Jaccard from a shingle table — over all `i < j` pairs sharing a
-    * shingle, or restricted to a `(i, j)` candidate set when given (the
-    * MinHash verify path; one formula, one implementation). */
-  private[pipeline] def jaccardOfShingles(sh: DataFrame, theta: Double,
-                                          candidates: Option[DataFrame] = None): DataFrame = {
-    // candidate-side pre-filters of `sh` were measured and rejected
-    // (LEDGER.md, "Dedup.jaccardOfShingles")
-    val sizes = shingleSizes(sh)
-    val inter = candidates match {
-      case None =>
-        sh.as("a")
-          .join(sh.as("b"), col("a.sh_hash") === col("b.sh_hash") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-          .agg(count(lit(1)).as("c"))
-      case Some(cands) =>
-        cands
-          .join(sh.select(col("doc_id").as("i"), col("sh_hash")), "i")
-          .join(sh.select(col("doc_id").as("j"), col("sh_hash")), Seq("j", "sh_hash"))
-          .groupBy("i", "j").agg(count(lit(1)).as("c"))
-    }
-    inter
+  /** Exact Jaccard from a shingle table, over all `i < j` pairs sharing a
+    * shingle. */
+  private[pipeline] def jaccardOfShingles(sh: DataFrame, theta: Double): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")) // |A| per doc
+    sh.as("a")
+      .join(sh.as("b"), col("a.sh_hash") === col("b.sh_hash") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+      .agg(count(lit(1)).as("c"))
       .join(sizes.select(col("doc_id").as("i"), col("n_sh").as("ni")), "i")
       .join(sizes.select(col("doc_id").as("j"), col("n_sh").as("nj")), "j")
       .select(col("i"), col("j"),
@@ -176,7 +176,7 @@ object Dedup {
     * h_k(x) = (a_k·x + b_k) mod (2³¹−1). 31-bit domain keeps a_k·x inside
     * a signed 64-bit product. */
   final case class MinHashFamily(seed: Long, numHashes: Int) {
-    private val P = 2147483647L // 2^31 − 1
+    import MinHashFamily.{mix64, modP}
     val (as, bs) = {
       val rnd = new Random(seed)
       (Array.fill(numHashes)(1L + rnd.nextInt(Int.MaxValue - 1).toLong),
@@ -187,37 +187,41 @@ object Dedup {
       val x = h & 0x7FFFFFFFL
       var k = 0
       while (k < numHashes) {
-        val v = (as(k) * x + bs(k)) % P
+        val v = modP(as(k) * x + bs(k))
         if (v < s(k)) s(k) = v
         k += 1
       }
     }
-    def sig(shingleHashes: Iterator[Long]): Array[Long] = {
+    /** The LSH band keys of a shingle set, `numHashes / rowsPerBand` of
+      * them: key b is one 64-bit mix of (b, the band's minhashes), so two
+      * sets that agree on band b share key b. A mix collision can only add
+      * a candidate, which the exact verify then drops. */
+    def bandKeys(shingleHashes: Iterable[Long], rowsPerBand: Int): Array[Long] = {
       val s = Array.fill(numHashes)(Long.MaxValue)
       shingleHashes.foreach(update(s, _))
-      s
+      Array.tabulate(numHashes / rowsPerBand) { b =>
+        var h = mix64(b.toLong)
+        for (r <- 0 until rowsPerBand) h = mix64(h ^ s(b * rowsPerBand + r))
+        h
+      }
     }
   }
 
-  /** MinHash as a typed `Aggregator`: the signature is a semigroup under
-    * elementwise min, so Spark runs it with *partial aggregation* — each
-    * map task folds its local shingles into one 128-long buffer per doc
-    * and the shuffle carries signatures, not shingle rows. (The
-    * `groupByKey.mapGroups` formulation shuffles every shingle.) */
-  final class MinHashAggregator(fam: MinHashFamily)
-      extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.fill(fam.numHashes)(Long.MaxValue)
-    override def reduce(b: Array[Long], h: Long): Array[Long] = { fam.update(b, h); b }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var k = 0
-      while (k < a.length) { if (b(k) < a(k)) a(k) = b(k); k += 1 }
-      a
+  object MinHashFamily {
+    private[pipeline] final val P = 2147483647L // 2^31 − 1
+    /** `t mod P` for `t ≥ 0` without a division: 2³¹ ≡ 1 (mod P), so the
+      * high bits fold onto the low ones; two folds leave at most P + 3. */
+    private[pipeline] def modP(t: Long): Long = {
+      val y = (t & P) + (t >>> 31)
+      val z = (y & P) + (y >>> 31)
+      if (z >= P) z - P else z
     }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    /** The SplitMix64 finalizer, a bijection on 64 bits. */
+    private def mix64(v: Long): Long = {
+      val a = (v ^ (v >>> 30)) * 0xBF58476D1CE4E5B9L
+      val b = (a ^ (a >>> 27)) * 0x94D049BB133111EBL
+      b ^ (b >>> 31)
+    }
   }
 
   /** Near-duplicate pairs by MinHash + banded LSH, exact-verified:
@@ -226,103 +230,105 @@ object Dedup {
     * shingle Jaccard and filtered at θ. With r=2, b=64 the probability of
     * missing a pair at s=0.7 is (1−0.49)⁶⁴ ≈ 1e−19 — the output is the
     * exact ≥θ pair set with overwhelming probability, which is what the
-    * DuckDB oracle checks. Shuffles: shingles (N·s rows), signatures
-    * (N·bands rows), candidate verify (candidates only). No all-pairs.
-    * The call is eager: it returns the verified `(i, j, jaccard)` pairs
-    * `localCheckpoint`ed, so every consumer reads them as a leaf. */
+    * DuckDB oracle checks. Plan: one row per document with its shingle
+    * set and band keys ([[keyedSets]]: the docs' one exchange, on
+    * `doc_id`); one exchange of the N·bands band keys for the bucket
+    * self-join; the verify joins the set table on `i` and on `j`. No
+    * all-pairs, no row per shingle. Eager: returns the verified
+    * `(i, j, jaccard)` pairs `localCheckpoint`ed and releases the rest. */
   def minHashNearDups(docs: DataFrame, n: Int = 3, theta: Double = 0.7,
                       bands: Int = 64, rowsPerBand: Int = 2,
                       seed: Long = 42L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val fam = MinHashFamily(seed, bands * rowsPerBand)
-    // the shingle table is read four times (signatures, sizes, both verify
-    // sides): checkpointed, the tokenize+hash map runs once and every read
-    // plans against a 2-column leaf
-    val sh = shingles(docs, n).localCheckpoint()
-    val banded = bandKeysOf(sh, fam, bands, rowsPerBand)
-
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
+    // read three times (band keys, both verify sides): checkpointed, the
+    // tokenize+hash+minhash map runs once and every read plans against a leaf
+    val sets = keyedSets(docs, n, bands, rowsPerBand, seed).localCheckpoint()
+    val keys = bandRows(sets)
+    val cands = keys.as("a")
+      .join(keys.as("b"),
+        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
       .distinct()
-
-    // exact verify on candidates only — same formula as the full join;
-    // checkpointed because its consumers (a collect, clusters, keep-best,
-    // backfill, source overlap) would each re-run the band join and the
-    // verify, and the verified pairs are far smaller than the corpus
-    jaccardOfShingles(sh, theta, candidates = Some(cands)).localCheckpoint()
+    // checkpointed: each consumer (collect, clusters, keep-best, backfill,
+    // source overlap) would otherwise re-run the band join and the verify
+    val pairs = verifySets(cands, sets, theta).localCheckpoint()
+    release(sets)
+    pairs
   }
 
-  /** Banded signature table `(doc_id, band, bkey)` of a shingle table:
-    * typed Aggregator → HashAggregate with map-side partial signatures;
-    * band key = (band index, the band's minhash rows) — struct equality is
-    * exactly "collides in this band". */
-  private def bandKeysOf(sh: DataFrame, fam: MinHashFamily, bands: Int,
-                         rowsPerBand: Int): DataFrame = {
-    val sigs = sh
-      .groupBy("doc_id")
-      .agg(udaf(new MinHashAggregator(fam),
-        org.apache.spark.sql.Encoders.scalaLong)(col("sh_hash")).as("sig"))
-    val bandStructs = array((0 until bands).map(b =>
-      struct((0 until rowsPerBand).map(r =>
-        element_at(col("sig"), b * rowsPerBand + r + 1).as(s"h$r")): _*)): _*)
-    sigs.select(col("doc_id"), posexplode(bandStructs))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
+  /** [[shingleSets]] plus `bk`, the document's band keys
+    * ([[MinHashFamily.bandKeys]]), computed in the same narrow pass. */
+  private def keyedSets(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
+                        seed: Long): DataFrame = {
+    val fam = MinHashFamily(seed, bands * rowsPerBand)
+    val keysOf = udf((sh: scala.collection.Seq[Long]) => fam.bandKeys(sh, rowsPerBand))
+    shingleSets(docs, n).withColumn("bk", keysOf(col("sh")))
   }
 
-  /** The corpus's MinHash band keys as a standalone table — the SIGNATURE
-    * STORE a production ingest pipeline persists between crawls (parquet
-    * keyed by (band, bkey)): ~`bands` small rows per corpus doc, so
-    * probing a new batch never touches corpus text except to exact-verify
-    * the few candidate docs LSH surfaces. Parameters must match the ones
-    * later probes use — the store is only meaningful under the same
+  /** `(doc_id, band, bkey)` rows of a [[keyedSets]] table; `bkey` encodes
+    * its band, so an equi-join on `bkey` alone finds every band collision. */
+  private def bandRows(keyed: DataFrame): DataFrame =
+    keyed.select(col("doc_id"), posexplode(col("bk")).as(Seq("band", "bkey")))
+
+  /** Exact Jaccard of candidate pairs `(i, j)` on a shingle-set table:
+    * c = |si ∩ sj|, jaccard = c / (ni + nj − c), as [[jaccardOfShingles]]. */
+  private def verifySets(cands: DataFrame, sets: DataFrame, theta: Double): DataFrame = {
+    def side(k: String) = sets.select(col("doc_id").as(k), col("sh").as(s"s$k"))
+    val c = size(array_intersect(col("si"), col("sj")))
+    cands.join(side("i"), "i").join(side("j"), "j")
+      .select(col("i"), col("j"),
+        (c.cast("double") / (size(col("si")) + size(col("sj")) - c)).as("jaccard"))
+      .where(col("jaccard") >= theta)
+  }
+
+  /** Drops the blocks behind a `localCheckpoint`ed frame nothing reads. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
+
+  /** The corpus's MinHash band keys `(doc_id, band, bkey)` as a standalone
+    * table — the SIGNATURE STORE a production ingest pipeline persists
+    * between crawls (parquet keyed by the `bigint` `bkey`): `bands` rows
+    * per corpus doc, so a batch probe touches corpus text only to verify
+    * the candidates LSH surfaces. Valid only for probes with the same
     * (n, bands, rowsPerBand, seed). */
   def signatureStore(docs: DataFrame, n: Int = 3, bands: Int = 64,
                      rowsPerBand: Int = 2, seed: Long = 42L): DataFrame =
-    bandKeysOf(shingles(docs, n), MinHashFamily(seed, bands * rowsPerBand),
-      bands, rowsPerBand)
+    bandRows(keyedSets(docs, n, bands, rowsPerBand, seed))
 
   /** Incremental near-duplicate detection — the MinHash twin of
     * [[exactIncremental]]: find every (corpus doc, new doc) pair with
     * shingle Jaccard ≥ θ, WITHOUT recomputing anything corpus×corpus.
-    * The new batch's band keys probe the corpus signature store (pass the
-    * persisted table via `corpusStore`; omitted, it is computed from
-    * `corpus` — correct but paying the store build this call); candidates
-    * are exact-verified with [[jaccardOfShingles]], touching corpus TEXT
-    * only for candidate docs (a semi join the parquet reader turns into
-    * an id-pushdown scan). Only cross pairs are emitted — intra-batch
-    * near-dups are [[minHashNearDups]]'s job on the batch alone. Returns
-    * `(i, j, jaccard)` with i < j; ids must be unique across
-    * corpus ∪ batch. Shuffle ∝ batch·bands + candidates — nothing scales
-    * with corpus size but the store probe itself. */
+    * The new batch's band keys probe the corpus signature store
+    * (`corpusStore`; omitted, it is built from `corpus` in this call);
+    * candidates are exact-verified on shingle sets, touching corpus TEXT
+    * only for candidate docs (an id semi join). Only cross pairs are
+    * emitted — intra-batch near-dups are [[minHashNearDups]]'s job. Eager
+    * like it: `(i, j, jaccard)` with i < j, `localCheckpoint`ed; ids must
+    * be unique across corpus ∪ batch. Shuffle ∝ batch·bands + candidates
+    * — nothing scales with corpus size but the store probe itself. */
   def minHashIncremental(newDocs: DataFrame, corpus: DataFrame,
                          corpusStore: Option[DataFrame] = None,
                          n: Int = 3, theta: Double = 0.7,
                          bands: Int = 64, rowsPerBand: Int = 2,
                          seed: Long = 42L): DataFrame = {
-    val fam = MinHashFamily(seed, bands * rowsPerBand)
-    val newSh = shingles(newDocs, n).localCheckpoint()
-    val newBands = bandKeysOf(newSh, fam, bands, rowsPerBand)
+    val newSets = keyedSets(newDocs, n, bands, rowsPerBand, seed).localCheckpoint()
     val store = corpusStore.getOrElse(
       signatureStore(corpus, n, bands, rowsPerBand, seed))
     // store side × batch side: every candidate is a cross pair by
     // construction (no corpus×corpus, no batch×batch)
     val cands0 = store.as("a")
-      .join(newBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") =!= col("b.doc_id"))
+      .join(bandRows(newSets).as("b"),
+        col("a.bkey") === col("b.bkey") && col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("cid"), col("b.doc_id").as("nid"))
       .distinct()
     val candCorpus = corpus.join(
       cands0.select(col("cid").as("doc_id")).distinct(), Seq("doc_id"),
       "left_semi")
-    val sh = newSh.unionByName(shingles(candCorpus, n))
+    val sets = newSets.select("doc_id", "sh").unionByName(shingleSets(candCorpus, n))
     val cands = cands0.select(least(col("cid"), col("nid")).as("i"),
       greatest(col("cid"), col("nid")).as("j")).distinct()
-    jaccardOfShingles(sh, theta, candidates = Some(cands))
+    val pairs = verifySets(cands, sets, theta).localCheckpoint()
+    release(newSets)
+    pairs
   }
 
   /** Streaming face of [[minHashIncremental]] — continuous drop-directory

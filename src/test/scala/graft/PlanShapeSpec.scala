@@ -577,6 +577,35 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
       pipeline.Dedup.duplicateClusters(nodes, pairs).collect()) should be <= 1
   }
 
+  /** 60 random 20-token docs over six words plus 12 near-copies. */
+  private def nearDupCorpus = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(12L)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = (0L until 60L).map(i => (i, text(20)))
+    val dups = (0L until 12L).map(i => (100L + i, base(i.toInt)._2 + " eta"))
+    (base ++ dups).toDF("doc_id", "text")
+  }
+
+  "Dedup.minHashNearDups" should "submit at most seven jobs on a small corpus" in {
+    // set table checkpoint (its exchange + the checkpoint), the band-key
+    // broadcast, the candidate distinct, one set-table broadcast reused
+    // for both verify joins, the pair checkpoint, the caller's collect
+    val docs = nearDupCorpus
+    SubmittedWork.of(spark)(
+      pipeline.Dedup.minHashNearDups(docs, 3, 0.5).collect()).jobs should be <= 7
+  }
+
+  "Dedup.minHashNearDups and minHashIncremental" should "leave at most one RDD persistent" in {
+    val docs = nearDupCorpus
+    SubmittedWork.persistedBy(spark)(
+      pipeline.Dedup.minHashNearDups(docs, 3, 0.5).collect()) should be <= 1
+    val (batch, corpus) = (docs.where("doc_id >= 100"), docs.where("doc_id < 100"))
+    SubmittedWork.persistedBy(spark)(
+      pipeline.Dedup.minHashIncremental(batch, corpus, None, 3, 0.5).collect()) should be <= 1
+  }
+
   "q_substring_remove" should "never plan a cartesian product and prune the scan" in {
     val plan = formattedPlan("q_substring_remove")
     plan should not include "CartesianProduct"

@@ -124,6 +124,74 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     pairs(d.withColumn("doc_id", col("doc_id").cast("int"))) shouldBe asLong
   }
 
+  it should "give the same pairs at 1 and 7 shuffle partitions" in {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(5L)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = (0L until 50L).map(i => (i, text(25)))
+    val dups = (0L until 10L).map(i => (200L + i, base(i.toInt)._2 + " theta"))
+    val d = (base ++ dups).toDF("doc_id", "text")
+    def pairs(p: Int) = withShufflePartitions(p) {
+      Dedup.minHashNearDups(d, n = 3, theta = 0.5).orderBy("i", "j").collect().toSeq
+    }
+    val one = pairs(1)
+    one should not be empty
+    pairs(7) shouldBe one
+  }
+
+  it should "give no row and no pair for null text or fewer than n tokens" in {
+    val s = spark
+    import s.implicits._
+    val d = Seq[(Long, String)]((1L, null), (2L, null), (3L, "a b"), (4L, "a b"),
+      (5L, "x y z w"), (6L, "x y z w")).toDF("doc_id", "text")
+    Dedup.shingleSets(d, 3).select("doc_id").as[Long].collect().sorted shouldBe Array(5L, 6L)
+    Dedup.minHashNearDups(d, 3, 0.7).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe Seq((5L, 6L))
+  }
+
+  "Dedup.shingleSets" should "equal shingles grouped by doc_id, sorted" in {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(9L)
+    val vocab = Vector("a", "b", "c", "d", "e")
+    val d = (0L until 40L).map(i =>
+      (i, Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+      .toDF("doc_id", "text")
+    val want = Dedup.shingles(d, 3).as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (id, rows) => id -> rows.map(_._2).sorted.toSeq }
+    val got = Dedup.shingleSets(d, 3).as[(Long, Seq[Long])].collect().toMap
+    want should not be empty
+    got shouldBe want
+  }
+
+  it should "give a doc_id present in two rows the union of their shingles" in {
+    val d = docs((1L, "a b c d"), (1L, "x y z a b c"), (2L, "a b c d"))
+    val sets = Dedup.shingleSets(d, 3).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val one = Dedup.shingles(docs((1L, "a b c d"), (1L, "x y z a b c")), 3)
+      .collect().map(_.getLong(1)).sorted.toSeq
+    sets(1L) shouldBe one
+    sets(1L).length shouldBe 5 // abc, bcd, xyz, yza, zab
+    sets(2L).toSet.subsetOf(sets(1L).toSet) shouldBe true
+  }
+
+  "Dedup.MinHashFamily.modP" should "equal % (2^31 - 1) on edge values and random triples" in {
+    import Dedup.MinHashFamily.{P, modP}
+    def viaMod(a: Long, x: Long, b: Long) = (a * x + b) % P
+    val xs = Seq(0L, 1L, P - 1, P) // x = h & 0x7FFFFFFF reaches P itself
+    for (a <- Seq(1L, 2L, P - 1); x <- xs; b <- Seq(0L, 1L, P - 1))
+      withClue(s"a=$a x=$x b=$b") { modP(a * x + b) shouldBe viaMod(a, x, b) }
+    val rnd = new scala.util.Random(31L)
+    for (_ <- 0 until 100000) {
+      val a = 1L + rnd.nextInt(Int.MaxValue - 1)
+      val x = rnd.nextLong() & 0x7FFFFFFFL
+      val b = rnd.nextInt(Int.MaxValue).toLong
+      modP(a * x + b) shouldBe viaMod(a, x, b)
+    }
+  }
+
   "Dedup.minHashIncremental" should "equal the full-corpus pair set restricted to cross pairs" in {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")
