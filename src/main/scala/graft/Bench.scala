@@ -85,15 +85,15 @@ object Bench {
     }
 
     // fixed name order: timings are position-independent and diffable;
-    // cache cleared between runs so no query is billed against another's
+    // each run isolated (Release.isolated: cache cleared, the RDDs it left
+    // persistent unpersisted) so no query is billed against another's
     // persisted subtree (several share the kNN lineage); min of 3 runs per
     // query strips environment noise (this VM shows sporadic 10-25×
     // memory-reclaim stalls on an otherwise idle box — with min-of-2 a
     // single stalled pair still poisoned a round-5 measurement of a
     // trivial hash agg to 8.9 s)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
+      val times = (1 to 3).map { _ => Release.isolated(spark) {
         val t0 = System.nanoTime()
         try {
           // foreach, NOT count: under count() Catalyst prunes every column,
@@ -107,7 +107,7 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           -1.0 // a failing query must read as failure, not as a fast run
         }
-      }
+      }}
       name -> (if (times.contains(-1.0)) -1.0 else times.min)
     }
     // 3-digit floats: the one-line artifact must survive the driver's tail
@@ -132,8 +132,7 @@ object Bench {
     // run order (round 5 shipped 8 such false flags). Re-measure each
     // flagged query ONCE after the main loop — outside the stall window
     // that flagged it — and confirm only flags that reproduce.
-    val confirmed = flagged.flatMap { case (name, _) =>
-      spark.catalog.clearCache()
+    val confirmed = flagged.flatMap { case (name, _) => Release.isolated(spark) {
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir).foreach(_ => ())
@@ -144,7 +143,7 @@ object Bench {
       } catch { case _: Throwable =>
         Some(s"""{"query":"$name","prior":${prior(name)},"again":-1.0}""")
       }
-    }
+    }}
     val regressions = flagged.map { case (name, now) =>
       f"""{"query":"$name","prior":${prior(name)}%.3f,"now":$now%.3f}"""
     }.mkString("[", ",", "]")

@@ -29,20 +29,21 @@ object Verify {
         }
         rm(dest)
       }
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name FAILED: $msg")
-        failures(name) = msg
-        dest.mkdirs()
-        Files.writeString(Paths.get(s"$outDir/$name/_FAILED"),
-          s"$name\n$msg\n")
-      }
       // queries may persist shared subtrees (e.g. q_tsne_quality's ranked
-      // kNN); release them so one query's cache never outlives its run —
-      // the same hygiene Bench applies between timed runs
-      finally spark.catalog.clearCache()
+      // kNN) or return checkpoints; release them so nothing one query
+      // keeps resident outlives its run — the isolation Bench gives too
+      Release.isolated(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+          System.err.println(s"[verify] $name FAILED: $msg")
+          failures(name) = msg
+          dest.mkdirs()
+          Files.writeString(Paths.get(s"$outDir/$name/_FAILED"),
+            s"$name\n$msg\n")
+        }
+      }
     }
     failures.toSeq
   }

@@ -1,10 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
+
+import graft.Release
 
 /** Deduplication operators over the `documents` table — exact, n-gram
   * Jaccard, MinHash+LSH and SimHash. The four standard tiers of a
@@ -251,7 +252,7 @@ object Dedup {
     // checkpointed: each consumer (collect, clusters, keep-best, backfill,
     // source overlap) would otherwise re-run the band join and the verify
     val pairs = verifySets(cands, sets, theta).localCheckpoint()
-    release(sets)
+    Release.checkpoint(sets)
     pairs
   }
 
@@ -279,10 +280,6 @@ object Dedup {
         (c.cast("double") / (size(col("si")) + size(col("sj")) - c)).as("jaccard"))
       .where(col("jaccard") >= theta)
   }
-
-  /** Drops the blocks behind a `localCheckpoint`ed frame nothing reads. */
-  private def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
 
   /** The corpus's MinHash band keys `(doc_id, band, bkey)` as a standalone
     * table — the SIGNATURE STORE a production ingest pipeline persists
@@ -327,7 +324,7 @@ object Dedup {
     val cands = cands0.select(least(col("cid"), col("nid")).as("i"),
       greatest(col("cid"), col("nid")).as("j")).distinct()
     val pairs = verifySets(cands, sets, theta).localCheckpoint()
-    release(newSets)
+    Release.checkpoint(newSets)
     pairs
   }
 

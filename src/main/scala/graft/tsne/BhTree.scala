@@ -112,79 +112,41 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
     * accumulated duplicate mass is subdivided, the resident moves down with
     * its FULL accumulated mass. The reference re-inserts `leafPoint` once
     * (`QuadTree.scala:59-61`), silently halving duplicates' weight in every
-    * descendant cell — a mass-conservation bug a θ=0 traversal exposes.
-    * Fixing it keeps the driver build and the merged distributed build
-    * ([[mergeFrom]]) bit-identical in total mass per leaf. */
+    * descendant cell — a mass-conservation bug a θ=0 traversal exposes
+    * (`BhTreeSpec`'s duplicate-point case). */
   def insert(x: Double, y: Double): Boolean = {
     if (!contains(0, x, y)) return false
-    insertMass(x, y, 1, x, y)
+    var node = 0
+    var depth = 0
+    while (true) {
+      sumX(node) += x; sumY(node) += y; cnt(node) += 1
+      if (firstChild(node) == -1) {
+        if (!hasPoint(node)) {
+          px(node) = x; py(node) = y; hasPoint(node) = true
+          return true
+        }
+        // a duplicate accumulates mass in the leaf (ref QuadTree.scala:50-53);
+        // so does a point pathologically close to the resident
+        if ((px(node) == x && py(node) == y) || depth >= MaxDepth) return true
+        // the resident moves down one level with ALL its accumulated mass
+        // (this node's totals minus the incoming point)
+        val rc = cnt(node) - 1
+        val rsx = sumX(node) - x
+        val rsy = sumY(node) - y
+        val ox = px(node); val oy = py(node)
+        subdivide(node)
+        hasPoint(node) = false
+        val ochild = owningChild(node, ox, oy)
+        sumX(ochild) += rsx; sumY(ochild) += rsy; cnt(ochild) += rc
+        px(ochild) = ox; py(ochild) = oy; hasPoint(ochild) = true
+      }
+      node = owningChild(node, x, y)
+      depth += 1
+    }
     true
   }
 
   def size: Int = cnt(0)
-
-  /** Root cell of this tree — two trees are mergeable iff these agree. */
-  private[tsne] def rootCell: (Double, Double, Double) = (cx(0), cy(0), hw(0))
-
-  /** Insert an aggregated mass packet: `mc` points all located at (x, y)
-    * — or, past MaxDepth, a mixed-mass packet represented by (x, y) —
-    * carrying exact coordinate sums (msx, msy). [[insert]] is the
-    * special case (mc=1, msx=x, msy=y); this generalization is what makes
-    * subtree *merging* possible: a leaf of another tree moves wholesale,
-    * duplicates' mass included, without replaying its individual inserts. */
-  private def insertMass(x: Double, y: Double, mc: Int, msx: Double, msy: Double): Unit = {
-    var node = 0
-    var depth = 0
-    while (true) {
-      sumX(node) += msx; sumY(node) += msy; cnt(node) += mc
-      if (firstChild(node) == -1) {
-        if (!hasPoint(node)) {
-          px(node) = x; py(node) = y; hasPoint(node) = true
-          return
-        } else if (px(node) == x && py(node) == y) {
-          return // same location: mass only, like insert's duplicate case
-        } else if (depth >= MaxDepth) {
-          return // pathological closeness: keep mass, keep resident
-        } else {
-          // resident moves down one level with ALL its accumulated mass
-          // (this node's totals minus the incoming packet)
-          val rc = cnt(node) - mc
-          val rsx = sumX(node) - msx
-          val rsy = sumY(node) - msy
-          val ox = px(node); val oy = py(node)
-          subdivide(node)
-          hasPoint(node) = false
-          val ochild = owningChild(node, ox, oy)
-          sumX(ochild) += rsx; sumY(ochild) += rsy; cnt(ochild) += rc
-          px(ochild) = ox; py(ochild) = oy; hasPoint(ochild) = true
-          node = owningChild(node, x, y)
-          depth += 1
-        }
-      } else {
-        node = owningChild(node, x, y)
-        depth += 1
-      }
-    }
-  }
-
-  /** Merge another tree (built with the *same root cell*) into this one by
-    * moving each of its occupied leaves wholesale via [[insertMass]] —
-    * internal-node sums/counts rebuild along the insertion paths. Cost
-    * O(leaves(other) · depth). Associative up to floating-point summation
-    * order in the center-of-mass accumulators (cnt is exact; a θ=0
-    * traversal of the merged tree is therefore bit-exact). */
-  private[tsne] def mergeFrom(other: BhTree): BhTree = {
-    require(cx(0) == other.cx(0) && cy(0) == other.cy(0) && hw(0) == other.hw(0),
-      "cannot merge quadtrees with different root cells")
-    var i = 0
-    while (i < other.n) {
-      if (other.firstChild(i) == -1 && other.cnt(i) > 0)
-        insertMass(other.px(i), other.py(i), other.cnt(i),
-          other.sumX(i), other.sumY(i))
-      i += 1
-    }
-    this
-  }
 
   /** Barnes-Hut traversal (ref `QuadTree.scala:123-152`): returns
     * (Fx, Fy, sumQ-partial) for one query point. */
@@ -228,12 +190,10 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
 
 object BhTree {
 
-  /** The root-cell rule shared by every build path (`TsneHelpers.scala:
-    * 228-231`): centered on the mean, half-width `max(xspan, yspan)`.
-    * One definition so the driver build, the executor build, and the
-    * optimizer's precomputed-cell fast path cannot drift apart (mergeFrom
-    * requires exactly equal root cells). */
-  private[tsne] def rootCellOf(points: Iterable[Array[Double]]): (Double, Double, Double) = {
+  /** Build a tree the way the reference's gradient does
+    * (`TsneHelpers.scala:228-256`): a square root cell centered on the mean
+    * with half-width `max(xspan, yspan)`, then insert every point. */
+  def build(points: Iterable[Array[Double]]): BhTree = {
     var minX = Double.PositiveInfinity; var maxX = Double.NegativeInfinity
     var minY = Double.PositiveInfinity; var maxY = Double.NegativeInfinity
     var sx = 0.0; var sy = 0.0; var c = 0
@@ -245,58 +205,8 @@ object BhTree {
       sx += p(0); sy += p(1); c += 1
     }
     require(c > 0, "cannot build a quadtree from zero points")
-    (sx / c, sy / c, math.max(maxX - minX, maxY - minY))
-  }
-
-  /** Build a tree the way the reference's gradient does
-    * (`TsneHelpers.scala:228-256`): root from [[rootCellOf]], then insert
-    * every point. */
-  def build(points: Iterable[Array[Double]]): BhTree = {
-    val (cx, cy, hw) = rootCellOf(points)
-    val t = new BhTree(cx, cy, hw)
+    val t = new BhTree(sx / c, sy / c, math.max(maxX - minX, maxY - minY))
     points.foreach(p => t.insert(p(0), p(1)))
     t
-  }
-
-  /** Driver-free distributed build: one pass for the root cell (mean +
-    * span, like the reference's bounds+mean aggregate,
-    * `TsneHelpers.scala:228-231`), then per-partition subtrees over the
-    * *same* root cell merged pairwise with `treeAggregate` — the
-    * scale-safe alternative to collecting all N points and building on
-    * the driver (ref builds via a global parallelism-1 reduceGroup,
-    * `TsneHelpers.scala:234-256`). The merged tree's structure and masses
-    * match the driver build exactly; center-of-mass sums differ only in
-    * floating-point summation order, so θ=0 traversals are bit-exact and
-    * θ>0 traversals agree to ~1e-12 (`BhTreeSpec`). */
-  def buildRdd(points: org.apache.spark.rdd.RDD[(Double, Double)],
-               depth: Int = 2): BhTree = {
-    val (minX, maxX, minY, maxY, sx, sy, c) = points.treeAggregate(
-      (Double.PositiveInfinity, Double.NegativeInfinity,
-        Double.PositiveInfinity, Double.NegativeInfinity, 0.0, 0.0, 0L))(
-      seqOp = { case ((nx, xx, ny, xy, ax, ay, k), (x, y)) =>
-        (math.min(nx, x), math.max(xx, x), math.min(ny, y), math.max(xy, y),
-          ax + x, ay + y, k + 1)
-      },
-      combOp = { case ((nx1, xx1, ny1, xy1, ax1, ay1, k1),
-                       (nx2, xx2, ny2, xy2, ax2, ay2, k2)) =>
-        (math.min(nx1, nx2), math.max(xx1, xx2), math.min(ny1, ny2),
-          math.max(xy1, xy2), ax1 + ax2, ay1 + ay2, k1 + k2)
-      }, depth)
-    require(c > 0, "cannot build a quadtree from zero points")
-    buildRdd(points, sx / c, sy / c, math.max(maxX - minX, maxY - minY), depth)
-  }
-
-  /** [[buildRdd]] with a caller-supplied root cell — for callers that
-    * already hold every point (the optimizer superstep collects the working
-    * set for its broadcast state anyway) and can derive the cell in one
-    * O(N) driver pass instead of paying a distributed stats job. */
-  def buildRdd(points: org.apache.spark.rdd.RDD[(Double, Double)],
-               rootX: Double, rootY: Double, rootHw: Double,
-               depth: Int): BhTree = {
-    val zero = new BhTree(rootX, rootY, rootHw)
-    points.treeAggregate(zero)(
-      seqOp = (t, p) => { t.insert(p._1, p._2); t },
-      combOp = (a, b) => a.mergeFrom(b),
-      depth)
   }
 }

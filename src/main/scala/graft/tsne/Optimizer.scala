@@ -1,8 +1,11 @@
 package graft.tsne
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.Release
 
 /** t-SNE optimizer: init, iteration loop and 3-phase schedule
   * (ref: `TsneHelpers.scala:198-219` init, `:371-394` iteration,
@@ -53,21 +56,10 @@ object Optimizer {
       // path (optimizeStateDistributed): the working set stays a Dataset,
       // neighbor positions arrive via an edges ⋈ state join, and the update
       // is a pure map — per-superstep driver traffic drops from O(N) state
-      // both ways to a handful of scalars (plus the tree, which is itself
-      // gated by distTreeMinPoints). 5M points ≈ 600 MB of broadcast state
+      // both ways to a handful of scalars plus the 2 coordinates per point
+      // the driver-built tree needs. 5M points ≈ 600 MB of broadcast state
       // is where the driver funnel starts to dominate a 1000-executor job.
-      maxBroadcastStateRows: Long = 5000000L,
-      // Executor-side tree build threshold — effectively OFF by default:
-      // measured (TreeBuildBench, local[32]) the treeAggregate build loses
-      // to the driver build at every size that fits (2M pts: 29.9 s vs
-      // 4.7 s), because the broadcast tree must materialize on the driver
-      // regardless, making the final combine Ω(N) driver work *plus*
-      // subtree (de)serialization. The capability stays (OptimizerSpec
-      // forces it and pins 1e-9 agreement) for clusters where driver CPU
-      // is the scarce resource; SCALE.md records the measurement and the
-      // real 100×-scale alternative (distributed state, not a faster
-      // broadcast-tree build).
-      distTreeMinPoints: Int = Int.MaxValue)
+      maxBroadcastStateRows: Long = 5000000L)
 
   /** O13 — init working set: y ~ N(0, σ=1e-4), step = 0⃗, gains = 1⃗
     * (ref `TsneHelpers.scala:198-219`). The reference accepts a
@@ -105,13 +97,24 @@ object Optimizer {
     ).filter(_._1 > 0)
   }
 
+  /** The schedule unrolled, one entry per superstep: (1-based iteration
+    * number, the one the loss series is keyed by; momentum; P factor). */
+  private def supersteps(params: Params, schedule: Seq[(Int, Double, Boolean, Int)])
+      : Seq[(Int, Double, Double)] =
+    schedule.flatMap { case (iters, momentum, exaggerate, offset) =>
+      val factor = if (exaggerate) params.earlyExaggeration else 1.0
+      (1 to iters).map(it => (it + offset, momentum, factor))
+    }
+
   /** Full optimize: picks the local or distributed path by |P|.
     *
-    * P is persisted up front — the size probe, the path's own passes, and
-    * `ws0` (whose plan contains P as a subtree, so Spark's cache manager
-    * substitutes the InMemoryRelation there too) would otherwise each
-    * re-execute the whole kNN → perplexity-search lineage from scratch
-    * (VERDICT r1 "what's wrong" #2). */
+    * P is persisted here, once, for whichever path runs — the size probe,
+    * the path's own passes, and `ws0` (whose plan contains P as a subtree,
+    * so Spark's cache manager substitutes the InMemoryRelation there too)
+    * would otherwise each re-execute the whole kNN → perplexity-search
+    * lineage from scratch (VERDICT r1 "what's wrong" #2). One aggregate
+    * probes both dispatch sizes. Every path returns driver-local points
+    * and leaves nothing persistent behind. */
   def optimize(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet], params: Params,
                lossAcc: Option[MapAccumulator] = None): Dataset[Point] = {
     require(params.nComponents == 2,
@@ -121,13 +124,15 @@ object Optimizer {
     val pCached = p.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // coalesce: sum(...) is null on an empty P — fail with a clear message
-      val pEntries = pCached.select(coalesce(sum(size(col("js"))), lit(0L))).as[Long].head()
+      val (pEntries, rows) = pCached
+        .select(coalesce(sum(size(col("js"))), lit(0L)), count(lit(1)))
+        .as[(Long, Long)].head()
       require(pEntries > 0, "cannot optimize an empty affinity dataset")
       if (pEntries <= params.maxLocalPEntries) {
         val (points, loss) = optimizeLocal(pCached.collect(), ws0.collect(), params)
         lossAcc.foreach(acc => loss.foreach(acc.add))
         spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(points))
-      } else if (pCached.count() <= params.maxBroadcastStateRows) {
+      } else if (rows <= params.maxBroadcastStateRows) {
         optimizeDistributed(pCached, ws0, params, lossAcc)
       } else {
         optimizeStateDistributed(pCached, ws0, params, lossAcc)
@@ -138,55 +143,27 @@ object Optimizer {
   /** The phase-1 superstep dataflow of [[optimizeDistributed]] as
     * UNEXECUTED plans for `--executionPlan` (ref `Tsne.scala:89-95` dumps
     * the Flink plan *instead of* executing; Spark's iterative loop is
-    * imperative, so the dumpable unit is one superstep). Built against an
-    * empty broadcast state and a 1-point tree — the closures never run,
+    * imperative, so the dumpable unit is one superstep). The three plans
+    * come from the builders the loop itself runs, over an empty broadcast
+    * state and a 1-point tree — the closures never run,
     * `queryExecution.toString` only drives analysis/optimization/physical
     * planning on the driver, and NO Spark job is submitted (pinned by
     * `TsneE2ESpec`'s job-listener assertion). */
   def superstepPlanString(p: Dataset[AffinityRow], params: Params): String = {
-    val spark = p.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val metricName = params.metric
+    val sc = p.sparkSession.sparkContext
     val bcState = sc.broadcast(new java.util.HashMap[Long, WorkingSet]())
     val bcTree = sc.broadcast(BhTree.build(Array(Array(0.0, 0.0))))
-    val theta = params.theta
-    val factor = params.earlyExaggeration
-    // the same scan → fused force map as superstep stage 2
-    val forces = p.mapPartitions { rows =>
-      val metric = Distances.byName(metricName)
-      val st = bcState.value
-      val t = bcTree.value
-      rows.map { row =>
-        val yi = st.get(row.id).y
-        val ps = row.ps.map(_ * factor)
-        val (ax, ay) =
-          Gradient.attractiveForce(row.js, ps, yi, id => st.get(id).y, metric)
-        val (rx, ry, sq) = t.repulsiveForce(yi(0), yi(1), theta)
-        Force(row.id, ax, ay, rx, ry, sq, 0.0, 0.0)
-      }
-    }
-    // stage 3's single global aggregation
-    val agg = forces.agg(sum("sumQPart"), sum("lossPre"), sum("pSum"))
-    // stage 5's broadcast-state update map
-    val minGain = params.minGain
-    val lr = params.learningRate
-    val mom = params.initialMomentum
-    val upd = forces.map { f =>
-      val w = bcState.value.get(f.id)
-      val grad = Array(f.ax, f.ay)
-      val (ny, ns, ng) =
-        Gradient.update(w.y, w.lastGrad, w.gains, grad, minGain, mom, lr)
-      WorkingSet(f.id, ny, ns, ng)
-    }
+    val forces = forcesPass(p, bcState, bcTree, params, params.earlyExaggeration,
+      needLoss = true)
     try {
       "== superstep forces (fused attractive + Barnes-Hut repulsive) ==\n" +
         forces.queryExecution.toString +
         "\n== superstep global aggregation (sumQ + loss partials) ==\n" +
-        agg.queryExecution.toString +
+        globalSums(forces).queryExecution.toString +
         "\n== superstep state update (broadcast state, no shuffle) ==\n" +
-        upd.queryExecution.toString
-    } finally { bcState.destroy(); bcTree.destroy() }
+        stateUpdate(forces, bcState, params, params.initialMomentum, sumQ = 1.0)
+          .queryExecution.toString
+    } finally { forces.unpersist(); bcState.destroy(); bcTree.destroy() }
   }
 
   // ================= driver-local fast path ==============================
@@ -236,173 +213,175 @@ object Optimizer {
       java.util.stream.IntStream.range(0, bound).parallel()
         .forEach(k => body(k))
 
-    for ((iters, momentum, exaggerate, offset) <- schedule) {
-      val factor = if (exaggerate) params.earlyExaggeration else 1.0
-      var it = 1
-      while (it <= iters) {
-        val lossIter = it + offset
-        val needLoss = lossIter % 10 == 0
-        // gradient (ref TsneHelpers.scala:221-318)
-        val tree = BhTree.build(y)
-        val rep = new Array[(Double, Double, Double)](n)
-        parRange(n) { k =>
-          rep(k) = tree.repulsiveForce(y(k)(0), y(k)(1), params.theta)
-        }
-        var sumQ = 0.0
-        var k = 0
-        while (k < n) { sumQ += rep(k)._3; k += 1 }
-        val sumQFixed = sumQ
-        val yOf: Long => Array[Double] = id => y(idx.get(id))
-        val grad = new Array[Array[Double]](n)
-        val lossParts = if (needLoss) new Array[Double](pRows.length) else null
-        parRange(pRows.length) { k =>
-          val row = pRows(k)
-          val i = rowOf(k)
-          val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
-          val (ax, ay) = Gradient.attractiveForce(row.js, ps, y(i), yOf, metric)
-          grad(i) = Array(ax - rep(i)._1 / sumQFixed, ay - rep(i)._2 / sumQFixed)
-          if (needLoss)
-            lossParts(k) = Gradient.lossPart(row.js, ps, y(i), yOf, metric, sumQFixed)
-        }
-        if (needLoss) {
-          var l = 0.0
-          k = 0
-          while (k < lossParts.length) { l += lossParts(k); k += 1 }
-          loss.updateWith(lossIter) { case cur => Some(cur.getOrElse(0.0) + l) }
-        }
-        // update + center (ref TsneHelpers.scala:341-369, :320-329)
-        parRange(n) { k =>
-          val (ny, ns, ng) =
-            Gradient.update(y(k), step(k), gains(k), grad(k), params.minGain,
-              momentum, params.learningRate)
-          y(k) = ny; step(k) = ns; gains(k) = ng
-        }
-        var mx = 0.0; var my = 0.0
-        k = 0
-        while (k < n) { mx += y(k)(0); my += y(k)(1); k += 1 }
-        mx /= n; my /= n
-        parRange(n) { k => y(k)(0) -= mx; y(k)(1) -= my }
-        it += 1
+    for ((lossIter, momentum, factor) <- supersteps(params, schedule)) {
+      val needLoss = lossIter % 10 == 0
+      // gradient (ref TsneHelpers.scala:221-318)
+      val tree = BhTree.build(y)
+      val rep = new Array[(Double, Double, Double)](n)
+      parRange(n) { k =>
+        rep(k) = tree.repulsiveForce(y(k)(0), y(k)(1), params.theta)
       }
+      var sumQ = 0.0
+      var k = 0
+      while (k < n) { sumQ += rep(k)._3; k += 1 }
+      val sumQFixed = sumQ
+      val yOf: Long => Array[Double] = id => y(idx.get(id))
+      val grad = new Array[Array[Double]](n)
+      val lossParts = if (needLoss) new Array[Double](pRows.length) else null
+      parRange(pRows.length) { k =>
+        val row = pRows(k)
+        val i = rowOf(k)
+        val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
+        val (ax, ay) = Gradient.attractiveForce(row.js, ps, y(i), yOf, metric)
+        grad(i) = Array(ax - rep(i)._1 / sumQFixed, ay - rep(i)._2 / sumQFixed)
+        if (needLoss)
+          lossParts(k) = Gradient.lossPart(row.js, ps, y(i), yOf, metric, sumQFixed)
+      }
+      if (needLoss) {
+        var l = 0.0
+        k = 0
+        while (k < lossParts.length) { l += lossParts(k); k += 1 }
+        loss.updateWith(lossIter) { case cur => Some(cur.getOrElse(0.0) + l) }
+      }
+      // update + center (ref TsneHelpers.scala:341-369, :320-329)
+      parRange(n) { k =>
+        val (ny, ns, ng) =
+          Gradient.update(y(k), step(k), gains(k), grad(k), params.minGain,
+            momentum, params.learningRate)
+        y(k) = ny; step(k) = ns; gains(k) = ng
+      }
+      centerInPlace(y)
     }
     (ids.zip(y).map { case (id, v) => Point(id, v) }, loss.toMap)
   }
 
+  /** Subtract the mean in place (ref `TsneHelpers.scala:320-329`), summing
+    * in array order — callers pass id-sorted points, so the centering sums
+    * never inherit collect()'s partition-dependent ordering. */
+  private def centerInPlace(ys: Array[Array[Double]]): Unit = {
+    var mx = 0.0; var my = 0.0
+    ys.foreach { y => mx += y(0); my += y(1) }
+    mx /= ys.length; my /= ys.length
+    ys.foreach { y => y(0) -= mx; y(1) -= my }
+  }
+
+  /** The last step of both distributed loops: the stored state is
+    * post-update, pre-center, so collect its coordinates id-sorted, center
+    * them, and release the final checkpoint. The result is driver-local,
+    * the same N × 2 doubles every superstep's tree build collects. */
+  private def centeredResult(state: Dataset[WorkingSet]): Dataset[Point] = {
+    val spark = state.sparkSession
+    import spark.implicits._
+    val fin = state.select(col("id"), col("y")).as[(Long, Array[Double])]
+      .collect().sortBy(_._1)
+    Release.checkpoint(state)
+    centerInPlace(fin.map(_._2))
+    spark.createDataset(fin.toSeq.map { case (id, y) => Point(id, y) })
+  }
+
+  /** The superstep's ONE global aggregation (ref `TsneHelpers.scala:266`):
+    * sumQ plus the two loss partials, over either loop's force rows. */
+  private def globalSums(forces: Dataset[_]): DataFrame =
+    forces.agg(sum("sumQPart"), sum("lossPre"), sum("pSum"))
+
+  /** Runs [[globalSums]] and returns sumQ; on loss supersteps records
+    * loss = Σ lossPre + (Σ p)·log(sumQ). */
+  private def globalSumQ(forces: Dataset[_], lossIter: Int, needLoss: Boolean,
+                         lossAcc: Option[MapAccumulator]): Double = {
+    val row = globalSums(forces).head()
+    val sumQ = row.getDouble(0)
+    if (needLoss)
+      lossAcc.foreach(_.add((lossIter, row.getDouble(1) + row.getDouble(2) * math.log(sumQ))))
+    sumQ
+  }
+
   // ================= distributed path ====================================
 
-  def optimizeDistributed(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet],
-                          params: Params,
-                          lossAcc: Option[MapAccumulator]): Dataset[Point] = {
+  /** The broadcast superstep's fused pass over P, persisted for its two
+    * readers (the global sums and the update): attractive + Barnes-Hut
+    * repulsive + (on loss supersteps) the sumQ-independent loss partials —
+    * the loss costs no extra job, mirroring how the reference accumulates
+    * it inside the attractive-force map (ref `TsneHelpers.scala:297-300`). */
+  private def forcesPass(p: Dataset[AffinityRow],
+                         bcState: Broadcast[java.util.HashMap[Long, WorkingSet]],
+                         bcTree: Broadcast[BhTree], params: Params, factor: Double,
+                         needLoss: Boolean): Dataset[Force] = {
     val spark = p.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val metricName = params.metric
+    val (metricName, theta) = (params.metric, params.theta)
+    p.mapPartitions { rows =>
+      val metric = Distances.byName(metricName)
+      val st = bcState.value
+      val t = bcTree.value
+      val yOf: Long => Array[Double] = id => st.get(id).y
+      rows.map { row =>
+        val yi = yOf(row.id)
+        val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
+        val (ax, ay) = Gradient.attractiveForce(row.js, ps, yi, yOf, metric)
+        val (rx, ry, sq) = t.repulsiveForce(yi(0), yi(1), theta)
+        val (lp, psum) =
+          if (needLoss) Gradient.lossPartsPreSumQ(row.js, ps, yi, yOf, metric)
+          else (0.0, 0.0)
+        Force(row.id, ax, ay, rx, ry, sq, lp, psum)
+      }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
-    val pCached = p.persist(StorageLevel.MEMORY_AND_DISK)
+  /** The broadcast superstep's update: a map over the force rows against
+    * the broadcast state — no shuffle, no join. */
+  private def stateUpdate(forces: Dataset[Force],
+                          bcState: Broadcast[java.util.HashMap[Long, WorkingSet]],
+                          params: Params, momentum: Double, sumQ: Double): Dataset[WorkingSet] = {
+    val spark = forces.sparkSession
+    import spark.implicits._
+    val (minGain, lr) = (params.minGain, params.learningRate)
+    forces.map { f =>
+      val w = bcState.value.get(f.id)
+      val grad = Array(f.ax - f.rx / sumQ, f.ay - f.ry / sumQ)
+      val (ny, ns, ng) = Gradient.update(w.y, w.lastGrad, w.gains, grad, minGain, momentum, lr)
+      WorkingSet(f.id, ny, ns, ng)
+    }
+  }
+
+  /** The broadcast-state superstep loop. Per superstep: collect the working
+    * set and center it on the driver, build the tree there (ref: one
+    * parallelism-1 reduce, `TsneHelpers.scala:234-256`), broadcast both,
+    * run [[forcesPass]] over P, one [[globalSums]], and [[stateUpdate]],
+    * whose `localCheckpoint` replaces the previous state checkpoint. P is
+    * read as given; [[optimize]] persists it. */
+  private[tsne] def optimizeDistributed(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet],
+                                        params: Params,
+                                        lossAcc: Option[MapAccumulator]): Dataset[Point] = {
+    val sc = p.sparkSession.sparkContext
     var state: Dataset[WorkingSet] = ws0.localCheckpoint()
     // The stored state is *uncentered* (post-update); centering is applied
     // when the working set is collected, so each iteration costs no extra
     // pass. The very first working set is used as-is, like the reference.
     var needCenter = false
 
-    for ((iters, momentum, exaggerate, offset) <- phases(params)) {
-      val factor = if (exaggerate) params.earlyExaggeration else 1.0
-      var it = 1
-      while (it <= iters) {
-        val lossIter = it + offset
+    for ((lossIter, momentum, factor) <- supersteps(params, phases(params))) {
+      // Sorted into canonical id order like optimizeLocal: the centering
+      // sums and the tree build must not inherit collect()'s
+      // partition-dependent ordering through FP summation order.
+      val arr = state.collect().sortBy(_.id)
+      if (needCenter) centerInPlace(arr.map(_.y))
+      needCenter = true
+      val stateMap = new java.util.HashMap[Long, WorkingSet](arr.length * 2)
+      arr.foreach(w => stateMap.put(w.id, w))
+      val bcState = sc.broadcast(stateMap)
+      val bcTree = sc.broadcast(BhTree.build(arr.map(_.y)))
 
-        // 1. collect the small working set; center on the driver. Sorted
-        // into canonical id order like optimizeLocal: the centering sums
-        // and the driver tree build must not inherit collect()'s
-        // partition-dependent ordering through FP summation order.
-        val arr = state.collect().sortBy(_.id)
-        var mx = 0.0; var my = 0.0
-        if (needCenter) {
-          arr.foreach { w => mx += w.y(0); my += w.y(1) }
-          mx /= arr.length; my /= arr.length
-          arr.foreach { w => w.y(0) -= mx; w.y(1) -= my }
-        }
-        needCenter = true
-        val stateMap = new java.util.HashMap[Long, WorkingSet](arr.length * 2)
-        arr.foreach(w => stateMap.put(w.id, w))
-        // Past distTreeMinPoints the tree is built on the executors
-        // (per-partition subtrees + structural merge) instead of on the
-        // driver; see Params.distTreeMinPoints for why that is OFF by
-        // default. Both use the same insertion kernels; the RDD map
-        // re-applies the exact centering subtraction performed on `arr`
-        // above, and the root cell comes from one O(N) driver pass over
-        // the already-collected points — not a second distributed job.
-        val tree =
-          if (arr.length >= params.distTreeMinPoints) {
-            val (ox, oy) = (mx, my)
-            val (rcx, rcy, rhw) = BhTree.rootCellOf(arr.map(_.y))
-            BhTree.buildRdd(state.rdd.map(w => (w.y(0) - ox, w.y(1) - oy)),
-              rcx, rcy, rhw, depth = 2)
-          } else BhTree.build(arr.map(_.y))
-        val bcState = sc.broadcast(stateMap)
-        val bcTree = sc.broadcast(tree)
-
-        // 2. one fused pass over P: attractive + Barnes-Hut repulsive +
-        // (on loss supersteps) the sumQ-independent loss partials — the
-        // loss costs no extra job, mirroring how the reference accumulates
-        // it inside the attractive-force map (ref TsneHelpers.scala:297-300)
-        val theta = params.theta
-        val needLoss = lossIter % 10 == 0 && lossAcc.nonEmpty
-        val forces = pCached.mapPartitions { rows =>
-          val metric = Distances.byName(metricName)
-          val st = bcState.value
-          val t = bcTree.value
-          rows.map { row =>
-            val yi = st.get(row.id).y
-            val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
-            val (ax, ay) =
-              Gradient.attractiveForce(row.js, ps, yi, id => st.get(id).y, metric)
-            val (rx, ry, sq) = t.repulsiveForce(yi(0), yi(1), theta)
-            val (lp, psum) =
-              if (needLoss)
-                Gradient.lossPartsPreSumQ(row.js, ps, yi, id => st.get(id).y, metric)
-              else (0.0, 0.0)
-            Force(row.id, ax, ay, rx, ry, sq, lp, psum)
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-
-        // 3. global sumQ + loss partials in ONE aggregation
-        // (ref TsneHelpers.scala:266); loss = Σ lossPre + (Σ p)·log(sumQ)
-        val aggRow = forces.agg(sum("sumQPart"), sum("lossPre"), sum("pSum")).head()
-        val sumQ = aggRow.getDouble(0)
-        if (needLoss)
-          lossAcc.foreach(_.add(
-            (lossIter, aggRow.getDouble(1) + aggRow.getDouble(2) * math.log(sumQ))))
-
-        // 5. update via broadcast state — no shuffle, no join
-        val minGain = params.minGain
-        val lr = params.learningRate
-        val mom = momentum
-        val newState = forces.map { f =>
-          val w = bcState.value.get(f.id)
-          val grad = Array(f.ax - f.rx / sumQ, f.ay - f.ry / sumQ)
-          val (ny, ns, ng) = Gradient.update(w.y, w.lastGrad, w.gains, grad,
-            minGain, mom, lr)
-          WorkingSet(f.id, ny, ns, ng)
-        }
-        val next = newState.localCheckpoint()
-        forces.unpersist()
-        bcState.destroy()
-        bcTree.destroy()
-        state = next
-        it += 1
-      }
+      val needLoss = lossIter % 10 == 0 && lossAcc.nonEmpty
+      val forces = forcesPass(p, bcState, bcTree, params, factor, needLoss)
+      val next = stateUpdate(forces, bcState, params, momentum,
+        globalSumQ(forces, lossIter, needLoss, lossAcc)).localCheckpoint()
+      forces.unpersist()
+      bcState.destroy()
+      bcTree.destroy()
+      Release.checkpoint(state)
+      state = next
     }
-
-    // final centering (the stored state is post-update, pre-center) —
-    // sorted like every superstep collect, so the centering sums don't
-    // re-introduce partition-order FP noise at the very last step
-    val fin = state.collect().sortBy(_.id)
-    var mx = 0.0; var my = 0.0
-    fin.foreach { w => mx += w.y(0); my += w.y(1) }
-    mx /= fin.length; my /= fin.length
-    pCached.unpersist()
-    spark.createDataset(fin.map(w => Point(w.id, Array(w.y(0) - mx, w.y(1) - my))).toSeq)
+    centeredResult(state)
   }
 
   // ================= state-distributed path (100×-scale) =================
@@ -412,12 +391,9 @@ object Optimizer {
     *
     *   1. centering means via one distributed aggregate (2 doubles to the
     *      driver) and a map — not a driver pass over collected state;
-    *   2. the Barnes-Hut tree, gated like the broadcast path: below
-    *      [[Params.distTreeMinPoints]] only the N×2 embedding coordinates
-    *      are collected (id-sorted, so insertion order — hence
-    *      center-of-mass summation — matches the local kernel), above it
-    *      [[BhTree.buildRdd]] builds executor-side with a distributed
-    *      root-cell pass and zero point collection;
+    *   2. the Barnes-Hut tree, built on the driver from only the N×2
+    *      embedding coordinates (id-sorted, so insertion order — hence
+    *      center-of-mass summation — matches the local kernel);
     *   3. neighbor positions via a join: a static `(i, pos, j, p)` edge
     *      table (exploded from P once, hash-partitioned by `j` so the
     *      exchange is reused every superstep) joins the state on `j`,
@@ -440,13 +416,14 @@ object Optimizer {
     * with the same FP-order caveats as the broadcast path (global sums run
     * in partition order).
     */
-  def optimizeStateDistributed(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet],
-                               params: Params,
-                               lossAcc: Option[MapAccumulator]): Dataset[Point] = {
+  private[tsne] def optimizeStateDistributed(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet],
+                                             params: Params,
+                                             lossAcc: Option[MapAccumulator]): Dataset[Point] = {
     val spark = p.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
-    val metricName = params.metric
+    val (metricName, theta) = (params.metric, params.theta)
+    val (minGain, lr) = (params.minGain, params.learningRate)
 
     // Static neighbor-edge table — exploded once, partitioned by neighbor id
     // so every superstep's y-lookup join reuses this exchange.
@@ -459,116 +436,88 @@ object Optimizer {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var state: Dataset[WorkingSet] = ws0.localCheckpoint()
-    val n = state.count()
     var needCenter = false
 
-    for ((iters, momentum, exaggerate, offset) <- phases(params)) {
-      val factor = if (exaggerate) params.earlyExaggeration else 1.0
-      var it = 1
-      while (it <= iters) {
-        val lossIter = it + offset
+    for ((lossIter, momentum, factor) <- supersteps(params, phases(params))) {
+      // 1. center — distributed means, then a map; first superstep uses
+      // the initial working set as-is, like every other path
+      val centered =
+        if (needCenter) {
+          val (mx, my) = state.agg(avg(col("y")(0)), avg(col("y")(1)))
+            .as[(Double, Double)].head()
+          state.map(w =>
+            WorkingSet(w.id, Array(w.y(0) - mx, w.y(1) - my), w.lastGrad, w.gains))
+        } else state
+      needCenter = true
+      val st = centered.persist(StorageLevel.MEMORY_AND_DISK)
 
-        // 1. center — distributed means, then a map; first superstep uses
-        // the initial working set as-is, like every other path
-        val centered =
-          if (needCenter) {
-            val m = state.agg(avg(col("y")(0)), avg(col("y")(1)))
-              .as[(Double, Double)].head()
-            val (mx, my) = m
-            state.map(w =>
-              WorkingSet(w.id, Array(w.y(0) - mx, w.y(1) - my), w.lastGrad, w.gains))
-          } else state
-        needCenter = true
-        val st = centered.persist(StorageLevel.MEMORY_AND_DISK)
+      // 2. tree — only the 2 coordinates per point come to the driver
+      val bcTree = sc.broadcast(BhTree.build(st.select(col("id"), col("y"))
+        .as[(Long, Array[Double])].collect().sortBy(_._1).map(_._2)))
 
-        // 2. tree — executor-built past distTreeMinPoints (zero collection),
-        // else only the 2 coordinates per point come to the driver
-        val tree =
-          if (n >= params.distTreeMinPoints)
-            BhTree.buildRdd(st.rdd.map(w => (w.y(0), w.y(1))), depth = 2)
-          else
-            BhTree.build(st.select(col("id"), col("y")).as[(Long, Array[Double])]
-              .collect().sortBy(_._1).map(_._2))
-        val bcTree = sc.broadcast(tree)
+      // 3. neighbor positions via join, re-assembled in original array order
+      val yTbl = st.select(col("id").as("j"),
+        col("y")(0).as("yj0"), col("y")(1).as("yj1"))
+      val neigh = edges.join(yTbl, "j")
+        .groupBy(col("i"))
+        .agg(sort_array(collect_list(
+          struct(col("pos"), col("j"), col("pj"), col("yj0"), col("yj1")))).as("ns"))
+      // LEFT join: a point whose affinity row is empty (no edges) still
+      // exists — it feels zero attractive force but full repulsion and
+      // centering. An inner join would silently drop it from the
+      // embedding; the local path keeps it (empty js array).
+      val joined = st.toDF()
+        .join(neigh, col("id") === col("i"), "left")
+        .select(col("id"), col("y"), col("lastGrad"), col("gains"),
+          coalesce(col("ns"), typedLit(Array.empty[NeighborRef])).as("ns"))
+        .as[StateNeighbors]
 
-        // 3. neighbor positions via join, re-assembled in original array order
-        val yTbl = st.select(col("id").as("j"),
-          col("y")(0).as("yj0"), col("y")(1).as("yj1"))
-        val neigh = edges.join(yTbl, "j")
-          .groupBy(col("i"))
-          .agg(sort_array(collect_list(
-            struct(col("pos"), col("j"), col("pj"), col("yj0"), col("yj1")))).as("ns"))
-        // LEFT join: a point whose affinity row is empty (no edges) still
-        // exists — it feels zero attractive force but full repulsion and
-        // centering. An inner join would silently drop it from the
-        // embedding; the local path keeps it (empty js array).
-        val joined = st.toDF()
-          .join(neigh, col("id") === col("i"), "left")
-          .select(col("id"), col("y"), col("lastGrad"), col("gains"),
-            coalesce(col("ns"), typedLit(Array.empty[NeighborRef])).as("ns"))
-          .as[StateNeighbors]
-
-        // 4. fused forces pass, state carried through
-        val theta = params.theta
-        val needLoss = lossIter % 10 == 0 && lossAcc.nonEmpty
-        val forces = joined.mapPartitions { rows =>
-          val metric = Distances.byName(metricName)
-          val t = bcTree.value
-          rows.map { row =>
-            val k = row.ns.length
-            val js = new Array[Long](k)
-            val ps = new Array[Double](k)
-            val ymap = new java.util.HashMap[Long, Array[Double]](k * 2)
-            var q = 0
-            while (q < k) {
-              val e = row.ns(q)
-              js(q) = e.j
-              ps(q) = if (factor == 1.0) e.pj else e.pj * factor
-              ymap.put(e.j, Array(e.yj0, e.yj1))
-              q += 1
-            }
-            val yOf: Long => Array[Double] = id => ymap.get(id)
-            val (ax, ay) = Gradient.attractiveForce(js, ps, row.y, yOf, metric)
-            val (rx, ry, sq) = t.repulsiveForce(row.y(0), row.y(1), theta)
-            val (lp, psum) =
-              if (needLoss) Gradient.lossPartsPreSumQ(js, ps, row.y, yOf, metric)
-              else (0.0, 0.0)
-            ForceState(row.id, ax, ay, rx, ry, sq, lp, psum,
-              row.y, row.lastGrad, row.gains)
+      // 4. fused forces pass, state carried through
+      val needLoss = lossIter % 10 == 0 && lossAcc.nonEmpty
+      val forces = joined.mapPartitions { rows =>
+        val metric = Distances.byName(metricName)
+        val t = bcTree.value
+        rows.map { row =>
+          val k = row.ns.length
+          val js = new Array[Long](k)
+          val ps = new Array[Double](k)
+          val ymap = new java.util.HashMap[Long, Array[Double]](k * 2)
+          var q = 0
+          while (q < k) {
+            val e = row.ns(q)
+            js(q) = e.j
+            ps(q) = if (factor == 1.0) e.pj else e.pj * factor
+            ymap.put(e.j, Array(e.yj0, e.yj1))
+            q += 1
           }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-
-        // 5. ONE global aggregate: sumQ + the loss partials
-        val aggRow = forces.agg(sum("sumQPart"), sum("lossPre"), sum("pSum")).head()
-        val sumQ = aggRow.getDouble(0)
-        if (needLoss)
-          lossAcc.foreach(_.add(
-            (lossIter, aggRow.getDouble(1) + aggRow.getDouble(2) * math.log(sumQ))))
-
-        // 6. update — a pure map, then cut lineage
-        val minGain = params.minGain
-        val lr = params.learningRate
-        val mom = momentum
-        val newState = forces.map { f =>
-          val grad = Array(f.ax - f.rx / sumQ, f.ay - f.ry / sumQ)
-          val (ny, nstep, ng) = Gradient.update(f.y, f.lastGrad, f.gains, grad,
-            minGain, mom, lr)
-          WorkingSet(f.id, ny, nstep, ng)
+          val yOf: Long => Array[Double] = id => ymap.get(id)
+          val (ax, ay) = Gradient.attractiveForce(js, ps, row.y, yOf, metric)
+          val (rx, ry, sq) = t.repulsiveForce(row.y(0), row.y(1), theta)
+          val (lp, psum) =
+            if (needLoss) Gradient.lossPartsPreSumQ(js, ps, row.y, yOf, metric)
+            else (0.0, 0.0)
+          ForceState(row.id, ax, ay, rx, ry, sq, lp, psum,
+            row.y, row.lastGrad, row.gains)
         }
-        val next = newState.localCheckpoint()
-        forces.unpersist()
-        st.unpersist()
-        bcTree.destroy()
-        state = next
-        it += 1
-      }
-    }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // final centering — distributed like every superstep's
-    val m = state.agg(avg(col("y")(0)), avg(col("y")(1))).as[(Double, Double)].head()
-    val (mx, my) = m
+      // 5. ONE global aggregate, then 6. the update — a pure map — and a
+      // lineage cut that replaces the previous state checkpoint
+      val sumQ = globalSumQ(forces, lossIter, needLoss, lossAcc)
+      val next = forces.map { f =>
+        val grad = Array(f.ax - f.rx / sumQ, f.ay - f.ry / sumQ)
+        val (ny, nstep, ng) = Gradient.update(f.y, f.lastGrad, f.gains, grad,
+          minGain, momentum, lr)
+        WorkingSet(f.id, ny, nstep, ng)
+      }.localCheckpoint()
+      forces.unpersist()
+      st.unpersist()
+      bcTree.destroy()
+      Release.checkpoint(state)
+      state = next
+    }
     edges.unpersist()
-    state.map(w => Point(w.id, Array(w.y(0) - mx, w.y(1) - my)))
+    centeredResult(state)
   }
 
   /** O14 as a standalone operator — one gradient evaluation of KL(P‖Q) at a

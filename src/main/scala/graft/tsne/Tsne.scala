@@ -23,7 +23,7 @@ object Tsne {
     val (p, releaseJointCache) =
       Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
     val ws0 = Optimizer.initWorkingSet(p, params.nComponents, params.seed)
-    // optimize returns driver-localized results in both paths, so the
+    // optimize returns driver-localized results on every path, so the
     // upstream joint-distribution cache can be dropped afterwards
     try Optimizer.optimize(p, ws0, params, lossAcc)
     finally releaseJointCache()
@@ -97,33 +97,32 @@ object Tsne {
     // validate the recall report arguments BEFORE any Spark work: failing
     // after a multi-minute pipeline has already run (and written output)
     // is the worst place to learn an argument was out of range
-    if (a.contains("recallOut")) {
+    val recallOut = a.get("recallOut").map { path =>
       val k = opt("recallK", "10").toInt
       require(k > 0 && k <= neighbors,
         s"--recallK must be in [1, --neighbors]; got $k with neighbors=$neighbors")
+      (path, k)
     }
+    val executionPlan = a.contains("executionPlan")
 
     val lossAcc = new MapAccumulator
     spark.sparkContext.register(lossAcc, "loss")
     // --recallOut reads the kNN graph a second time (as the recall truth);
     // persist it so that read is a cache hit, not a re-run of the full
     // kNN lineage (for bruteforce, a second N² pass)
-    val wantRecall = a.contains("recallOut") && !a.contains("executionPlan")
+    val wantRecall = recallOut.nonEmpty && !executionPlan
     if (wantRecall) knn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      runBody(a, spark, knn, params, lossAcc, outputPath, lossFile)
+      runBody(knn, params, lossAcc, outputPath, lossFile, executionPlan, recallOut)
     } finally if (wantRecall) knn.unpersist()
   }
 
-  private def runBody(a: Map[String, String], spark: SparkSession,
-                      knn: Dataset[Neighbor], params: Optimizer.Params,
-                      lossAcc: MapAccumulator, outputPath: String,
-                      lossFile: String): Unit = {
-    def opt(k: String, d: String) = a.getOrElse(k, d)
-    val neighbors = a.get("neighbors").map(_.toInt)
-      .getOrElse(3 * params.perplexity.toInt)
-
-    if (a.contains("executionPlan")) {
+  /** The pipeline after argument validation: `recallOut` is the validated
+    * `--recallOut` path and `--recallK`. */
+  private def runBody(knn: Dataset[Neighbor], params: Optimizer.Params,
+                      lossAcc: MapAccumulator, outputPath: String, lossFile: String,
+                      executionPlan: Boolean, recallOut: Option[(String, Int)]): Unit = {
+    if (executionPlan) {
       // ref Tsne.scala:89-95 — dump the plan INSTEAD OF executing: the
       // kNN→affinity→init dataflow is lazy end-to-end and the superstep
       // is dumped from unexecuted representative datasets, so this branch
@@ -153,10 +152,7 @@ object Tsne {
       // t-SNE user checks on every run (see graft.tsne.Quality). The truth
       // side re-reads the pipeline's own kNN graph (persisted above), so
       // no kNN lineage re-runs.
-      a.get("recallOut").foreach { path =>
-        val k = opt("recallK", "10").toInt
-        require(k > 0 && k <= neighbors,
-          s"--recallK must be in [1, --neighbors]; got $k with neighbors=$neighbors")
+      recallOut.foreach { case (path, k) =>
         val truth = Knn.topKPerPointRanked(
           knn.toDF().select(col("i"), col("j"), col("dist")), k)
         val row = Quality.neighborRecall(truth, result, k).head()

@@ -29,12 +29,11 @@ object QueryTime {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try rest.tail.foreach { q =>
-      val times = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
+      val times = (1 to 2).map { _ => Release.isolated(spark) {
         val t0 = System.nanoTime()
         SparkEntry.queries(q)(spark, dir).foreach(_ => ())
         (System.nanoTime() - t0) / 1e9
-      }
+      }}
       println(f"QTIME $q run1=${times(0)}%.2f run2=${times(1)}%.2f")
     } finally spark.stop()
   }

@@ -70,4 +70,16 @@ class VerifySpec extends AnyFlatSpec with Matchers with SparkTestBase {
     files should contain("_FAILED")
     files.count(_.endsWith(".parquet")) shouldBe 0
   }
+
+  it should "release the checkpoints a query leaves persistent" in {
+    val out = java.nio.file.Files.createTempDirectory("verify-spec3").toString
+    // clearCache alone leaves a localCheckpoint's RDD resident
+    val checkpointed: (SparkSession, String) => DataFrame =
+      (s, _) => s.range(25).toDF("id").localCheckpoint()
+    SubmittedWork.persistedBy(spark) {
+      Verify.dumpQueries(spark, "unused", out,
+        Seq("q_checkpointed" -> checkpointed)) shouldBe empty
+    } shouldBe 0
+    spark.read.parquet(s"$out/q_checkpointed").count() shouldBe 25
+  }
 }

@@ -64,20 +64,6 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     // sumQ-independent decomposition, so this also pins that identity
     acc.value.keySet shouldBe localLoss.keySet
     for ((k, v) <- localLoss) acc.value(k) shouldBe v +- 1e-9
-
-    // executor-side tree build (treeAggregate subtree merge) agrees too
-    val acc2 = new MapAccumulator
-    s.sparkContext.register(acc2, "loss-test-rddtree")
-    val distPoints2 = Optimizer.optimizeDistributed(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0),
-      params.copy(distTreeMinPoints = 0), Some(acc2)).collect()
-    for (p <- distPoints2; d <- 0 until 2) {
-      withClue(s"rdd-tree y(${p.id})($d): ") {
-        p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9
-      }
-    }
-    acc2.value.keySet shouldBe localLoss.keySet
-    for ((k, v) <- localLoss) acc2.value(k) shouldBe v +- 1e-9
   }
 
   "optimizeStateDistributed" should "match the local path on the same input" in {
@@ -108,21 +94,6 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     }
     acc.value.keySet shouldBe localLoss.keySet
     for ((k, v) <- localLoss) acc.value(k) shouldBe v +- 1e-9
-
-    // the fully driver-free variant (executor-built tree, zero point
-    // collection anywhere in the superstep) agrees too
-    val acc2 = new MapAccumulator
-    s.sparkContext.register(acc2, "loss-test-statedist-rddtree")
-    val distPoints2 = Optimizer.optimizeStateDistributed(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0),
-      params.copy(distTreeMinPoints = 0), Some(acc2)).collect()
-    for (p <- distPoints2; d <- 0 until 2) {
-      withClue(s"driver-free y(${p.id})($d): ") {
-        p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9
-      }
-    }
-    acc2.value.keySet shouldBe localLoss.keySet
-    for ((k, v) <- localLoss) acc2.value(k) shouldBe v +- 1e-9
   }
 
   it should "keep a point with an empty affinity row in the embedding" in {
@@ -164,32 +135,6 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     for ((id, v) <- viaStateDist; d <- 0 until 2) v(d) shouldBe viaLocal(id)(d) +- 1e-9
   }
 
-  "BhTree.buildRdd" should "agree with the driver-side build" in {
-    val s = spark
-    val rng = new scala.util.Random(13)
-    val pts = Array.fill(800)(Array(rng.nextGaussian(), rng.nextGaussian()))
-    // a couple of exact duplicates exercise the mass-packet merge path
-    pts(100) = pts(7).clone(); pts(200) = pts(7).clone()
-    val driverTree = BhTree.build(pts)
-    val rddTree = BhTree.buildRdd(
-      s.sparkContext.parallelize(pts.toIndexedSeq.map(p => (p(0), p(1))), 8))
-    rddTree.size shouldBe pts.length // total mass is exact (integer counts)
-    for (p <- pts.take(60)) {
-      // θ=0 descends to the leaves — both trees compute the exact
-      // repulsion over the identical point set; θ=0.25 groups by cells,
-      // whose centers of mass differ only in summation order
-      for (theta <- Seq(0.0, 0.25)) {
-        val (fx0, fy0, sq0) = driverTree.repulsiveForce(p(0), p(1), theta)
-        val (fx1, fy1, sq1) = rddTree.repulsiveForce(p(0), p(1), theta)
-        withClue(s"theta=$theta at (${p(0)}, ${p(1)}): ") {
-          fx1 shouldBe fx0 +- 1e-12
-          fy1 shouldBe fy0 +- 1e-12
-          sq1 shouldBe sq0 +- 1e-12
-        }
-      }
-    }
-  }
-
   "optimize" should "take the distributed path when maxLocalPEntries = 0 and agree" in {
     val s = spark
     import s.implicits._
@@ -208,6 +153,23 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
 
     viaDist.keySet shouldBe viaLocal.keySet
     for ((id, v) <- viaDist; d <- 0 until 2) v(d) shouldBe viaLocal(id)(d) +- 1e-9
+  }
+
+  it should "leave no RDD persistent on the broadcast and state dispatches" in {
+    val s = spark
+    import s.implicits._
+    val pRows = toRows(Goldens.denseJointProbabilities)
+    val ws0 = Goldens.initialEmbedding.map(p =>
+      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
+    val broadcast = superstepParams.copy(iterations = 5, maxLocalPEntries = 0L)
+    // P, every superseded state checkpoint, the initial and the final one
+    for (params <- Seq(broadcast, broadcast.copy(maxBroadcastStateRows = 0L)))
+      withClue(s"maxBroadcastStateRows=${params.maxBroadcastStateRows}: ") {
+        graft.SubmittedWork.persistedBy(s) {
+          Optimizer.optimize(s.createDataset(pRows.toSeq), s.createDataset(ws0), params)
+            .collect().length shouldBe ws0.length
+        } shouldBe 0
+      }
   }
 
   "initWorkingSet" should "initialize gradient to zero, gains to one, y ~ N(0, 1e-4), seeded" in {

@@ -85,12 +85,6 @@ object StateDistBench {
       measure("statedist") {
         Optimizer.optimizeStateDistributed(pRows, ws0, params, None).foreach(_ => ())
       }
-      // executor-built tree: no point collection at all — remaining driver
-      // traffic is the treeAggregate subtree merge
-      measure("statedist-rddtree") {
-        Optimizer.optimizeStateDistributed(pRows, ws0,
-          params.copy(distTreeMinPoints = 0), None).foreach(_ => ())
-      }
     } finally spark.stop()
   }
 }

@@ -210,6 +210,8 @@ class TsneE2ESpec extends AnyFlatSpec with Matchers with org.scalatest.Inspector
     val txt = scala.io.Source.fromFile(planFile).mkString
     txt should include("Physical Plan")
     txt should include("superstep forces")
+    txt should include("superstep global aggregation")
+    txt should include("superstep state update")
     new java.io.File(outDir).exists() shouldBe false
     jobs.get() shouldBe 1 // ONLY the sentinel — the plan dump ran no job
     planFile.delete()
