@@ -26,7 +26,7 @@ object Bench {
         .select(col("id"), array((0 until 8).map(d => rand(d)): _*).as("vec"))
         .as[graft.tsne.Point]
       // covers: cross join + native distance exprs + ranking window + hash
-      // agg + the typed groupByKey/flatMapGroups path (per-group search)
+      // agg + the affinity kernel's shuffles (per-point search, symmetrize)
       graft.tsne.Affinities.pairwiseAffinities(
         graft.tsne.Knn.bruteForce(warm, 5, "sqeuclidean"), 2.0).count()
       graft.tsne.Affinities.jointDistribution(

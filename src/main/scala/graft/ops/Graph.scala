@@ -7,6 +7,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{ReduceShare, SuperstepPartitioner}
+
 /** Link-graph scoring — the crawl-curation signal family: PageRank-style
   * centrality over an edge table, the score CommonCrawl-derived pipelines
   * use to weight domains/URLs before sampling (harmonic/PageRank
@@ -77,24 +79,6 @@ object Graph {
                            checkpointEvery: Int = 6): DataFrame =
     rankSupersteps(edges, Some(seeds), iters, scale, checkpointEvery)
 
-  /** Shuffle key of one map task's dangling-mass partial bound for reduce
-    * partition `partition`. */
-  private final case class DanglingShare(partition: Int)
-
-  /** Hash partitioning of node ids (the `HashPartitioner` rule) that sends
-    * each [[DanglingShare]] to the reduce partition it names, so every
-    * reduce partition receives the full dangling mass in the same shuffle
-    * as its contributions. */
-  private final case class SuperstepPartitioner(numPartitions: Int)
-      extends Partitioner {
-    def getPartition(key: Any): Int = key match {
-      case DanglingShare(p) => p
-      case k =>
-        val m = k.hashCode % numPartitions
-        if (m < 0) m + numPartitions else m
-    }
-  }
-
   /** A node's static superstep state: its out-neighbours (duplicates kept,
     * so multiplicity counts) and whether it takes restart and dangling
     * mass (every node in PageRank, the seeds in PPR). */
@@ -116,7 +100,7 @@ object Graph {
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1, got $checkpointEvery")
     val spark = edges.sparkSession
-    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val part = SuperstepPartitioner.of(spark)
     val everyNode = seeds.isEmpty
     val e = longPairs(edges.select("src", "dst"))
     val seedIds = seeds.fold(spark.sparkContext.emptyRDD[(Long, Unit)])(
@@ -146,15 +130,13 @@ object Graph {
         }
         // `++` takes its operand by name: the partials are built after
         // the contributions are drained, when `dm` is final
-        contribs ++ (if (dm == 0L) Iterator.empty
-                     else Iterator.tabulate(part.numPartitions)(p =>
-                       (DanglingShare(p): Any, dm)))
+        contribs ++ (if (dm == 0L) Iterator.empty else part.shares(dm))
       }.reduceByKey(part, _ + _)
       ranks = adj.zipPartitions(sums) { (as, ss) =>
         val contrib = new mutable.LongMap[Long]
         var dm = 0L
         ss.foreach {
-          case (DanglingShare(_), x) => dm = x
+          case (ReduceShare(_), x) => dm = x
           case (v: Long, x) => contrib(v) = x
         }
         val share = dm / restartNodes
@@ -321,7 +303,7 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges.sparkSession
-    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val part = SuperstepPartitioner.of(spark)
     val idType = edges.select(least(col("src"), col("dst"))).schema.head.dataType
     val adj = undirectedAdjacency(longPairs(edges.select("src", "dst")), None, part)
     val peels = (d: Int) => d >= 0 && d < k
@@ -360,7 +342,7 @@ object Graph {
     * labels. Ids without an edge skip the rounds and are unioned back. */
   private[graft] def components(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
-    val part = SuperstepPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val part = SuperstepPartitioner.of(spark)
     val id = nodes.schema.head
     val ids = nodes.select(col(id.name).cast("long")).na.drop().rdd.map(_.getLong(0))
     val adj = undirectedAdjacency(longPairs(edges), Some(ids), part)

@@ -1,10 +1,17 @@
 package graft.tsne
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Dataset
+
+import graft.{ReduceShare, SuperstepPartitioner}
 
 /** High-dimensional affinity computation (ref: `TsneHelpers.scala:162-196,
-  * 434-504` and the sparse-row assembly at `Tsne.scala:119-129`).
+  * 434-504` and the sparse-row assembly at `Tsne.scala:119-129`): the
+  * perplexity calibration, and the affinity kernel that turns kNN
+  * distances into P's sparse rows in two shuffles on the superstep
+  * partitioner (see [[highDimAffinities]]).
   */
 object Affinities {
 
@@ -69,64 +76,161 @@ object Affinities {
   // ---------------- O10: pairwise affinities ----------------------------
 
   /** Conditional distribution p_{j|i} from kNN distances
-    * (ref `TsneHelpers.scala:162-180`): one shuffle on `i`, then the pure
-    * per-group binary search. `flatMapGroups` is the Spark form of the
-    * reference's `groupBy(i).reduceGroup`. */
+    * (ref `TsneHelpers.scala:162-180`): the first step of the affinity
+    * kernel ([[conditional]]), a shuffle on `i` and the per-point
+    * bisection, as a Dataset. */
   def pairwiseAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[Neighbor] = {
     val spark = knn.sparkSession
     import spark.implicits._
-    knn.groupByKey(_.i)
-      .flatMapGroups { (i, rows) =>
-        val arr = rows.toArray
-        val p = calibrateBeta(arr.map(_.dist), perplexity)
-        arr.indices.iterator.map(k => Neighbor(i, arr(k).j, p(k)))
-      }
+    spark.createDataset(conditional(knn.rdd, perplexity, SuperstepPartitioner.of(spark)))
   }
 
-  // ---------------- O11: joint distribution ------------------------------
+  // ---------------- the affinity kernel: kNN → P in sparse rows ----------
 
-  /** Symmetrize + normalize (ref `TsneHelpers.scala:182-196`):
-    * p_ij = (p_{j|i} + p_{i|j}) / Σ. Expressed relationally — union with the
-    * transposed copy, hash-aggregate on (i, j) (partial map-side combine for
-    * free), then divide by the global sum via a 1-row cross join.
-    *
-    * The symmetrized aggregate is persisted before the global sum is
-    * derived from it: the normalization needs two passes over `sym` (one to
-    * reduce it to Σ, one to divide), and without a cache Spark re-executes
-    * the whole upstream — including the O(N²) kNN — once per pass
-    * (this was 73% of the round-1 bench, VERDICT r1 "what's wrong" #1).
-    * The cache holds N·k skinny rows, safely evictable (MEMORY_AND_DISK).
-    *
-    * (The reference's `max(_, Double.MinValue)` clamps at `:191,194` are
-    * no-ops — scala `Double.MinValue` is −1.8e308 — so plain division is
-    * faithful; SURVEY.md §2 O11.) */
-  def jointDistribution(p: Dataset[Neighbor]): Dataset[Neighbor] =
-    jointDistributionWithRelease(p)._1
+  /** One map task's entries `(j, v)` of one row. */
+  private final case class RowPart(js: Array[Long], vs: Array[Double])
 
-  /** [[jointDistribution]] plus a release handle for the internal cache:
-    * call it once the result has been fully consumed (the pipeline does so
-    * after `optimize` returns). Without releasing, the cached symmetrized
-    * aggregate lives until the session ends — harmless for one-shot jobs,
-    * a leak for long-lived sessions. */
-  def jointDistributionWithRelease(p: Dataset[Neighbor]): (Dataset[Neighbor], () => Unit) = {
+  /** Folds a map task's `(row, j, v)` entries into one [[RowPart]] per
+    * row, so a shuffle by row id moves one record per row and task. */
+  private final class RowFolder {
+    private val rows =
+      new mutable.LongMap[(mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofDouble)]
+
+    def add(row: Long, j: Long, v: Double): Unit = {
+      val (js, vs) = rows.getOrElseUpdate(row,
+        (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofDouble))
+      js += j
+      vs += v
+    }
+
+    def parts: Iterator[(Any, Any)] =
+      rows.iterator.map { case (row, (js, vs)) => (row, RowPart(js.result(), vs.result())) }
+  }
+
+  /** A sum of doubles kept exact: the finite terms as a `BigDecimal`,
+    * and the NaN and infinite ones, which a double sum would propagate,
+    * as a double. */
+  private final case class ExactSum(finite: java.math.BigDecimal, other: Double) {
+    def +(v: Double): ExactSum =
+      if (java.lang.Double.isFinite(v)) ExactSum(finite.add(new java.math.BigDecimal(v)), other)
+      else ExactSum(finite, other + v)
+    def +(o: ExactSum): ExactSum = ExactSum(finite.add(o.finite), other + o.other)
+    /** The sum, rounded once. */
+    def toDouble: Double = finite.doubleValue + other
+  }
+  private val ZeroSum = ExactSum(java.math.BigDecimal.ZERO, 0.0)
+
+  /** A reduce partition's rows: every [[RowPart]] of one row id gathered
+    * into `(j, v)` entries, plus the sum of the [[graft.ReduceShare]]
+    * partials it received (zero when none were sent). */
+  private def gather(received: Iterator[(Any, Any)])
+      : (Iterator[(Long, Array[(Long, Double)])], ExactSum) = {
+    val parts = new mutable.LongMap[List[RowPart]]
+    var total = ZeroSum
+    received.foreach {
+      case (ReduceShare(_), partial: ExactSum) => total += partial
+      case (row: Long, rp: RowPart) => parts(row) = rp :: parts.getOrElse(row, Nil)
+    }
+    val rows = parts.iterator.map { case (row, rps) =>
+      (row, rps.iterator.flatMap(rp => rp.js.iterator.zip(rp.vs.iterator)).toArray)
+    }
+    (rows, total)
+  }
+
+  /** O10, the reference's `groupBy(i).reduceGroup`: the kNN rows shuffled
+    * by `i` (one [[RowPart]] per point and map task), then each point's
+    * bisection. A point's neighbours are calibrated in `(dist, j)` order,
+    * so its sums, and hence p, do not depend on the order the rows arrive
+    * in; nearest first is the order the [[Knn]] methods emit them in, so
+    * on their output p is bit-identical to a bisection in arrival order.
+    * Within [[highDimAffinities]] the output stays in its reduce tasks,
+    * where [[jointRows]] picks it up without another stage. */
+  private def conditional(knn: RDD[Neighbor], perplexity: Double,
+                          part: SuperstepPartitioner): RDD[Neighbor] =
+    knn.mapPartitions { rows =>
+      val folder = new RowFolder
+      rows.foreach(n => folder.add(n.i, n.j, n.dist))
+      folder.parts
+    }.partitionBy(part).mapPartitions { received =>
+      gather(received)._1.flatMap { case (i, neighbours) =>
+        neighbours.sortInPlaceWith { (a, b) =>
+          val c = java.lang.Double.compare(a._2, b._2)
+          if (c != 0) c < 0 else a._1 < b._1
+        }
+        val p = calibrateBeta(neighbours.map(_._2), perplexity)
+        neighbours.indices.iterator.map(k => Neighbor(i, neighbours(k)._1, p(k)))
+      }
+    }
+
+  /** Symmetrize + normalize + sparse-row assembly (O11 + O12, ref
+    * `TsneHelpers.scala:182-196` and `Tsne.scala:119-129`) in ONE shuffle:
+    * p_ij = (p_{j|i} + p_{i|j}) / Σ, grouped by row id `i` into parallel
+    * `(js, ps)` arrays sorted by `j`.
+    *
+    * Each map task sends every conditional entry to both of its rows, `i`
+    * and `j`. Next to those it sends its partial of the normalization
+    * total to every reduce partition under a [[graft.ReduceShare]] key
+    * (the trick the PageRank kernel uses for its dangling mass), so the
+    * same shuffle by row id carries both and no aggregate job runs. A
+    * reduce task sums its rows' entries per `(row, j)` in `(j, p)` order
+    * and divides by the total.
+    *
+    * The total is Σ over the symmetrized entries, i.e. 2·Σ p_{j|i}. It is
+    * summed exactly ([[ExactSum]]) and rounded once, so P is
+    * bit-identical at every shuffle-partition count and row arrival
+    * order. (The reference's `max(_, Double.MinValue)` clamps at
+    * `:191,194` are no-ops, since scala `Double.MinValue` is −1.8e308, so
+    * plain division is faithful; SURVEY.md §2 O11.) */
+  private def jointRows(cond: RDD[Neighbor], part: SuperstepPartitioner): RDD[AffinityRow] =
+    cond.mapPartitions { entries =>
+      val folder = new RowFolder
+      var sum = ZeroSum
+      entries.foreach { n =>
+        folder.add(n.i, n.j, n.dist)
+        folder.add(n.j, n.i, n.dist)
+        sum += n.dist
+      }
+      folder.parts ++ part.shares(sum)
+    }.partitionBy(part).mapPartitions { received =>
+      val (rows, sum) = gather(received)
+      val total = 2 * sum.toDouble
+      rows.map { case (id, es) => symmetrizedRow(id, es, total) }
+    }
+
+  /** Row `id` of P from its entries: sorted by `(j, p)`, the values of one
+    * `j` summed in that order, each sum divided by `total`. */
+  private def symmetrizedRow(id: Long, es: Array[(Long, Double)], total: Double): AffinityRow = {
+    es.sortInPlace()(Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering))
+    val js = new mutable.ArrayBuilder.ofLong
+    val ps = new mutable.ArrayBuilder.ofDouble
+    var k = 0
+    while (k < es.length) {
+      val j = es(k)._1
+      var p = es(k)._2
+      k += 1
+      while (k < es.length && es(k)._1 == j) { p += es(k)._2; k += 1 }
+      js += j
+      ps += p / total
+    }
+    AffinityRow(id, js.result(), ps.result())
+  }
+
+  /** O11 — the joint distribution p_ij of conditional affinities `p`, as
+    * `(i, j, p)` triples: the rows of [[jointRows]], exploded. */
+  def jointDistribution(p: Dataset[Neighbor]): Dataset[Neighbor] = {
     val spark = p.sparkSession
     import spark.implicits._
-    val df = p.toDF()
-    val sym = df.union(df.select(col("j").as("i"), col("i").as("j"), col("dist")))
-      .groupBy("i", "j").agg(sum("dist").as("dist"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = sym.agg(sum("dist").as("total"))
-    val out = sym.crossJoin(total)
-      .select(col("i"), col("j"), (col("dist") / col("total")).as("dist"))
-      .as[Neighbor]
-    (out, () => { sym.unpersist(); () })
+    spark.createDataset(jointRows(p.rdd, SuperstepPartitioner.of(spark)).flatMap(r =>
+      r.js.indices.iterator.map(k => Neighbor(r.id, r.js(k), r.ps(k)))))
   }
 
   // ---------------- O12: COO → sparse-row assembly -----------------------
 
-  /** Group the joint distribution by row id into parallel (j, p) arrays,
-    * sorted by j (ref `Tsne.scala:119-129` builds a Breeze SparseVector of
-    * fake capacity n²; only the active entries matter). One hash shuffle. */
+  /** Group a joint distribution given as triples by row id into parallel
+    * (j, p) arrays, sorted by j (ref `Tsne.scala:119-129` builds a Breeze
+    * SparseVector of fake capacity n²; only the active entries matter).
+    * One hash shuffle. [[highDimAffinities]] assembles its rows inside
+    * the [[jointRows]] kernel instead. */
   def toAffinityRows(joint: Dataset[Neighbor]): Dataset[AffinityRow] = {
     val spark = joint.sparkSession
     import spark.implicits._
@@ -137,15 +241,30 @@ object Affinities {
       }
   }
 
-  /** Full affinity pipeline: kNN distances → P as sparse rows, with the
-    * early-exaggeration factor applied lazily by the optimizer. Returns
-    * the release handle of the internal joint-distribution cache. */
-  def highDimAffinitiesWithRelease(knn: Dataset[Neighbor],
-                                   perplexity: Double): (Dataset[AffinityRow], () => Unit) = {
-    val (joint, release) = jointDistributionWithRelease(pairwiseAffinities(knn, perplexity))
-    (toAffinityRows(joint), release)
+  /** The affinity kernel: kNN distances → P as sparse rows, with the
+    * early-exaggeration factor applied lazily by the optimizer. Two
+    * shuffles, both on [[graft.SuperstepPartitioner]]: the kNN rows by
+    * `i` ([[conditional]]), then the conditional entries by row id
+    * ([[jointRows]]), the calibration running in the second one's map
+    * tasks. `Dataset.rdd` runs the exchanges `knn`'s own plan has (AQE
+    * materializes them) when P is built; the kernel's two shuffles run
+    * with the caller's first action. */
+  def highDimAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[AffinityRow] = {
+    val spark = knn.sparkSession
+    import spark.implicits._
+    spark.createDataset(affinityRows(knn, perplexity))
   }
 
-  def highDimAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[AffinityRow] =
-    highDimAffinitiesWithRelease(knn, perplexity)._1
+  /** [[highDimAffinities]] as an RDD, the lineage `--executionPlan` dumps. */
+  private[tsne] def affinityRows(knn: Dataset[Neighbor], perplexity: Double): RDD[AffinityRow] = {
+    val part = SuperstepPartitioner.of(knn.sparkSession)
+    jointRows(conditional(knn.rdd, perplexity, part), part)
+  }
+
+  /** [[highDimAffinities]] with a release handle, for callers written
+    * against the form that returned one. P holds no cache any more, so
+    * the handle does nothing. */
+  def highDimAffinitiesWithRelease(knn: Dataset[Neighbor],
+                                   perplexity: Double): (Dataset[AffinityRow], () => Unit) =
+    (highDimAffinities(knn, perplexity), () => ())
 }

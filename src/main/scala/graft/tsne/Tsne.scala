@@ -16,17 +16,14 @@ import org.apache.spark.sql.functions.col
 object Tsne {
 
   /** E2 — the library pipeline (ref `Tsne.scala:105-136`):
-    * kNN triples → pairwise affinities → joint distribution → sparse rows →
-    * init → 3-phase optimize. */
+    * kNN triples → P as sparse rows ([[Affinities.highDimAffinities]]:
+    * pairwise affinities, then symmetrize + normalize + row assembly in
+    * one kernel) → init → 3-phase optimize. */
   def computeEmbedding(knn: Dataset[Neighbor], params: Optimizer.Params,
                        lossAcc: Option[MapAccumulator] = None): Dataset[Point] = {
-    val (p, releaseJointCache) =
-      Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
-    val ws0 = Optimizer.initWorkingSet(p, params.nComponents, params.seed)
-    // optimize returns driver-localized results on every path, so the
-    // upstream joint-distribution cache can be dropped afterwards
-    try Optimizer.optimize(p, ws0, params, lossAcc)
-    finally releaseJointCache()
+    val p = Affinities.highDimAffinities(knn, params.perplexity)
+    Optimizer.optimize(p, Optimizer.initWorkingSet(p, params.nComponents, params.seed),
+      params, lossAcc)
   }
 
   def main(args: Array[String]): Unit = {
@@ -123,23 +120,25 @@ object Tsne {
                       lossAcc: MapAccumulator, outputPath: String, lossFile: String,
                       executionPlan: Boolean, recallOut: Option[(String, Int)]): Unit = {
     if (executionPlan) {
-      // ref Tsne.scala:89-95 — dump the plan INSTEAD OF executing: the
-      // kNN→affinity→init dataflow is lazy end-to-end and the superstep
-      // is dumped from unexecuted representative datasets, so this branch
-      // submits ZERO Spark jobs (round-8 verdict: the previous spelling
-      // ran the full optimizer loop and then printed the result's plan —
-      // a 300-iteration price for "show me the plan")
-      val (pDs, release) =
-        Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
-      try {
-        val ws0 = Optimizer.initWorkingSet(pDs, params.nComponents, params.seed)
-        val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
-        pw.write(
-          "== kNN / affinity pipeline ==\n" + pDs.queryExecution.toString +
-            "\n== init working set ==\n" + ws0.queryExecution.toString +
-            "\n" + Optimizer.superstepPlanString(pDs, params))
-        pw.close()
-      } finally release()
+      // ref Tsne.scala:89-95 — dump the plan INSTEAD OF executing. This
+      // branch submits ZERO Spark jobs. The kNN is dumped as its lazy
+      // plan. The affinity kernel is an RDD, and building it over that
+      // kNN would run the kNN's exchanges (`Dataset.rdd` materializes AQE
+      // stages), so its lineage is dumped over an empty kNN, as the
+      // superstep is dumped over representative datasets
+      val spark = knn.sparkSession
+      import spark.implicits._
+      val kernel = Affinities.affinityRows(spark.emptyDataset[Neighbor], params.perplexity)
+      val pDs = spark.createDataset(kernel)
+      val ws0 = Optimizer.initWorkingSet(pDs, params.nComponents, params.seed)
+      val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
+      pw.write(
+        "== kNN ==\n" + knn.queryExecution.toString +
+          "\n== affinity kernel (RDD lineage, over an empty kNN) ==\n" +
+          kernel.toDebugString +
+          "\n== init working set ==\n" + ws0.queryExecution.toString +
+          "\n" + Optimizer.superstepPlanString(pDs, params))
+      pw.close()
     } else {
       val result = computeEmbedding(knn, params, Some(lossAcc))
       IO.writeEmbeddingCsv(result, outputPath)

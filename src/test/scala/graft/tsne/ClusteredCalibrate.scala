@@ -34,7 +34,7 @@ object ClusteredCalibrate {
 
       val healthy = recallOf(Tsne.computeEmbedding(knn, params))
 
-      val (p, release) = Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
+      val p = Affinities.highDimAffinities(knn, params.perplexity)
       val pArr = p.collect()
       val ws0 = Optimizer.initWorkingSet(p, 2, params.seed).collect()
       def runSchedule(sched: Seq[(Int, Double, Boolean, Int)]): Double = {
@@ -51,7 +51,6 @@ object ClusteredCalibrate {
       val noExagg = runSchedule(Seq((20, im, false, 0), (81, fm, false, 20),
         (149, fm, false, 101)))
       val skipP3 = runSchedule(Seq((20, im, true, 0), (81, fm, true, 20)))
-      release()
 
       println(f"CLUSTCALIB n=$n clusters=$clusters dim=$dim perp=$perp " +
         f"healthy=$healthy%.3f skipP2=$skipP2%.3f onlyP1=$onlyP1%.3f " +

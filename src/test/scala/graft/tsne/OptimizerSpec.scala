@@ -165,11 +165,25 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     // P, every superseded state checkpoint, the initial and the final one
     for (params <- Seq(broadcast, broadcast.copy(maxBroadcastStateRows = 0L)))
       withClue(s"maxBroadcastStateRows=${params.maxBroadcastStateRows}: ") {
-        graft.SubmittedWork.persistedBy(s) {
-          Optimizer.optimize(s.createDataset(pRows.toSeq), s.createDataset(ws0), params)
-            .collect().length shouldBe ws0.length
+        graft.SubmittedWork.storedBy(s) {
+          graft.SubmittedWork.persistedBy(s) {
+            Optimizer.optimize(s.createDataset(pRows.toSeq), s.createDataset(ws0), params)
+              .collect().length shouldBe ws0.length
+          } shouldBe 0
         } shouldBe 0
       }
+  }
+
+  it should "submit at most three jobs on the local dispatch" in {
+    val s = spark
+    import s.implicits._
+    val p = s.createDataset(toRows(Goldens.denseJointProbabilities).toSeq)
+    // the dispatch probe, P's collect and the working set's collect; a
+    // relational sum/count probe made it five
+    graft.SubmittedWork.of(s) {
+      Optimizer.optimize(p, Optimizer.initWorkingSet(p, 2, seed = 7L),
+        superstepParams.copy(iterations = 5)).collect().length shouldBe 10
+    }.jobs should be <= 3
   }
 
   "initWorkingSet" should "initialize gradient to zero, gains to one, y ~ N(0, 1e-4), seeded" in {

@@ -72,12 +72,11 @@ class QualitySpec extends AnyFlatSpec with Matchers with SparkTestBase {
       org.apache.spark.sql.functions.col("j"),
       org.apache.spark.sql.functions.col("dist")).as[Neighbor]
     val params = Optimizer.Params(perplexity = 5.0, iterations = 250, seed = 42L)
-    val (p, release) = Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
+    val p = Affinities.highDimAffinities(knn, params.perplexity)
     val pArr = p.collect()
     val ws0 = Optimizer.initWorkingSet(p, 2, params.seed).collect()
     val truncated = Seq((20, params.initialMomentum, true, 0))
     val (brokenPts, _) = Optimizer.optimizeLocalSchedule(pArr, ws0, params, truncated)
-    release()
     val truth = ranked.where(org.apache.spark.sql.functions.col("rn") <= k)
     val row = Quality.neighborRecall(truth, s.createDataset(brokenPts.toSeq), k).head()
     val recall = row.getLong(row.fieldIndex("hits")).toDouble / (2000.0 * k)
