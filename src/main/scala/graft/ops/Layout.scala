@@ -3,14 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional data layout for scan pruning: z-order (Morton)
-  * clustering over two columns, plus the per-partition min/max stats that
-  * make the pruning measurable. The 100 TB motivation: a table laid out
-  * by ONE column prunes file scans on that column only; interleaving the
-  * bucket bits of two columns keeps per-file bounding boxes tight on
-  * BOTH, so predicates on either column (or both) skip most files — the
-  * Delta/Iceberg `OPTIMIZE ZORDER BY` shape, expressed as a plain
-  * repartitionByRange over a computed key.
+/** Multi-dimensional data layout for scan pruning: the z-order (Morton)
+  * key over two columns. The 100 TB motivation: a table laid out by ONE
+  * column prunes file scans on that column only; interleaving the bucket
+  * bits of two columns keeps per-file bounding boxes tight on BOTH, so
+  * predicates on either column (or both) skip most files — the
+  * Delta/Iceberg `OPTIMIZE ZORDER BY` shape, a range partitioning over
+  * this computed key.
   *
   * Everything is integer arithmetic on longs (fixed-width bucketing from
   * a broadcast 1-row extrema aggregate, then the classic mask-and-shift
@@ -90,37 +89,4 @@ object Layout {
         bits))
       .drop("__mn1", "__mx1", "__mn2", "__mx2")
   }
-
-  /** Range-partition by the z-key: each output partition is a contiguous
-    * z-range, i.e. a small bounding box in (c1, c2) — the layout a
-    * writer would `write.parquet` so file-level min/max stats prune on
-    * both columns. */
-  def zorderRepartition(df: DataFrame, c1: String, c2: String,
-                        bits: Int = 16, partitions: Int = 0): DataFrame = {
-    val keyed = withZorderKey(df, c1, c2, bits)
-    if (partitions > 0) keyed.repartitionByRange(partitions, col("zkey"))
-    else keyed.repartitionByRange(col("zkey"))
-  }
-
-  /** Per-partition min/max of the given columns — the file-stats index a
-    * lakehouse writer would persist; here it is both the skipping index
-    * and the measurable proof that a layout prunes. */
-  def partitionStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(c).as(s"${c}_min"), max(c).as(s"${c}_max")))
-    df.select(spark_partition_id().cast("long").as("pid") +:
-        cols.map(col): _*)
-      .groupBy("pid")
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Fraction of partitions whose [min, max] on `statCol` contains `v` —
-    * the expected scan fraction for an equality probe under this layout
-    * (lower = better skipping). Driver-side over the (tiny) stats
-    * table. */
-  def scanFraction(stats: Array[org.apache.spark.sql.Row],
-                   minIdx: Int, maxIdx: Int, v: Long): Double =
-    if (stats.isEmpty) 0.0
-    else stats.count(r => r.getLong(minIdx) <= v && v <= r.getLong(maxIdx))
-      .toDouble / stats.length
 }

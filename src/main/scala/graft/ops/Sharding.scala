@@ -60,15 +60,4 @@ object Sharding {
         (col("__rank") / shardSize).cast("long").as("shard"),
         (col("__rank") % shardSize).as("pos")): _*)
   }
-
-  /** Materialize the epoch layout: one `shard=K/` parquet directory per
-    * shard, rows carrying `pos` so a trainer reads any shard file and
-    * restores the in-shard order with a local sort of ≤ shardSize rows.
-    * `partitionBy` routes rows by the shard column — tasks write only the
-    * shards they hold, no extra shuffle beyond [[assignShards]]'s range
-    * exchange. */
-  def writeShards(df: DataFrame, keyCol: String, shardSize: Long,
-                  path: String, salt: String = "shard"): Unit =
-    assignShards(df, keyCol, shardSize, salt)
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
 }

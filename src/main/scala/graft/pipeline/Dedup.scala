@@ -328,45 +328,6 @@ object Dedup {
     pairs
   }
 
-  /** Streaming face of [[minHashIncremental]] — continuous drop-directory
-    * ingest dedup: each micro-batch of newly arrived documents probes the
-    * PERSISTED corpus signature store with exactly the batch operator
-    * (same LSH probe, same exact verification — `foreachBatch` is the
-    * contract that micro-batch ≡ batch), appending the verified
-    * `(i, j, jaccard)` cross pairs to a parquet sink. This is the
-    * production shape for corpus-scale streaming dedup: the corpus state
-    * lives in the signature store table, NOT in Structured Streaming
-    * state — a corpus never expires, so watermark-evicted join state
-    * would either leak unboundedly or silently forget old documents;
-    * the store is O(bands) small rows per corpus doc, loaded once.
-    * Restart-safe via the checkpoint (a replayed batch re-appends its
-    * pairs; dedupe downstream on (i, j) if exactly-once matters).
-    * `newDocsStream` is any streaming DataFrame with (doc_id, text) —
-    * e.g. [[graft.sources.Jsonl.readDocumentsStream]]; quarantine rows
-    * (`_corrupt` non-null) are excluded from probing, never dropped from
-    * the caller's stream. */
-  def minHashIncrementalStream(newDocsStream: DataFrame, corpus: DataFrame,
-                               corpusStore: DataFrame, sinkPath: String,
-                               checkpointPath: String, n: Int = 3,
-                               theta: Double = 0.7, bands: Int = 64,
-                               rowsPerBand: Int = 2, seed: Long = 42L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (DataFrame, Long) => Unit = { (batch, _) =>
-      val clean =
-        if (batch.columns.contains("_corrupt"))
-          batch.where(col("_corrupt").isNull).drop("_corrupt")
-        else batch
-      if (!clean.isEmpty)
-        minHashIncremental(clean, corpus, Some(corpusStore), n, theta,
-          bands, rowsPerBand, seed)
-          .write.mode("append").parquet(sinkPath)
-    }
-    newDocsStream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch(fn)
-      .start()
-  }
-
   /** Duplicate-cluster assignment — the step a real dedup pipeline runs
     * AFTER any pair generator here (near-dup pairs are edges; keeping one
     * canonical doc per transitive group needs the connected component):

@@ -288,16 +288,6 @@ object Multimodal {
     feats.select(col("id"), sig.as("asig"))
   }
 
-  /** Audio near-duplicate pairs: the identical banded pigeonhole blocking
-    * as [[imageNearDups]], over the envelope-gradient signature — audio
-    * near-dedup that survives re-encoding and gain changes, bucketed, not
-    * all-pairs. Emits `(i, j, hamming)`, i < j. */
-  def audioNearDups(mm: DataFrame, maxHamming: Int = 3, dim: Int = 61,
-                    decoder: Int => Array[Byte] => Array[Double] = decodeStub)
-      : DataFrame =
-    bandedHammingPairs(audioSignatures(mm, dim, decoder), "asig",
-      dim - 1, maxHamming)
-
   /** Per-frame gradient signatures for frame-sampled video —
     * [[perceptualHashes]] applied to each sampled frame of a multi-frame
     * payload: decode to `nFrames` evenly-strided `side`×`side` luma grids
@@ -337,51 +327,8 @@ object Multimodal {
       sig.as("fsig"))
   }
 
-  /** Video near-duplicate pairs: two payloads are near-dups when at least
-    * `minMatchingFrames` of their SAME-POSITION sampled frames agree
-    * within `maxHamming` bits — the frame-fingerprint vote that catches
-    * re-encoded / brightness-shifted copies of the same footage without
-    * ever comparing raw frames. Blocking is the shared banded pigeonhole
-    * per (frame, chunk): a frame pair within the radius must agree
-    * exactly on one of `maxHamming+1` signature chunks, so the join meets
-    * only inside (frame, chunk, value) buckets — never all-pairs; the
-    * per-pair vote is one hash aggregation over the surviving frame
-    * matches. Bucket selectivity ∝ 2^(bits/(maxHamming+1)) — the default
-    * 56-bit / radius-3 split gives 14-bit chunk keys (16k buckets).
-    * Emits `(i, j, n_matching_frames)`, i < j. */
-  def videoNearDups(mm: DataFrame, minMatchingFrames: Int = 3,
-                    maxHamming: Int = 3, nFrames: Int = 4, side: Int = 8,
-                    decoder: Int => Array[Byte] => Array[Double] = decodeStub)
-      : DataFrame = {
-    require(minMatchingFrames >= 1 && minMatchingFrames <= nFrames,
-      s"minMatchingFrames must be in [1, $nFrames], got $minMatchingFrames")
-    val bits = side * (side - 1)
-    val chunks = maxHamming + 1
-    require(bits % chunks == 0,
-      s"frame signature width $bits must split into maxHamming+1 = $chunks chunks")
-    val width = bits / chunks
-    val sigs = videoSignatures(mm, nFrames, side, decoder)
-    val chunkArr = array((0 until chunks).map(c =>
-      shiftright(col("fsig"), c * width).bitwiseAND((1L << width) - 1)): _*)
-    val banded = sigs.select(col("id"), col("frame"), col("fsig"),
-      posexplode(chunkArr).as(Seq("chunk", "ckey")))
-    val frameMatches = banded.as("a")
-      .join(banded.as("b"),
-        col("a.frame") === col("b.frame") &&
-          col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("i"), col("b.id").as("j"),
-        col("a.frame").as("frame"),
-        bit_count(col("a.fsig").bitwiseXOR(col("b.fsig"))).as("hamming"))
-      .distinct() // a close pair can agree on several chunks — count once
-      .where(col("hamming") <= maxHamming)
-    frameMatches.groupBy("i", "j")
-      .agg(count(lit(1)).as("n_matching_frames"))
-      .where(col("n_matching_frames") >= minMatchingFrames)
-  }
-
-  /** Shared banded exact-match Hamming blocking (split the signature into
-    * `maxHamming + 1` chunks — a pair within the radius must agree
+  /** [[imageNearDups]]' banded exact-match Hamming blocking (split the
+    * signature into `maxHamming + 1` chunks — a pair within the radius must agree
     * exactly on at least one chunk, the same pigeonhole trick as
     * `Dedup.simHashNearDups`), then verify the true Hamming distance.
     * No all-pairs: shuffle is (maxHamming+1)·N chunk rows, the join meets

@@ -36,7 +36,6 @@ object Pca {
     def d: Int = mean.length
     /** Sample variance total — trace of the covariance = Σ all eigenvalues. */
     def totalVar: Double = eigenvalues.sum
-    def explainedVar: Double = eigenvalues.take(k).sum
   }
 
   /** Fit the top-`k` principal components. One pass, one driver eigensolve. */

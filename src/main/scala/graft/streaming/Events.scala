@@ -253,14 +253,6 @@ object Events {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(avg("k"), 6).as("avg_k_r"))
 
-  /** Event-time watermark + exactly-once-per-id dedup — the streaming
-    * ingest front door: late duplicates within the watermark horizon are
-    * dropped by keyed state, arbitrarily late events are discarded. */
-  def dedupedStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicates("event_id")
-
   /** Watermark helper for composing with the window aggregates. */
   def withEventWatermark(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events.withWatermark("ts", watermark)
@@ -452,8 +444,7 @@ object Events {
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .flatMapSortedGroups(col("ts_us"), col("event_id")) { (user, rows) =>
-        foldFunnel(user, FunnelProgress(0, Long.MinValue), stepArr,
-          rows.map(r => (r._2, r._4)))._1.iterator
+        foldFunnel(user, stepArr, rows.map(r => (r._2, r._4))).iterator
       }
       .toDF()
   }
@@ -485,57 +476,23 @@ object Events {
       "transition", "lat_us", quantiles, salt = "conv")
   }
 
-  /** Shared funnel fold over ts-ascending (tsUs, type) rows: advance the
-    * step cursor on the first event of the awaited step strictly after
-    * the previous step's time, emitting a [[FunnelStep]] per advance.
-    * Shared verbatim by the batch and streaming paths so the two cannot
-    * drift. */
-  private[streaming] def foldFunnel(
-      user: Long, start: FunnelProgress, stepArr: Array[String],
-      rows: Iterator[(Long, String)]): (Vector[FunnelStep], FunnelProgress) = {
-    var st = start
+  /** The funnel fold over one user's ts-ascending (tsUs, type) rows:
+    * advance the step cursor on the first event of the awaited step
+    * strictly after the previous step's time, emitting a [[FunnelStep]]
+    * per advance. */
+  private def foldFunnel(user: Long, stepArr: Array[String],
+                         rows: Iterator[(Long, String)]): Vector[FunnelStep] = {
+    var step = 0
+    var prevT = Long.MinValue
     var out = Vector.empty[FunnelStep]
     rows.foreach { case (tsUs, tpe) =>
-      if (st.step < stepArr.length && tpe == stepArr(st.step) &&
-          (st.step == 0 || tsUs > st.prevT)) {
-        out :+= FunnelStep(user, st.step + 1, stepArr(st.step), tsUs)
-        st = FunnelProgress(st.step + 1, tsUs)
+      if (step < stepArr.length && tpe == stepArr(step) && (step == 0 || tsUs > prevT)) {
+        out :+= FunnelStep(user, step + 1, stepArr(step), tsUs)
+        step += 1
+        prevT = tsUs
       }
     }
-    (out, st)
-  }
-
-  /** Streaming funnel: keyed per-user progress state (step cursor + last
-    * achieved time — two fields, the smallest possible state), newly
-    * achieved steps emitted in Append mode as they happen. Rows are
-    * sorted by ts within each micro-batch slice; cross-batch order per
-    * key must be non-decreasing up to the watermark — the same
-    * assumption [[cappedSessionsStream]] makes. No timeout: there is
-    * nothing to flush (achievements emit immediately) and completed
-    * state is two fields per user. */
-  def funnelStream(events: DataFrame,
-                   steps: Seq[String]): org.apache.spark.sql.Dataset[FunnelStep] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(steps.nonEmpty, "funnel needs at least one step")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val stepArr = steps.toArray
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelProgress, FunnelStep](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[FunnelProgress]) =>
-          val st = state.getOption.getOrElse(FunnelProgress(0, Long.MinValue))
-          val (out, next) = foldFunnel(user, st, stepArr,
-            rows.toVector.sortBy(r => (r._2, r._3)).iterator
-              .map(r => (r._2, r._4)))
-          state.update(next)
-          out.iterator
-      }
+    out
   }
 
   /** Time-weighted average of `value` per user: each event's value holds
@@ -809,8 +766,6 @@ final case class OpenSession(startUs: Long, endUs: Long, n: Long, sum: Double)
 
 final case class FunnelStep(user_id: Long, step: Int, step_name: String,
                             t_us: Long)
-
-final case class FunnelProgress(step: Int, prevT: Long)
 
 /** Emitted session of [[Events.cappedSessions]]. */
 final case class CappedSession(user_id: Long, session_start_us: Long,

@@ -52,10 +52,10 @@ object Distances {
   //
   // Native fused-loop Catalyst expressions (graft.expressions): a single
   // primitive loop over both ArrayData in place. The earlier composable
-  // `aggregate(zip_with(...))` forms (kept below as *Builtin for
-  // cross-checks) allocate an intermediate array per row — on an N² kNN
-  // that allocation was most of the bench. Summation order is identical,
-  // so results are bit-for-bit the same.
+  // `aggregate(zip_with(...))` forms (the dot product is kept below as
+  // dotColBuiltin for a cross-check) allocate an intermediate array per
+  // row — on an N² kNN that allocation was most of the bench. Summation
+  // order is identical, so results are bit-for-bit the same.
 
   import org.apache.spark.sql.{graftglue => glue}
   import graft.expressions._
@@ -69,26 +69,16 @@ object Distances {
   def dotCol(a: Column, b: Column): Column =
     glue.column(DotProduct(glue.expression(a), glue.expression(b)))
 
-  def normCol(a: Column): Column = sqrt(dotCol(a, a))
-
   def cosineSimCol(a: Column, b: Column): Column =
     glue.column(CosineSimilarity(glue.expression(a), glue.expression(b)))
 
   def cosineDistCol(a: Column, b: Column): Column =
     lit(1.0) - cosineSimCol(a, b)
 
-  // Composable built-in forms, retained for expression cross-checks in tests.
-  def sqEuclideanColBuiltin(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0),
-      (acc, x) => acc + x)
-
+  // The composable built-in form, retained for the expression cross-check
+  // in tests.
   def dotColBuiltin(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def cosineSimColBuiltin(a: Column, b: Column): Column =
-    dotColBuiltin(a, b) / (sqrt(dotColBuiltin(a, a)) * sqrt(dotColBuiltin(b, b)))
 
   def colByName(name: String): (Column, Column) => Column = name match {
     case "sqeuclidean" => sqEuclideanCol

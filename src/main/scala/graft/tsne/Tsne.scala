@@ -11,9 +11,18 @@ import org.apache.spark.sql.functions.col
   * --iterations --randomState --neighbors --initialMomentum --finalMomentum
   * --theta --loss --knnIterations --knnMethod --knnBlocks
   * --inputDistanceMatrix --executionPlan`. Rebuild extensions:
-  * `--recallOut <path> [--recallK k]` — embedding neighbor-recall report.
+  * `--recallOut <path> [--recallK k]` — embedding neighbor-recall report;
+  * `--maxLocalPEntries n` — the local/distributed optimizer dispatch. Any
+  * other flag is rejected before Spark work starts.
   */
 object Tsne {
+
+  /** Every flag [[run]] reads. */
+  private val Flags = Set("input", "output", "dimension", "metric", "perplexity",
+    "nComponents", "earlyExaggeration", "learningRate", "iterations", "randomState",
+    "neighbors", "initialMomentum", "finalMomentum", "theta", "loss", "knnIterations",
+    "knnMethod", "knnBlocks", "inputDistanceMatrix", "executionPlan", "recallOut",
+    "recallK", "maxLocalPEntries")
 
   /** E2 — the library pipeline (ref `Tsne.scala:105-136`):
     * kNN triples → P as sparse rows ([[Affinities.highDimAffinities]]:
@@ -47,6 +56,9 @@ object Tsne {
     * ExecutionEnvironment the same way). */
   def run(args: Array[String], spark: SparkSession): Unit = {
     val a = parseArgs(args)
+    // a mistyped flag must fail, not silently run on the default
+    (a.keySet -- Flags).headOption.foreach(k =>
+      throw new IllegalArgumentException(s"unknown flag --$k"))
     def req(k: String) = a.getOrElse(k,
       throw new IllegalArgumentException(s"missing required --$k"))
     def opt(k: String, d: String) = a.getOrElse(k, d)
@@ -74,10 +86,9 @@ object Tsne {
       metric = metric,
       seed = opt("randomState", "0").toLong,
       // rebuild extension: the optimizer path dispatch is tunable from the
-      // CLI (force the distributed / state-distributed superstep loops on
-      // a cluster where the defaults would stay driver-local)
-      maxLocalPEntries = opt("maxLocalPEntries", "2000000").toLong,
-      maxBroadcastStateRows = opt("maxBroadcastStateRows", "5000000").toLong)
+      // CLI (force the distributed superstep loop on a cluster where the
+      // default would stay driver-local)
+      maxLocalPEntries = opt("maxLocalPEntries", "2000000").toLong)
 
     val knn: Dataset[Neighbor] =
       if (a.contains("inputDistanceMatrix")) {
@@ -137,7 +148,7 @@ object Tsne {
           "\n== affinity kernel (RDD lineage, over an empty kNN) ==\n" +
           kernel.toDebugString +
           "\n== init working set ==\n" + ws0.queryExecution.toString +
-          "\n" + Optimizer.superstepPlanString(pDs, params))
+          "\n" + Optimizer.superstepPlanString(pDs, ws0, params))
       pw.close()
     } else {
       val result = computeEmbedding(knn, params, Some(lossAcc))

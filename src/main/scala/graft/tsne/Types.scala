@@ -35,40 +35,3 @@ final case class WorkingSet(
     y: Array[Double],
     lastGrad: Array[Double],
     gains: Array[Double])
-
-/** One neighbor reference of a working-set row in the state-distributed
-  * optimizer path: the neighbor's original array position (`pos`, so the
-  * join-reassembled row iterates in exactly the order the local kernel
-  * iterates the `AffinityRow` arrays), its id, affinity, and — joined in
-  * fresh each superstep — its current embedding position. */
-final case class NeighborRef(pos: Int, j: Long, pj: Double, yj0: Double, yj1: Double)
-
-/** A working-set row with its neighborhood re-assembled by the per-superstep
-  * edges ⋈ state join (state-distributed path): sorted by `pos` so the
-  * attractive-force summation order is identical to [[AffinityRow]]'s array
-  * order. */
-final case class StateNeighbors(
-    id: Long, y: Array[Double], lastGrad: Array[Double], gains: Array[Double],
-    ns: Array[NeighborRef])
-
-/** [[Force]] plus the point's own optimizer state, carried through the
-  * forces pass of the state-distributed path so the delta-bar-delta update
-  * is a pure map (no second join, no driver round-trip) once the global
-  * sumQ is known. */
-final case class ForceState(
-    id: Long, ax: Double, ay: Double, rx: Double, ry: Double, sumQPart: Double,
-    lossPre: Double, pSum: Double,
-    y: Array[Double], lastGrad: Array[Double], gains: Array[Double])
-
-/** Per-point force row of one distributed optimizer superstep: attractive
-  * (ax, ay), Barnes-Hut repulsive (rx, ry), this point's sumQ partial, and
-  * — on loss supersteps only, else 0 — the sumQ-independent loss partials
-  * `lossPre` = Σⱼ p·log(p/q) and `pSum` = Σⱼ p, which combine to the KL
-  * loss as Σ lossPre + (Σ pSum)·log(sumQ) without a second pass over P
-  * (ref gradient sub-steps c–e, `TsneHelpers.scala:258-308`; the reference
-  * accumulates loss inside the same attractive-force map, `:297-300`).
-  * Top-level so Spark's generated encoder code can access the class (a
-  * `private` nested class breaks `SpecificSafeProjection` codegen). */
-final case class Force(
-    id: Long, ax: Double, ay: Double, rx: Double, ry: Double, sumQPart: Double,
-    lossPre: Double, pSum: Double)

@@ -6,9 +6,8 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.tsne.SparkTestBase
 
-/** Z-order layout: key math against a bit-twiddling reference, and the
-  * property the operator exists for — a z-clustered layout prunes
-  * equality probes on BOTH dimensions, where a linear sort prunes one. */
+/** Z-order layout: key math against a bit-twiddling reference, and NULL
+  * handling of the appended key. */
 class LayoutSpec extends AnyFlatSpec with Matchers with SparkTestBase {
 
   private lazy val s = spark
@@ -49,38 +48,7 @@ class LayoutSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     got shouldBe Array(0L, 15L, 8L, 0L)
   }
 
-  behavior of "Layout.zorderRepartition"
-
-  it should "prune equality probes on both dimensions where a linear sort prunes one" in {
-    import s.implicits._
-    // 64×64 uniform grid
-    val grid = (0 until 64).flatMap(a => (0 until 64).map(b =>
-      (a.toLong, b.toLong))).toDF("c1", "c2")
-    val parts = 16
-
-    def fractions(df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val stats = Layout.partitionStats(df, Seq("c1", "c2"))
-        .select("c1_min", "c1_max", "c2_min", "c2_max")
-        .collect()
-      val probes = Seq(3L, 17L, 33L, 48L, 60L)
-      val f1 = probes.map(Layout.scanFraction(stats, 0, 1, _)).sum / probes.size
-      val f2 = probes.map(Layout.scanFraction(stats, 2, 3, _)).sum / probes.size
-      (f1, f2)
-    }
-
-    val (z1, z2) = fractions(
-      Layout.zorderRepartition(grid, "c1", "c2", bits = 6, partitions = parts))
-    val (l1, l2) = fractions(grid.repartitionByRange(parts, col("c1")))
-
-    // linear layout: perfect on c1, useless on c2
-    l1 should be <= 0.2
-    l2 should be >= 0.9
-    // z-order: both dimensions prune to ~sqrt(P) of the partitions
-    z1 should be <= 0.5
-    z2 should be <= 0.5
-    // and the z layout loses far less on the worst dimension
-    math.max(z1, z2) should be < math.max(l1, l2) - 0.3
-  }
+  behavior of "Layout.withZorderKey"
 
   it should "keep NULL keys out of the finite buckets but in the output" in {
     import s.implicits._

@@ -791,21 +791,6 @@ class OpsSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     }
   }
 
-  it should "write one parquet directory per shard, restorable to the same layout" in {
-    import s.implicits._
-    val df = s.range(300).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString + "/epoch0"
-    Sharding.writeShards(df, "id", shardSize = 64L, dir, salt = "e0")
-    val back = s.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("shard"),
-        r.getAs[Long]("pos"))).toSet
-    val expect = Sharding.assignShards(df, "id", 64L, "e0")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    back shouldBe expect
-    // the layout on disk is one directory per shard
-    new java.io.File(dir).listFiles().count(_.getName.startsWith("shard=")) shouldBe 5
-  }
-
   behavior of "Packing"
 
   it should "tile the salted token stream exactly, at any partition count" in {

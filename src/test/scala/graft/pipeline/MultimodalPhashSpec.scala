@@ -147,91 +147,4 @@ class MultimodalPhashSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     sigs(2L) shouldBe sigs(1L) // bit-identical, not merely close
     java.lang.Long.bitCount(sigs(1L) ^ sigs(3L)) should be > 10
   }
-
-  behavior of "Multimodal.videoSignatures / videoNearDups"
-
-  it should "vote a re-encoded brightness-shifted GIF copy as a near-dup of its original" in {
-    def gif(frames: Seq[java.awt.image.BufferedImage]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(out)
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      frames.foreach(img =>
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null))
-      writer.endWriteSequence()
-      writer.dispose()
-      ios.close()
-      out.toByteArray
-    }
-    def clip(seed: Int, brighten: Int = 0) =
-      gif((0 until 4).map(f => smoothImage(48, 32, seed + 13 * f, brighten)))
-    val rows = Seq(
-      1L -> clip(3),
-      2L -> clip(3, brighten = 6), // the same footage, re-encoded brighter
-      3L -> clip(40))              // unrelated footage
-    val pairs = Multimodal.videoNearDups(mmTable(rows),
-        minMatchingFrames = 3, maxHamming = 3,
-        decoder = Multimodal.decodeGifFrames(4))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    pairs.map(p => (p._1, p._2)).toSet shouldBe Set((1L, 2L))
-    pairs.head._3 should be >= 3L
-  }
-
-  it should "find video near-dup pairs via per-frame banded blocking, lossless vs brute force" in {
-    val base = (0 until 150).map(i =>
-      (i.toLong, s"clip payload $i".getBytes("UTF-8")))
-    val copies = (0 until 3).map(i =>
-      (500L + i, s"clip payload $i".getBytes("UTF-8")))
-    val mm = mmTable(base ++ copies)
-    val minM = 3; val maxH = 3
-    val got = Multimodal.videoNearDups(mm, minM, maxH)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // brute force: per-frame Hamming over the collected signatures, count
-    // same-position matches, threshold — an independent spelling
-    val sigs = Multimodal.videoSignatures(mm)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).map { case (id, rs) =>
-        id -> rs.sortBy(_._2).map(_._3) }
-    val brute = (for {
-      (i, si) <- sigs; (j, sj) <- sigs if i < j
-      n = si.zip(sj).count { case (a, b) =>
-        java.lang.Long.bitCount(a ^ b) <= maxH } if n >= minM
-    } yield (i, j, n.toLong)).toSet
-    got shouldBe brute
-    (0 until 3).foreach(i => got should contain((i.toLong, 500L + i, 4L)))
-    // deterministic across partitionings
-    Multimodal.videoNearDups(mmTable((base ++ copies).reverse).repartition(7),
-        minM, maxH)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSet shouldBe got
-  }
-
-  it should "find audio near-dup pairs via banded blocking, lossless vs brute force" in {
-    // stub payloads: random signatures plus planted exact copies; an
-    // elevated radius makes random collisions appear so the blocking has
-    // non-trivial work beyond the planted Hamming-0 pairs
-    val base = (0 until 200).map(i =>
-      (i.toLong, s"audio payload $i".getBytes("UTF-8")))
-    val copies = (0 until 4).map(i =>
-      (500L + i, s"audio payload $i".getBytes("UTF-8")))
-    val mm = mmTable(base ++ copies)
-    val maxH = 19 // chunks = 20: pigeonhole still exact, radius just wider
-    val got = Multimodal.audioNearDups(mm, maxHamming = maxH)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val sigs = Multimodal.audioSignatures(mm)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val brute = (for {
-      (i, si) <- sigs; (j, sj) <- sigs if i < j
-      h = java.lang.Long.bitCount(si ^ sj) if h <= maxH
-    } yield (i, j, h)).toSet
-    got shouldBe brute
-    brute.size should be > 4 // random collisions beyond the planted pairs
-    (0 until 4).foreach(i => got should contain((i.toLong, 500L + i, 0)))
-    // deterministic across partitionings
-    Multimodal.audioNearDups(mmTable((base ++ copies).reverse).repartition(7),
-        maxHamming = maxH)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .toSet shouldBe got
-  }
 }

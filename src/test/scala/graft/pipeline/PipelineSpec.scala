@@ -222,42 +222,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     pairs(Dedup.minHashIncremental(batch, corpus, Some(store), 3, 0.7)) shouldBe inc
   }
 
-  it should "produce the same pairs when the batch arrives as a stream" in {
-    val s = spark
-    // same fixture as the batch spec, but the batch documents arrive as
-    // JSONL files in a watched drop directory, split across two files (two
-    // micro-batches' worth of data), one of them carrying a corrupt line
-    // that must be quarantined by the source and skipped by the probe
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")
-    val other = (50 to 90).map(i => s"q$i").mkString(" ")
-    val otherDup = (50 to 90).map(i => if (i == 70) "EDIT" else s"q$i").mkString(" ")
-    val unrelated = (100 to 140).map(i => s"w$i").mkString(" ")
-    val corpus = docs((1L, base), (2L, other), (3L, unrelated))
-    val batch = docs((10L, nearDup), (11L, base), (12L, otherDup),
-      (13L, "nothing in common at all"))
-    val root = java.nio.file.Files.createTempDirectory("incdedup").toString
-    def jline(id: Long, text: String) =
-      s"""{"doc_id": $id, "text": "$text", "lang": "en", "source": "s", "n_chars": ${text.length}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/b1.json"),
-      (jline(10L, nearDup) + "\n" + jline(11L, base) + "\n" +
-        """{"doc_id": broken""" + "\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/b2.json"),
-      (jline(12L, otherDup) + "\n" + jline(13L, "nothing in common at all")
-        + "\n").getBytes("UTF-8"))
-    val store = Dedup.signatureStore(corpus).localCheckpoint()
-    val stream = graft.sources.Jsonl.readDocumentsStream(s, s"$root/*.json")
-    val q = Dedup.minHashIncrementalStream(stream, corpus, store,
-      s"$root/pairs", s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val streamed = s.read.parquet(s"$root/pairs")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchPairs = Dedup.minHashIncremental(batch, corpus, Some(store), 3, 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    streamed shouldBe batchPairs
-    streamed should contain((1L, 10L))
-  }
-
   "Dedup.exactIncremental" should "drop exactly the docs whose text exists in the corpus" in {
     val newDocs = docs((10L, "alpha alpha alpha"), (11L, "beta beta beta"),
       (12L, "alpha alpha alpha"), (13L, "delta delta delta"))

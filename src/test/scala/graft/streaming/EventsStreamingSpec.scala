@@ -74,24 +74,6 @@ class EventsStreamingSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     batch.toSeq.map(_._3).sum shouldBe 4L * sample.size
   }
 
-  "dedupedStream" should "drop duplicate event ids within the watermark" in {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-
-    val input = MemoryStream[Ev]
-    input.addData(sample: _*)
-    input.addData(sample.take(3): _*) // replayed duplicates
-    val q = Events.dedupedStream(input.toDF())
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val ids = s.table("dedup_out").select("event_id").as[Long].collect().sorted
-    ids.toSeq shouldBe Seq(0L, 1L, 2L, 3L, 4L)
-  }
-
   "sessionStats" should "split user activity on the gap, streaming == batch" in {
     val s = spark
     import s.implicits._
@@ -518,47 +500,6 @@ class EventsStreamingSpec extends AnyFlatSpec with Matchers with SparkTestBase {
       .withColumn("session_end_us", col("session_end_us") - epoch0)
       .collect().map(asMinutes).toSet
     streamed shouldBe expectedSessions
-  }
-
-  "funnelStream" should "equal the batch funnel across micro-batch boundaries" in {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-
-    // user 1 completes view→click→purchase split across two batches with
-    // the click arriving out-of-order WITHIN its batch; user 2's purchase
-    // precedes its click and must not count
-    val funnelSample = Seq(
-      Ev(0L, ts(5), 1L, "view", 1.0, "{}"),
-      Ev(1L, ts(30), 2L, "view", 1.0, "{}"),
-      Ev(2L, ts(35), 2L, "purchase", 1.0, "{}"),
-      Ev(3L, ts(40), 2L, "click", 1.0, "{}"),
-      // batch 2 (user 1): purchase enqueued before the earlier click —
-      // the batch-slice sort must reorder them
-      Ev(4L, ts(90), 1L, "purchase", 1.0, "{}"),
-      Ev(5L, ts(60), 1L, "click", 1.0, "{}"))
-
-    val steps = Seq("view", "click", "purchase")
-    val input = MemoryStream[Ev]
-    val q = Events.funnelStream(input.toDF(), steps)
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append").start()
-    try {
-      input.addData(funnelSample.take(4): _*)
-      q.processAllAvailable()
-      input.addData(funnelSample.drop(4): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))
-    val streamed = s.table("funnel_out").collect().map(key).toSet
-    val batch = Events.funnel(funnelSample.toDF(), steps)
-      .collect().map(key).toSet
-    streamed shouldBe batch
-    // and the semantics: user 1 completes all 3, user 2 stops after click
-    streamed.count(_._1 == 1L) shouldBe 3
-    streamed.count(_._1 == 2L) shouldBe 2
   }
 
   "propsStats" should "extract the k property" in {

@@ -34,113 +34,77 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     }
   }
 
-  "optimizeDistributed" should "match the local path on the same input" in {
+  private def goldenWorkingSet: Seq[WorkingSet] = Goldens.initialEmbedding.map(p =>
+    WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
+
+  // superstep-equivalent like TsneHelpers.scala:378's loop: same loss
+  // supersteps, same values (the distributed loss is fused into the forces
+  // pass via the sumQ-independent decomposition, so this also pins that
+  // identity), positions at 1e-9, whatever the partitioning
+  private def assertDistributedMatchesLocal(parts: Int): Unit = {
     val s = spark
     import s.implicits._
     val pRows = toRows(Goldens.denseJointProbabilities)
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
-
+    val ws0 = goldenWorkingSet
     val params = superstepParams.copy(iterations = 25)
     val (localPoints, localLoss) = Optimizer.optimizeLocal(
       pRows.map(r => r.copy(js = r.js.clone(), ps = r.ps.clone())),
       ws0.map(w => w.copy(y = w.y.clone(), lastGrad = w.lastGrad.clone(),
         gains = w.gains.clone())).toArray,
       params)
+    val localMap = localPoints.map(p => p.id -> p.vec).toMap
 
     val acc = new MapAccumulator
-    s.sparkContext.register(acc, "loss-test")
-    val distPoints = Optimizer.optimizeDistributed(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0), params, Some(acc))
-      .collect()
-
-    val localMap = localPoints.map(p => p.id -> p.vec).toMap
+    s.sparkContext.register(acc, s"loss-test-$parts")
+    val distPoints = withShufflePartitions(parts) {
+      Optimizer.optimizeDistributed(
+        s.createDataset(pRows.toSeq), s.createDataset(ws0), params, Some(acc)).collect()
+    }
     distPoints.length shouldBe localPoints.length
     for (p <- distPoints; d <- 0 until 2) {
       withClue(s"y(${p.id})($d): ") { p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9 }
     }
-    // loss side-channel: recorded at the same supersteps, same values —
-    // the distributed loss is fused into the forces pass via the
-    // sumQ-independent decomposition, so this also pins that identity
     acc.value.keySet shouldBe localLoss.keySet
     for ((k, v) <- localLoss) acc.value(k) shouldBe v +- 1e-9
   }
 
-  "optimizeStateDistributed" should "match the local path on the same input" in {
-    val s = spark
-    import s.implicits._
-    val pRows = toRows(Goldens.denseJointProbabilities)
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
+  "optimizeDistributed" should "match the local path on the same input" in {
+    assertDistributedMatchesLocal(parts = 1)
+  }
 
-    val params = superstepParams.copy(iterations = 25)
-    val (localPoints, localLoss) = Optimizer.optimizeLocal(
-      pRows.map(r => r.copy(js = r.js.clone(), ps = r.ps.clone())),
-      ws0.map(w => w.copy(y = w.y.clone(), lastGrad = w.lastGrad.clone(),
-        gains = w.gains.clone())).toArray,
-      params)
-    val localMap = localPoints.map(p => p.id -> p.vec).toMap
-
-    // superstep-equivalent like TsneHelpers.scala:378's loop: same loss
-    // supersteps, same values, positions at 1e-9
-    val acc = new MapAccumulator
-    s.sparkContext.register(acc, "loss-test-statedist")
-    val distPoints = Optimizer.optimizeStateDistributed(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0), params, Some(acc))
-      .collect()
-    distPoints.length shouldBe localPoints.length
-    for (p <- distPoints; d <- 0 until 2) {
-      withClue(s"y(${p.id})($d): ") { p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9 }
-    }
-    acc.value.keySet shouldBe localLoss.keySet
-    for ((k, v) <- localLoss) acc.value(k) shouldBe v +- 1e-9
+  it should "match the local path at seven partitions" in {
+    assertDistributedMatchesLocal(parts = 7)
   }
 
   it should "keep a point with an empty affinity row in the embedding" in {
     val s = spark
     import s.implicits._
+    val ws = goldenWorkingSet ++ Seq(
+      WorkingSet(98L, Array(-0.05, 0.05), Array(0.0, 0.0), Array(1.0, 1.0)),
+      WorkingSet(99L, Array(0.05, -0.05), Array(0.0, 0.0), Array(1.0, 1.0)))
+    // point 98 has an empty affinity row and point 99 no row at all: the
+    // static side's cogroup must keep both — they still feel repulsion and
+    // centering, every superstep, and appear in the final output, as an
+    // empty row does on the local path
     val pRows = toRows(Goldens.denseJointProbabilities) :+
-      AffinityRow(99L, Array.empty[Long], Array.empty[Double])
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0))) :+
-      WorkingSet(99L, Array(0.05, -0.05), Array(0.0, 0.0), Array(1.0, 1.0))
-    // an edge-less point produces zero rows in the exploded edge table; the
-    // state⋈neighborhood join must not drop it — it still feels repulsion
-    // and centering, every superstep, and appears in the final output
-    val out = Optimizer.optimizeStateDistributed(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0),
-      superstepParams.copy(iterations = 5), None).collect()
-    out.length shouldBe ws0.length
-    out.map(_.id) should contain(99L)
-    out.filter(_.id == 99L).head.vec.foreach(v => v.isNaN shouldBe false)
-  }
-
-  it should "be selected by optimize() past maxBroadcastStateRows" in {
-    val s = spark
-    import s.implicits._
-    val pRows = toRows(Goldens.denseJointProbabilities)
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
-    val params = superstepParams.copy(iterations = 3)
-
-    val viaLocal = Optimizer.optimize(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0), params)
-      .collect().map(p => p.id -> p.vec).toMap
-    val viaStateDist = Optimizer.optimize(
-      s.createDataset(pRows.toSeq), s.createDataset(ws0),
-      params.copy(maxLocalPEntries = 0L, maxBroadcastStateRows = 0L))
-      .collect().map(p => p.id -> p.vec).toMap
-
-    viaStateDist.keySet shouldBe viaLocal.keySet
-    for ((id, v) <- viaStateDist; d <- 0 until 2) v(d) shouldBe viaLocal(id)(d) +- 1e-9
+      AffinityRow(98L, Array.empty[Long], Array.empty[Double])
+    val params = superstepParams.copy(iterations = 5)
+    val out = Optimizer.optimizeDistributed(
+      s.createDataset(pRows.toSeq), s.createDataset(ws), params, None).collect()
+    val (local, _) = Optimizer.optimizeLocal(
+      pRows :+ AffinityRow(99L, Array.empty[Long], Array.empty[Double]), ws.toArray, params)
+    val localMap = local.map(p => p.id -> p.vec).toMap
+    out.map(_.id).toSet shouldBe ws.map(_.id).toSet
+    for (p <- out; d <- 0 until 2) {
+      withClue(s"y(${p.id})($d): ") { p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9 }
+    }
   }
 
   "optimize" should "take the distributed path when maxLocalPEntries = 0 and agree" in {
     val s = spark
     import s.implicits._
     val pRows = toRows(Goldens.denseJointProbabilities)
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
+    val ws0 = goldenWorkingSet
     val params = superstepParams.copy(iterations = 3)
 
     val viaLocal = Optimizer.optimize(
@@ -155,22 +119,35 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     for ((id, v) <- viaDist; d <- 0 until 2) v(d) shouldBe viaLocal(id)(d) +- 1e-9
   }
 
-  it should "leave no RDD persistent on the broadcast and state dispatches" in {
+  it should "leave no RDD persistent on the distributed dispatch" in {
     val s = spark
     import s.implicits._
     val pRows = toRows(Goldens.denseJointProbabilities)
-    val ws0 = Goldens.initialEmbedding.map(p =>
-      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0)))
-    val broadcast = superstepParams.copy(iterations = 5, maxLocalPEntries = 0L)
-    // P, every superseded state checkpoint, the initial and the final one
-    for (params <- Seq(broadcast, broadcast.copy(maxBroadcastStateRows = 0L)))
-      withClue(s"maxBroadcastStateRows=${params.maxBroadcastStateRows}: ") {
-        graft.SubmittedWork.storedBy(s) {
-          graft.SubmittedWork.persistedBy(s) {
-            Optimizer.optimize(s.createDataset(pRows.toSeq), s.createDataset(ws0), params)
-              .collect().length shouldBe ws0.length
-          } shouldBe 0
-        } shouldBe 0
+    val ws0 = goldenWorkingSet
+    // P, the static side, every forces RDD and superseded state checkpoint,
+    // and the final one
+    graft.SubmittedWork.storedBy(s) {
+      graft.SubmittedWork.persistedBy(s) {
+        Optimizer.optimize(s.createDataset(pRows.toSeq), s.createDataset(ws0),
+          superstepParams.copy(iterations = 5, maxLocalPEntries = 0L))
+          .collect().length shouldBe ws0.length
+      } shouldBe 0
+    } shouldBe 0
+  }
+
+  it should "keep the cache of a P the caller persisted, on both dispatches" in {
+    val s = spark
+    import s.implicits._
+    val ws0 = goldenWorkingSet
+    for (maxLocal <- Seq(Optimizer.Params().maxLocalPEntries, 0L))
+      withClue(s"maxLocalPEntries=$maxLocal: ") {
+        val p = s.createDataset(toRows(Goldens.denseJointProbabilities).toSeq).persist()
+        try {
+          Optimizer.optimize(p, s.createDataset(ws0),
+            superstepParams.copy(iterations = 3, maxLocalPEntries = maxLocal))
+            .collect().length shouldBe ws0.length
+          p.storageLevel should not be org.apache.spark.storage.StorageLevel.NONE
+        } finally p.unpersist()
       }
   }
 
@@ -184,6 +161,19 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
       Optimizer.optimize(p, Optimizer.initWorkingSet(p, 2, seed = 7L),
         superstepParams.copy(iterations = 5)).collect().length shouldBe 10
     }.jobs should be <= 3
+  }
+
+  it should "submit at most two jobs per superstep on the distributed dispatch" in {
+    val s = spark
+    import s.implicits._
+    val p = s.createDataset(toRows(Goldens.denseJointProbabilities).toSeq)
+    def jobs(iterations: Int): Int = graft.SubmittedWork.of(s) {
+      Optimizer.optimize(p, Optimizer.initWorkingSet(p, 2, seed = 7L),
+        superstepParams.copy(iterations = iterations, maxLocalPEntries = 0L))
+        .collect().length shouldBe 10
+    }.jobs
+    // the forces job and the update job; setup is the same at any count
+    jobs(25) - jobs(5) should be <= 2 * (25 - 5)
   }
 
   "initWorkingSet" should "initialize gradient to zero, gains to one, y ~ N(0, 1e-4), seeded" in {

@@ -5,13 +5,12 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** One-off measurement for the SCALE.md optimizer-superstep comparison:
-  * the broadcast path's per-superstep driver funnel (collect + broadcast of
-  * the whole working set) vs the state-distributed path's cluster-side
-  * shuffle. Metrics come from Spark's own task accounting — `resultSize`
-  * is exactly the bytes every task ships driver-ward (the collect), and
-  * `shuffleWriteMetrics.bytesWritten` is the cluster-side traffic the join
-  * path trades it for.
+/** Measurement for the SCALE.md / LEDGER.md optimizer-superstep rows: the
+  * distributed superstep loop at N = 200k, k = 10, 3 supersteps. Metrics
+  * come from Spark's own task accounting — `resultSize` is exactly the
+  * bytes every task ships driver-ward (the position collects and the
+  * per-partition partials), and `shuffleWriteMetrics.bytesWritten` is the
+  * cluster-side traffic (the one cogroup that builds the static side).
   *
   * `sbt 'Test/runMain graft.tsne.StateDistBench'`
   */
@@ -31,8 +30,8 @@ object StateDistBench {
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().appName("state-dist-bench")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", 4)
       .getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
@@ -79,11 +78,8 @@ object StateDistBench {
           f"wall=$sec%.1fs driver_result_mb=$rsMb%.1f shuffle_write_mb=$swMb%.1f")
       }
 
-      measure("broadcast") {
+      measure("distributed") {
         Optimizer.optimizeDistributed(pRows, ws0, params, None).foreach(_ => ())
-      }
-      measure("statedist") {
-        Optimizer.optimizeStateDistributed(pRows, ws0, params, None).foreach(_ => ())
       }
     } finally spark.stop()
   }

@@ -142,12 +142,11 @@ class TsneE2ESpec extends AnyFlatSpec with Matchers with org.scalatest.Inspector
     recalls("project") shouldBe recalls("partition") +- 1e-9
   }
 
-  it should "run the state-distributed optimizer path end-to-end from the CLI" in {
-    // --maxLocalPEntries 0 --maxBroadcastStateRows 0 forces the
-    // cluster-side superstep loop (the 100x-scale path) through the same
-    // CLI surface; the bruteforce baseline run above pins the same fixture
-    // through the local path, and OptimizerSpec pins 1e-9 agreement
-    val tmp = Files.createTempDirectory("tsne-e2e-statedist").toString
+  it should "run the distributed optimizer path end-to-end from the CLI" in {
+    // --maxLocalPEntries 0 forces the cluster-side superstep loop through
+    // the same CLI surface; the bruteforce baseline run above pins the same
+    // fixture through the local path, and OptimizerSpec pins 1e-9 agreement
+    val tmp = Files.createTempDirectory("tsne-e2e-dist").toString
     val outDir = tmp + "/emb"
     Tsne.run(Array(
       "--input", fixturePath("dense_input.csv"),
@@ -159,13 +158,30 @@ class TsneE2ESpec extends AnyFlatSpec with Matchers with org.scalatest.Inspector
       "--knnMethod", "bruteforce",
       "--randomState", "42",
       "--maxLocalPEntries", "0",
-      "--maxBroadcastStateRows", "0",
       "--loss", tmp + "/loss.txt"), spark)
     val out = spark.read.schema("id LONG, y0 DOUBLE, y1 DOUBLE").csv(outDir).collect()
     out.length shouldBe 10
-    // the loss side-channel works through the state-distributed path too
+    // the loss side-channel works through the distributed path too
     val loss = scala.io.Source.fromFile(tmp + "/loss.txt")
     try loss.mkString should include("10=") finally loss.close()
+  }
+
+  it should "reject an unknown flag before any Spark work" in {
+    val outDir = Files.createTempDirectory("tsne-e2e-flags").toString + "/emb"
+    // a typo, and the flag of the deleted state-distributed loop: either
+    // would otherwise run silently on the defaults
+    for (bad <- Seq(Seq("--iteration", "50"), Seq("--maxBroadcastStateRows", "0")))
+      withClue(s"${bad.head}: ") {
+        graft.SubmittedWork.of(spark) {
+          intercept[IllegalArgumentException] {
+            Tsne.run(Array(
+              "--input", fixturePath("dense_input.csv"),
+              "--output", outDir, "--dimension", "784",
+              "--knnMethod", "bruteforce") ++ bad, spark)
+          }.getMessage shouldBe s"unknown flag ${bad.head}"
+        }.jobs shouldBe 0
+      }
+    new java.io.File(outDir).exists() shouldBe false
   }
 
   it should "dump the execution plan instead of running with --executionPlan" in {
