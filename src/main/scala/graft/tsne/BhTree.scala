@@ -27,10 +27,10 @@ package graft.tsne
   * Java-serialize into a broadcast, and traversed with an explicit stack so
   * deep trees can't overflow during (de)serialization or descent.
   */
-final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
+final class BhTree private (rootX: Double, rootY: Double, rootHw: Double, capacity: Int)
     extends Serializable {
 
-  private var cap = 64
+  private var cap = capacity
   private var cx = new Array[Double](cap)
   private var cy = new Array[Double](cap)
   private var hw = new Array[Double](cap)
@@ -38,9 +38,11 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
   private var sumY = new Array[Double](cap)
   private var cnt = new Array[Int](cap)
   private var firstChild = new Array[Int](cap) // -1 = leaf; else 4 consecutive ids
-  private var px = new Array[Double](cap)
+  private var px = new Array[Double](cap)      // a non-empty leaf's point
   private var py = new Array[Double](cap)
-  private var hasPoint = new Array[Boolean](cap)
+  // centre of mass of every node, sumX / cnt: set by computeCentres
+  private var comX: Array[Double] = null
+  private var comY: Array[Double] = null
   private var n = 0
 
   newNode(rootX, rootY, rootHw)
@@ -69,7 +71,6 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
     firstChild = java.util.Arrays.copyOf(firstChild, cap)
     px = java.util.Arrays.copyOf(px, cap)
     py = java.util.Arrays.copyOf(py, cap)
-    hasPoint = java.util.Arrays.copyOf(hasPoint, cap)
   }
 
   private def contains(node: Int, x: Double, y: Double): Boolean =
@@ -106,7 +107,9 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
   }
 
   /** Insert a point; returns false iff outside the root cell (the
-    * reference then drops it too, `QuadTree.scala:74-76`).
+    * reference then drops it too, `QuadTree.scala:74-76`). Recomputes
+    * every centre of mass, O(nodes): [[BhTree.build]] inserts in bulk
+    * and computes them once.
     *
     * One deliberate divergence from the reference: when a leaf that has
     * accumulated duplicate mass is subdivided, the resident moves down with
@@ -114,15 +117,19 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
     * (`QuadTree.scala:59-61`), silently halving duplicates' weight in every
     * descendant cell — a mass-conservation bug a θ=0 traversal exposes
     * (`BhTreeSpec`'s duplicate-point case). */
-  def insert(x: Double, y: Double): Boolean = {
+  def insert(x: Double, y: Double): Boolean =
+    add(x, y) && { computeCentres(); true }
+
+  private def add(x: Double, y: Double): Boolean = {
     if (!contains(0, x, y)) return false
     var node = 0
     var depth = 0
     while (true) {
       sumX(node) += x; sumY(node) += y; cnt(node) += 1
       if (firstChild(node) == -1) {
-        if (!hasPoint(node)) {
-          px(node) = x; py(node) = y; hasPoint(node) = true
+        // a leaf is empty until its first point: that one becomes resident
+        if (cnt(node) == 1) {
+          px(node) = x; py(node) = y
           return true
         }
         // a duplicate accumulates mass in the leaf (ref QuadTree.scala:50-53);
@@ -135,10 +142,9 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
         val rsy = sumY(node) - y
         val ox = px(node); val oy = py(node)
         subdivide(node)
-        hasPoint(node) = false
         val ochild = owningChild(node, ox, oy)
         sumX(ochild) += rsx; sumY(ochild) += rsy; cnt(ochild) += rc
-        px(ochild) = ox; py(ochild) = oy; hasPoint(ochild) = true
+        px(ochild) = ox; py(ochild) = oy
       }
       node = owningChild(node, x, y)
       depth += 1
@@ -146,10 +152,27 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
     true
   }
 
+  /** Each non-empty node's centre of mass, the one division per node that
+    * every traversal reads. */
+  private def computeCentres(): Unit = {
+    comX = new Array[Double](n)
+    comY = new Array[Double](n)
+    var k = 0
+    while (k < n) {
+      if (cnt(k) > 0) {
+        comX(k) = sumX(k) / cnt(k)
+        comY(k) = sumY(k) / cnt(k)
+      }
+      k += 1
+    }
+  }
+
   def size: Int = cnt(0)
 
   /** Barnes-Hut traversal (ref `QuadTree.scala:123-152`): returns
-    * (Fx, Fy, sumQ-partial) for one query point. */
+    * (Fx, Fy, sumQ-partial) for one query point. Empty cells are never
+    * pushed; the non-empty children go on the stack in NW, NE, SW, SE
+    * order, so the terms are summed in a fixed order. */
   def repulsiveForce(x: Double, y: Double, theta: Double): (Double, Double, Double) = {
     var fx = 0.0; var fy = 0.0; var sumQ = 0.0
     var stack = new Array[Int](64)
@@ -158,18 +181,13 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
     while (top > 0) {
       top -= 1
       val node = stack(top)
-      val leaf = firstChild(node) == -1
-      if (leaf && cnt(node) == 0) {
-        // empty leaf: nothing
-      } else if (leaf && hasPoint(node) && px(node) == x && py(node) == y) {
-        // the query point's own leaf: skipped entirely (duplicates included,
-        // matching the reference's equality test on the stored point)
-      } else {
-        val comX = sumX(node) / cnt(node)
-        val comY = sumY(node) / cnt(node)
-        val dx = x - comX; val dy = y - comY
+      val c = firstChild(node)
+      // the query point's own leaf is skipped entirely (duplicates
+      // included, matching the reference's equality test on the stored point)
+      if (c != -1 || px(node) != x || py(node) != y) {
+        val dx = x - comX(node); val dy = y - comY(node)
         val d = dx * dx + dy * dy
-        if (leaf || hw(node) / d < theta) {
+        if (c == -1 || hw(node) / d < theta) {
           val q = 1.0 / (1.0 + d)
           val mult = cnt(node) * q
           sumQ += mult
@@ -177,10 +195,11 @@ final class BhTree private (rootX: Double, rootY: Double, rootHw: Double)
           fy += mult * q * dy
         } else {
           if (top + 4 > stack.length) stack = java.util.Arrays.copyOf(stack, stack.length * 2)
-          val c = firstChild(node)
-          stack(top) = c; stack(top + 1) = c + 1
-          stack(top + 2) = c + 2; stack(top + 3) = c + 3
-          top += 4
+          var k = c
+          while (k < c + 4) {
+            if (cnt(k) > 0) { stack(top) = k; top += 1 }
+            k += 1
+          }
         }
       }
     }
@@ -205,8 +224,14 @@ object BhTree {
       sx += p(0); sy += p(1); c += 1
     }
     require(c > 0, "cannot build a quadtree from zero points")
-    val t = new BhTree(sx / c, sy / c, math.max(maxX - minX, maxY - minY))
-    points.foreach(p => t.insert(p(0), p(1)))
+    val t = new BhTree(sx / c, sy / c, math.max(maxX - minX, maxY - minY), NodesPerPoint * c)
+    points.foreach(p => t.add(p(0), p(1)))
+    t.computeCentres()
     t
   }
+
+  /** Initial node-array size per point: a tree holds 2.9–3.3 nodes per
+    * point on collapsed, spread and clustered clouds, so a build rarely
+    * regrows its arrays. */
+  private val NodesPerPoint = 4
 }

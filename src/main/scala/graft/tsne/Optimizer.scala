@@ -152,16 +152,19 @@ object Optimizer {
 
   // ================= driver-local fast path ==============================
 
-  /** The per-point phases (BH traversals, attractive forces, updates) run
-    * data-parallel across the driver's cores — during early exaggeration
-    * the collapsed embedding defeats the replicated squared-distance BH
-    * criterion (every traversal descends fully, so each superstep is
-    * effectively O(N²) node visits), and a single thread leaves the other
-    * 31 cores idle for exactly the iterations that cost the most. Every
-    * parallel phase writes only its own index; all reductions (sumQ, loss,
-    * centering means) are folded sequentially in index order afterwards,
-    * so the result is bit-identical to the sequential loop (and to the
-    * distributed path, which `OptimizerSpec` pins at 1e-9). */
+  /** The per-point work runs data-parallel across the driver's cores in
+    * two passes per superstep: the Barnes-Hut repulsion (which needs the
+    * whole tree), then one fused pass that computes each point's
+    * attraction, its loss partial on loss supersteps, its gradient and its
+    * delta-bar-delta update, writing the new position into a second
+    * buffer. During early exaggeration the collapsed embedding defeats the
+    * replicated squared-distance BH criterion (every traversal descends
+    * fully), so the parallel repulsion matters most in exactly the
+    * iterations that cost the most. Every parallel pass writes only its own
+    * index; all reductions (sumQ, loss, centering means) are folded
+    * sequentially in index order afterwards, so the result is bit-identical
+    * to a sequential loop (and agrees with the distributed path, which
+    * `OptimizerSpec` pins at 1e-9). */
   def optimizeLocal(pRows0: Array[AffinityRow], ws00: Array[WorkingSet],
                     params: Params): (Array[Point], Map[Int, Double]) =
     optimizeLocalSchedule(pRows0, ws00, params, phases(params))
@@ -174,67 +177,82 @@ object Optimizer {
       pRows0: Array[AffinityRow], ws00: Array[WorkingSet], params: Params,
       schedule: Seq[(Int, Double, Boolean, Int)]): (Array[Point], Map[Int, Double]) = {
     val metric = Distances.byName(params.metric)
+    val (theta, minGain, lr) = (params.theta, params.minGain, params.learningRate)
     // Canonical id order: the inputs arrive in collect() partition order,
     // which varies with shuffle partitioning — and the tree insertion order
     // (hence center-of-mass summation order) would otherwise leak that
     // ordering into the trajectory via FP noise that chaotic supersteps
     // amplify. Sorted, the whole loop is a pure function of (data, seed).
-    val pRows = pRows0.sortBy(_.id)
     val ws0 = ws00.sortBy(_.id)
     val n = ws0.length
-    val loss = scala.collection.mutable.Map.empty[Int, Double]
-
-    // id-indexed state
     val ids = ws0.map(_.id)
-    val idx = new java.util.HashMap[Long, Int](n * 2)
-    ids.zipWithIndex.foreach { case (id, k) => idx.put(id, k) }
-    val y = ws0.map(_.y.clone())
+    def indexOf(id: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      require(i >= 0, s"point $id of the affinities is not in the working set")
+      i
+    }
+    // each point's P row with its neighbour ids resolved to indices once; a
+    // point with no row feels no attraction, as on the distributed path
+    val nbr = Array.fill(n)(Array.emptyIntArray)
+    val p = Array.fill(n)(Array.emptyDoubleArray)
+    pRows0.foreach { r =>
+      val i = indexOf(r.id)
+      nbr(i) = r.js.map(indexOf)
+      p(i) = r.ps
+    }
     val step = ws0.map(_.lastGrad.clone())
     val gains = ws0.map(_.gains.clone())
-    val rowOf = pRows.map(r => idx.get(r.id))
+    var y = ws0.map(_.y.clone())
+    var yNext = ws0.map(_.y.clone()) // each pass writes the new positions here
+    val (rx, ry, rq) = (new Array[Double](n), new Array[Double](n), new Array[Double](n))
+    val lossParts = new Array[Double](n)
+    val loss = scala.collection.mutable.Map.empty[Int, Double]
+    var ps = p // P × the current phase's exaggeration, scaled once per phase
+    var psFactor = 1.0
 
     def parRange(bound: Int)(body: Int => Unit): Unit =
       java.util.stream.IntStream.range(0, bound).parallel()
         .forEach(k => body(k))
 
     for ((lossIter, momentum, factor) <- supersteps(params, schedule)) {
+      if (factor != psFactor) {
+        ps = if (factor == 1.0) p else p.map(_.map(_ * factor))
+        psFactor = factor
+      }
       val needLoss = lossIter % 10 == 0
-      // gradient (ref TsneHelpers.scala:221-318)
-      val tree = BhTree.build(y)
-      val rep = new Array[(Double, Double, Double)](n)
-      parRange(n) { k =>
-        rep(k) = tree.repulsiveForce(y(k)(0), y(k)(1), params.theta)
+      // gradient (ref TsneHelpers.scala:221-318); the parallel passes
+      // capture this superstep's buffers as vals
+      val (ys, out, pf) = (y, yNext, ps)
+      val tree = BhTree.build(ys)
+      parRange(n) { i =>
+        val (fx, fy, q) = tree.repulsiveForce(ys(i)(0), ys(i)(1), theta)
+        rx(i) = fx; ry(i) = fy; rq(i) = q
       }
       var sumQ = 0.0
-      var k = 0
-      while (k < n) { sumQ += rep(k)._3; k += 1 }
-      val sumQFixed = sumQ
-      val yOf: Long => Array[Double] = id => y(idx.get(id))
-      val grad = new Array[Array[Double]](n)
-      val lossParts = if (needLoss) new Array[Double](pRows.length) else null
-      parRange(pRows.length) { k =>
-        val row = pRows(k)
-        val i = rowOf(k)
-        val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
-        val (ax, ay) = Gradient.attractiveForce(row.js, ps, y(i), yOf, metric)
-        grad(i) = Array(ax - rep(i)._1 / sumQFixed, ay - rep(i)._2 / sumQFixed)
-        if (needLoss)
-          lossParts(k) = Gradient.lossPart(row.js, ps, y(i), yOf, metric, sumQFixed)
+      var i = 0
+      while (i < n) { sumQ += rq(i); i += 1 }
+      val sq = sumQ
+      // attraction, loss partial, gradient and update (ref
+      // TsneHelpers.scala:284-305, :341-369) in one pass per point
+      parRange(n) { i =>
+        val yi = ys(i)
+        val (ax, ay) = Gradient.attractiveForce(nbr(i), pf(i), yi, ys, metric)
+        if (needLoss) lossParts(i) = Gradient.lossPart(nbr(i), pf(i), yi, ys, metric, sq)
+        out(i)(0) = Gradient.updateComponent(yi(0), step(i), gains(i), 0,
+          Gradient.gradient(ax, rx(i), sq), minGain, momentum, lr)
+        out(i)(1) = Gradient.updateComponent(yi(1), step(i), gains(i), 1,
+          Gradient.gradient(ay, ry(i), sq), minGain, momentum, lr)
       }
       if (needLoss) {
         var l = 0.0
-        k = 0
-        while (k < lossParts.length) { l += lossParts(k); k += 1 }
-        loss.updateWith(lossIter) { case cur => Some(cur.getOrElse(0.0) + l) }
+        i = 0
+        while (i < n) { l += lossParts(i); i += 1 }
+        loss(lossIter) = l
       }
-      // update + center (ref TsneHelpers.scala:341-369, :320-329)
-      parRange(n) { k =>
-        val (ny, ns, ng) =
-          Gradient.update(y(k), step(k), gains(k), grad(k), params.minGain,
-            momentum, params.learningRate)
-        y(k) = ny; step(k) = ns; gains(k) = ng
-      }
-      centerInPlace(y)
+      // center (ref TsneHelpers.scala:320-329)
+      centerInPlace(out)
+      yNext = ys
+      y = out
     }
     (ids.zip(y).map { case (id, v) => Point(id, v) }, loss.toMap)
   }
@@ -255,9 +273,9 @@ object Optimizer {
 
   /** What one superstep broadcasts: the driver-built tree, the id-sorted
     * centered positions and the mean they were centered by. */
-  private final class Embedding(val tree: BhTree, ids: Array[Long], ys: Array[Array[Double]],
+  private final class Embedding(val tree: BhTree, ids: Array[Long], val ys: Array[Array[Double]],
                                 val mx: Double, val my: Double) extends Serializable {
-    def y(id: Long): Array[Double] = ys(java.util.Arrays.binarySearch(ids, id))
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
   }
 
   /** A point's row of one superstep's forces RDD: its state with the
@@ -302,10 +320,11 @@ object Optimizer {
       rows.zip(ws).map { case ((row, _), w) =>
         val yi = Array(w.y(0) - e.mx, w.y(1) - e.my)
         val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
-        val (ax, ay) = Gradient.attractiveForce(row.js, ps, yi, e.y, metric)
+        val nbr = row.js.map(e.index)
+        val (ax, ay) = Gradient.attractiveForce(nbr, ps, yi, e.ys, metric)
         val (rx, ry, sq) = e.tree.repulsiveForce(yi(0), yi(1), theta)
         val (lp, psum) =
-          if (needLoss) Gradient.lossPartsPreSumQ(row.js, ps, yi, e.y, metric)
+          if (needLoss) Gradient.lossPartsPreSumQ(nbr, ps, yi, e.ys, metric)
           else (0.0, 0.0)
         Forces(WorkingSet(w.id, yi, w.lastGrad, w.gains), ax, ay, rx, ry, sq, lp, psum)
       }
@@ -318,7 +337,7 @@ object Optimizer {
                           sumQ: Double): RDD[WorkingSet] = {
     val (minGain, lr) = (params.minGain, params.learningRate)
     forces.map { f =>
-      val grad = Array(f.ax - f.rx / sumQ, f.ay - f.ry / sumQ)
+      val grad = Array(Gradient.gradient(f.ax, f.rx, sumQ), Gradient.gradient(f.ay, f.ry, sumQ))
       val (ny, ns, ng) = Gradient.update(f.w.y, f.w.lastGrad, f.w.gains, grad, minGain,
         momentum, lr)
       WorkingSet(f.w.id, ny, ns, ng)
@@ -398,35 +417,32 @@ object Optimizer {
     * tree descent, i.e. the mathematically exact gradient — the reference
     * pins its gradient goldens the same way (`TsneHelpersTestSuite.scala:
     * 168-209`). The embedding (N×2 doubles) is collected and broadcast,
-    * exactly the reference's own strategy (`TsneHelpers.scala:277`); the
-    * O(N·k) attraction pass over P stays distributed. */
+    * exactly the reference's own strategy (`TsneHelpers.scala:277`), with
+    * each point's repulsion; the O(N·k) attraction pass over P stays
+    * distributed. */
   def gradientDataset(p: Dataset[AffinityRow], y: Dataset[Point], theta: Double,
                       metric: String): Dataset[Point] = {
     val spark = p.sparkSession
     import spark.implicits._
     val metricName = metric
     val arr = y.collect().sortBy(_.id) // canonical order, like the optimizer
-    val tree = BhTree.build(arr.map(_.vec))
-    val yMap = new java.util.HashMap[Long, Array[Double]](arr.length * 2)
-    val repMap = new java.util.HashMap[Long, Array[Double]](arr.length * 2)
+    val ids = arr.map(_.id)
+    val ys = arr.map(_.vec)
+    val tree = BhTree.build(ys)
+    val rep = ys.map(v => tree.repulsiveForce(v(0), v(1), theta))
     var sumQ = 0.0
-    arr.foreach { pt =>
-      yMap.put(pt.id, pt.vec)
-      val (rx, ry, sq) = tree.repulsiveForce(pt.vec(0), pt.vec(1), theta)
-      repMap.put(pt.id, Array(rx, ry))
-      sumQ += sq
-    }
-    val bcY = spark.sparkContext.broadcast(yMap)
-    val bcRep = spark.sparkContext.broadcast(repMap)
+    rep.foreach(r => sumQ += r._3)
+    val bc = spark.sparkContext.broadcast((ids, ys, rep))
     val sq = sumQ
     p.mapPartitions { rows =>
       val m = Distances.byName(metricName)
-      val ys = bcY.value
+      val (ids, ys, rep) = bc.value
+      def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
       rows.map { row =>
-        val yi = ys.get(row.id)
-        val (ax, ay) = Gradient.attractiveForce(row.js, row.ps, yi, ys.get(_), m)
-        val rep = bcRep.value.get(row.id)
-        Point(row.id, Array(ax - rep(0) / sq, ay - rep(1) / sq))
+        val i = index(row.id)
+        val (ax, ay) = Gradient.attractiveForce(row.js.map(index), row.ps, ys(i), ys, m)
+        Point(row.id,
+          Array(Gradient.gradient(ax, rep(i)._1, sq), Gradient.gradient(ay, rep(i)._2, sq)))
       }
     }
   }

@@ -89,6 +89,47 @@ class BhTreeSpec extends AnyFlatSpec with Matchers {
     (sqErrSum / 50) should be < 0.35
   }
 
+  "BhTree" should "return the former traversal's forces bit for bit" in {
+    // the centres of mass computed once at build and the empty children
+    // never pushed must not change a single bit of (fx, fy, sumQ)
+    val rnd = new Random(2718)
+    def cloud(n: Int, sigma: Double) =
+      Array.fill(n)(Array(rnd.nextGaussian() * sigma, rnd.nextGaussian() * sigma))
+    val spread = cloud(600, 5.0)
+    val eps = java.lang.Math.ulp(1.0)
+    val clouds = Seq(
+      "collapsed" -> cloud(1000, 1e-4),
+      "spread" -> spread,
+      "duplicates" -> (spread.take(200) ++ spread.take(30).map(_.clone()) ++
+        Array.fill(7)(spread(3).clone())),
+      // a dyadic grid: the mean is exactly 0 and the root cell [-2, 2]², so
+      // every point lies on cell edges down to the quarter grid
+      "boundary" -> (for (i <- -4 to 4; j <- -4 to 4) yield Array(i / 4.0, j / 4.0)).toArray,
+      "close" -> Array(Array(1.0, 1.0), Array(1.0 + eps, 1.0), Array(1.0, 1.0 + eps),
+        Array(1.0 + 2 * eps, 1.0 + eps), Array(1.0 + eps, 1.0 + eps), Array(0.0, 0.0),
+        Array(1.0, 1.0), Array(-3.0, 2.0)))
+    val strays = cloud(20, 1.0) // queries that are no point of the tree
+    for ((name, pts) <- clouds; theta <- Seq(0.0, 0.25, 1.0)) {
+      val now = BhTree.build(pts)
+      val before = FormerBhTree.build(pts)
+      for (p <- pts ++ strays) withClue(s"$name, theta=$theta, (${p(0)}, ${p(1)}): ") {
+        now.repulsiveForce(p(0), p(1), theta) shouldBe before.repulsiveForce(p(0), p(1), theta)
+      }
+    }
+  }
+
+  it should "keep its centres of mass current across inserts after the build" in {
+    val rnd = new Random(31)
+    val pts = Array.fill(300)(Array(rnd.nextGaussian(), rnd.nextGaussian()))
+    val now = BhTree.build(pts.take(200))
+    val before = FormerBhTree.build(pts.take(200))
+    pts.drop(200).foreach { p =>
+      now.insert(p(0), p(1)) shouldBe before.insert(p(0), p(1))
+    }
+    for (p <- pts; theta <- Seq(0.0, 0.25))
+      now.repulsiveForce(p(0), p(1), theta) shouldBe before.repulsiveForce(p(0), p(1), theta)
+  }
+
   "insert" should "reject points outside the root cell like the reference" in {
     val pts = Array(Array(0.0, 0.0), Array(1.0, 1.0), Array(0.5, 0.2))
     val tree = BhTree.build(pts)

@@ -15,15 +15,16 @@ class GradientSpec extends AnyFlatSpec with Matchers {
     * attraction, combined as F_attr − F_rep/sumQ. */
   private def gradientAt(pRows: Seq[(Long, Long, Double)], emb: Seq[Point],
                          theta: Double): Map[Long, Array[Double]] = {
-    val y = emb.map(p => p.id -> p.vec).toMap
-    val tree = BhTree.build(emb.map(_.vec))
+    val index = emb.map(_.id).zipWithIndex.toMap
+    val ys = emb.map(_.vec).toArray
+    val tree = BhTree.build(ys)
     val rep = emb.map(p => p.id -> tree.repulsiveForce(p.vec(0), p.vec(1), theta)).toMap
     val sumQ = emb.map(p => rep(p.id)._3).sum
     pRows.groupBy(_._1).map { case (i, rows) =>
-      val js = rows.map(_._2).toArray
+      val nbr = rows.map(r => index(r._2)).toArray
       val ps = rows.map(_._3).toArray
-      val (ax, ay) = Gradient.attractiveForce(js, ps, y(i), y(_), Distances.sqEuclidean)
-      i -> Array(ax - rep(i)._1 / sumQ, ay - rep(i)._2 / sumQ)
+      val (ax, ay) = Gradient.attractiveForce(nbr, ps, ys(index(i)), ys, Distances.sqEuclidean)
+      i -> Array(Gradient.gradient(ax, rep(i)._1, sumQ), Gradient.gradient(ay, rep(i)._2, sumQ))
     }
   }
 
@@ -67,12 +68,13 @@ class GradientSpec extends AnyFlatSpec with Matchers {
   "lossPart" should "be non-negative over a full P and decrease toward matched Q" in {
     // KL(P‖Q) summed over all rows is ≥ 0; pin the kernel's sign convention
     val emb = Goldens.initialEmbedding
-    val y = emb.map(p => p.id -> p.vec).toMap
-    val tree = BhTree.build(emb.map(_.vec))
+    val index = emb.map(_.id).zipWithIndex.toMap
+    val ys = emb.map(_.vec).toArray
+    val tree = BhTree.build(ys)
     val sumQ = emb.map(p => tree.repulsiveForce(p.vec(0), p.vec(1), 0.0)._3).sum
     val total = Goldens.denseJointProbabilities.groupBy(_._1).map { case (i, rows) =>
-      Gradient.lossPart(rows.map(_._2).toArray, rows.map(_._3).toArray,
-        y(i), y(_), Distances.sqEuclidean, sumQ)
+      Gradient.lossPart(rows.map(r => index(r._2)).toArray, rows.map(_._3).toArray,
+        ys(index(i)), ys, Distances.sqEuclidean, sumQ)
     }.sum
     total should be >= 0.0
   }

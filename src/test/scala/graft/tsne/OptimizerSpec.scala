@@ -68,6 +68,37 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     for ((k, v) <- localLoss) acc.value(k) shouldBe v +- 1e-9
   }
 
+  /** P and the seeded working set of a 300-point, 30-cluster mixture. */
+  private lazy val mixtureInput: (Array[AffinityRow], Array[WorkingSet]) = {
+    val s = spark
+    import s.implicits._
+    val pts = s.createDataset(Quality.clusteredCloud(300, 30, 10, seed = 99L))
+    val p = Affinities.highDimAffinities(Knn.bruteForce(pts, 30, "sqeuclidean"), 10.0)
+    (p.collect(), Optimizer.initWorkingSet(p, 2, seed = 5L).collect())
+  }
+
+  private def assertSameAsFormerLoop(pRows: Array[AffinityRow], ws0: Array[WorkingSet],
+                                     params: Optimizer.Params,
+                                     schedule: Seq[(Int, Double, Boolean, Int)]): Unit = {
+    val (now, nowLoss) = Optimizer.optimizeLocalSchedule(pRows, ws0, params, schedule)
+    val (before, beforeLoss) = FormerLocalLoop.optimizeLocalSchedule(pRows, ws0, params, schedule)
+    now.map(p => (p.id, p.vec.toSeq)) shouldBe before.map(p => (p.id, p.vec.toSeq))
+    nowLoss shouldBe beforeLoss
+  }
+
+  it should "equal the former loop bit for bit through all three phases" in {
+    val (pRows, ws0) = mixtureInput
+    val params = Optimizer.Params(perplexity = 10.0, iterations = 130, seed = 5L)
+    assertSameAsFormerLoop(pRows, ws0, params, Optimizer.phases(params))
+  }
+
+  it should "equal the former loop bit for bit on QualitySpec's broken schedule" in {
+    val (pRows, ws0) = mixtureInput
+    val params = Optimizer.Params(perplexity = 10.0, iterations = 250, seed = 5L)
+    // the schedule truncated after phase 1
+    assertSameAsFormerLoop(pRows, ws0, params, Seq((20, params.initialMomentum, true, 0)))
+  }
+
   "optimizeDistributed" should "match the local path on the same input" in {
     assertDistributedMatchesLocal(parts = 1)
   }
@@ -82,18 +113,17 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     val ws = goldenWorkingSet ++ Seq(
       WorkingSet(98L, Array(-0.05, 0.05), Array(0.0, 0.0), Array(1.0, 1.0)),
       WorkingSet(99L, Array(0.05, -0.05), Array(0.0, 0.0), Array(1.0, 1.0)))
-    // point 98 has an empty affinity row and point 99 no row at all: the
-    // static side's cogroup must keep both — they still feel repulsion and
-    // centering, every superstep, and appear in the final output, as an
-    // empty row does on the local path
+    // point 98 has an empty affinity row and point 99 no row at all: both
+    // paths must keep both — they feel no attraction but still feel
+    // repulsion and centering, every superstep, and appear in the output
     val pRows = toRows(Goldens.denseJointProbabilities) :+
       AffinityRow(98L, Array.empty[Long], Array.empty[Double])
     val params = superstepParams.copy(iterations = 5)
     val out = Optimizer.optimizeDistributed(
       s.createDataset(pRows.toSeq), s.createDataset(ws), params, None).collect()
-    val (local, _) = Optimizer.optimizeLocal(
-      pRows :+ AffinityRow(99L, Array.empty[Long], Array.empty[Double]), ws.toArray, params)
+    val (local, _) = Optimizer.optimizeLocal(pRows, ws.toArray, params)
     val localMap = local.map(p => p.id -> p.vec).toMap
+    local.map(_.id).toSet shouldBe ws.map(_.id).toSet
     out.map(_.id).toSet shouldBe ws.map(_.id).toSet
     for (p <- out; d <- 0 until 2) {
       withClue(s"y(${p.id})($d): ") { p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9 }
