@@ -45,7 +45,7 @@ object SparkEntry {
     // window over already-ranked output
     val ranked = method match {
       case "bruteforce" =>
-        Knn.topKPerPointRanked(Knn.bruteForcePairs(points, metric), 10)
+        Knn.bruteForceRanked(points, 10, metric)
       case "partition" =>
         Knn.partitionKnnRanked(points, 10, metric, 8)
     }
@@ -69,7 +69,7 @@ object SparkEntry {
       |""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // O5 — brute-force kNN: Cartesian + codegen'd distance + ranking window
+    // O5 — brute-force kNN: one exchange-free kernel with a k-heap per point
     "q_knn_bruteforce" -> ((s, dir) => knnQuery(s, dir, "bruteforce")),
 
     // O6 — block-nested-loop kNN (same logical result, bounded shuffle)
@@ -221,12 +221,10 @@ object SparkEntry {
       val k = 10
       val points = IO.readEmbeddings(s, dir)
       // one N² pass feeds both the pipeline (top-30) and the recall truth
-      // (top-10); persist the tiny ranked table, not the 25M-row pair table.
+      // (top-10); persist the tiny ranked table.
       // Both harnesses release it: Bench and Verify clearCache after every
       // query, so the cache cannot outlive this query's run.
-      val ranked = Knn
-        .topKPerPointRanked(Knn.bruteForcePairs(points, "sqeuclidean"), 30)
-        .persist()
+      val ranked = Knn.bruteForceRanked(points, 30, "sqeuclidean").persist()
       val knn = ranked.select(col("i"), col("j"), col("dist")).as[Neighbor]
       val emb = Tsne.computeEmbedding(knn,
         Optimizer.Params(perplexity = 10.0, iterations = 250, seed = 42L))
@@ -251,9 +249,7 @@ object SparkEntry {
       import s.implicits._
       val k = 10
       val points = s.createDataset(Quality.clusteredCloud(2000, 200, 10, seed = 4242L))
-      val ranked = Knn
-        .topKPerPointRanked(Knn.bruteForcePairs(points, "sqeuclidean"), 30)
-        .persist()
+      val ranked = Knn.bruteForceRanked(points, 30, "sqeuclidean").persist()
       val knn = ranked.select(col("i"), col("j"), col("dist")).as[Neighbor]
       val emb = Tsne.computeEmbedding(knn,
         Optimizer.Params(perplexity = 5.0, iterations = 250, seed = 42L))

@@ -1,10 +1,13 @@
 package graft.tsne
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
+
+import graft.SuperstepPartitioner
 
 /** k-nearest-neighbor variants (ref: `TsneHelpers.scala:41-160`), Spark-first.
   *
@@ -45,16 +48,10 @@ object Knn {
       .select(col("i"), col("j"), col("rn"), col("dist"))
   }
 
-  /** The brute-force all-pairs distance table (shared by [[bruteForce]] and
-    * the ranked query form).
-    *
-    * The left side is spread over the configured shuffle parallelism before
-    * the cross join: a small points table often arrives as one scan
-    * partition, and the cross join inherits the left side's partitioning —
-    * without the spread, all N² distance evaluations (the actual work)
-    * would run in a single task no matter how many cores the cluster has.
-    * The 2 kB/row reshuffle is noise next to the N·d work per row it
-    * parallelizes. */
+  /** The brute-force all-pairs distance table `(i, j, dist)`, for callers
+    * that filter the pairs before ranking them (`q_rrf_fusion`); the kNN
+    * itself is [[bruteForce]]. The left side is spread over the shuffle
+    * parallelism before the cross join, which inherits its partitioning. */
   def bruteForcePairs(points: Dataset[Point], metric: String): DataFrame = {
     val spark = points.sparkSession
     val parallelism = spark.sessionState.conf.numShufflePartitions
@@ -67,14 +64,86 @@ object Knn {
         Distances.colByName(metric)(col("va"), col("vb")).as("dist"))
   }
 
-  /** O5 — brute-force kNN (ref `TsneHelpers.scala:41-59`): all-pairs
-    * distances via Cartesian product, drop self-pairs, grouped top-k.
+  /** O5 — brute-force kNN (ref `TsneHelpers.scala:41-59`): every point's k
+    * nearest other points by `metric`, exact, in one stage with no
+    * exchange ([[bruteForceKernel]]).
     *
-    * The distance is a pure Catalyst expression (`zip_with`/`aggregate`),
-    * so the N² map side stays inside whole-stage codegen; the only shuffle
-    * is the hash partition on `i` for the ranking window. */
-  def bruteForce(points: Dataset[Point], k: Int, metric: String): Dataset[Neighbor] =
-    topKPerPoint(bruteForcePairs(points, metric), k)
+    * Each of the `spark.sql.shuffle.partitions` tasks holds the whole
+    * point set, N·d doubles, so this is the route for point sets that fit
+    * in one task's memory (README "Choosing a path"); `partitionKnn`
+    * bounds per-task memory instead. Each task reads `points` once: an
+    * uncached input's lineage (a CSV scan, a grouping) re-runs once per
+    * task, so persist an expensive one first. Building the kernel calls
+    * `points.rdd`, which runs the exchanges in `points`' own plan. */
+  def bruteForce(points: Dataset[Point], k: Int, metric: String): Dataset[Neighbor] = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    spark.createDataset(bruteForceKernel(points, k, metric).flatMap(_.iterator))
+  }
+
+  /** [[bruteForce]] with the rank kept: `(i, j, rn, dist)`, `rn` counting
+    * from 1 in `(dist, j)` order, the rows of
+    * [[topKPerPointRanked]] over [[bruteForcePairs]]. */
+  def bruteForceRanked(points: Dataset[Point], k: Int, metric: String): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    spark.createDataset(bruteForceKernel(points, k, metric).flatMap(withRank))
+      .toDF("i", "j", "rn", "dist")
+  }
+
+  /** The [[bruteForce]] kernel: one array per point id, its neighbours
+    * ascending in `(dist, j)`. Task `t` of `p` = `spark.sql.shuffle.partitions`
+    * reads the whole point set (`coalesce(1)` crossed with the task
+    * numbers) and answers the ids [[graft.SuperstepPartitioner]] routes to
+    * `t`. Rows sharing an id are pooled into one heap, as a ranking window
+    * over `i` pools them. The distances are [[Distances.byName]]'s, whose
+    * summation order is the codegen'd expressions', so every value is
+    * bit-identical to the cross-join form; vectors of different lengths
+    * are an error. */
+  private[tsne] def bruteForceKernel(points: Dataset[Point], k: Int,
+                                     metric: String): RDD[Array[Neighbor]] = {
+    val part = SuperstepPartitioner.of(points.sparkSession)
+    val fn = Distances.byName(metric)
+    points.sparkSession.sparkContext
+      .parallelize(0 until part.numPartitions, part.numPartitions)
+      .cartesian(points.rdd.coalesce(1))
+      .mapPartitions { rows =>
+        val all = rows.toArray
+        if (all.isEmpty) Iterator.empty
+        else {
+          val task = all(0)._1
+          val ids = all.map(_._2.id)
+          val vecs = all.map(_._2.vec)
+          var q = 0
+          while (q < vecs.length) {
+            require(vecs(q) != null, s"bruteForce: vector ${ids(q)} is null")
+            require(vecs(q).length == vecs(0).length, s"bruteForce: vector ${ids(q)} " +
+              s"has length ${vecs(q).length} but vector ${ids(0)} has ${vecs(0).length}")
+            q += 1
+          }
+          val own = all.indices.filter(r => part.getPartition(ids(r)) == task)
+            .sortBy(r => ids(r)).toArray
+          val heap = new NeighborHeap(k)
+          new Iterator[Array[Neighbor]] {
+            private var g = 0
+            def hasNext: Boolean = g < own.length
+            def next(): Array[Neighbor] = {
+              val i = ids(own(g))
+              while (g < own.length && ids(own(g)) == i) {
+                val a = vecs(own(g))
+                var c = 0
+                while (c < vecs.length) {
+                  if (ids(c) != i) heap.offer(fn(a, vecs(c)), ids(c))
+                  c += 1
+                }
+                g += 1
+              }
+              heap.drain(i)
+            }
+          }
+        }
+      }
+  }
 
   /** O6 — block-nested-loop kNN (ref `TsneHelpers.scala:61-91`): points are
     * modulo-partitioned into `blocks` blocks, blocks are crossed, and
@@ -97,9 +166,7 @@ object Knn {
     import spark.implicits._
     partitionLocalTopK(points, k, metric, blocks)
       .groupByKey(_.i)
-      .flatMapGroups[Neighbor] { (_: Long, it: Iterator[Neighbor]) =>
-        it.toArray.sortBy(n => (n.dist, n.j)).take(k).iterator
-      }
+      .flatMapGroups((i: Long, it: Iterator[Neighbor]) => merge(i, it, k).iterator)
   }
 
   /** Ranked form of [[partitionKnn]]: the final per-point merge emits the
@@ -110,11 +177,16 @@ object Knn {
     import spark.implicits._
     partitionLocalTopK(points, k, metric, blocks)
       .groupByKey(_.i)
-      .flatMapGroups[(Long, Long, Long, Double)] { (_: Long, it: Iterator[Neighbor]) =>
-        it.toArray.sortBy(n => (n.dist, n.j)).take(k).iterator.zipWithIndex
-          .map { case (n, idx) => (n.i, n.j, (idx + 1).toLong, n.dist) }
-      }
+      .flatMapGroups((i: Long, it: Iterator[Neighbor]) => withRank(merge(i, it, k)))
       .toDF("i", "j", "rn", "dist")
+  }
+
+  /** [[partitionKnn]]'s final merge: point `i`'s block-local top-k lists
+    * pooled in one [[NeighborHeap]]. */
+  private def merge(i: Long, lists: Iterator[Neighbor], k: Int): Array[Neighbor] = {
+    val heap = new NeighborHeap(k)
+    lists.foreach(n => heap.offer(n.dist, n.j))
+    heap.drain(i)
   }
 
   private def partitionLocalTopK(points: Dataset[Point], k: Int, metric: String,
@@ -132,30 +204,28 @@ object Knn {
       }
     }
 
-    val localTopK: Dataset[Neighbor] = tagged
+    tagged
       .groupByKey(_._1)
       .flatMapGroups[Neighbor] { (_: Int, it: Iterator[(Int, Boolean, Point)]) =>
         val lefts = scala.collection.mutable.ArrayBuffer.empty[Point]
         val rights = scala.collection.mutable.ArrayBuffer.empty[Point]
         it.foreach { case (_, isLeft, p) => (if (isLeft) lefts else rights) += p }
+        val heap = new NeighborHeap(k)
         lefts.iterator.flatMap { p =>
-          val cand = new Array[Neighbor](rights.length)
-          var n = 0
           var idx = 0
           while (idx < rights.length) {
             val q = rights(idx)
-            if (q.id != p.id) { cand(n) = Neighbor(p.id, q.id, fn(p.vec, q.vec)); n += 1 }
+            if (q.id != p.id) heap.offer(fn(p.vec, q.vec), q.id)
             idx += 1
           }
-          val local = java.util.Arrays.copyOf(cand, n)
-          scala.util.Sorting.stableSort(local,
-            (x: Neighbor, y: Neighbor) => x.dist < y.dist || (x.dist == y.dist && x.j < y.j))
-          local.take(k).iterator
+          heap.drain(p.id).iterator
         }
       }
-
-    localTopK
   }
+
+  /** A point's ascending neighbours as `(i, j, rn, dist)`, `rn` from 1. */
+  private def withRank(ns: Array[Neighbor]): Iterator[(Long, Long, Long, Double)] =
+    ns.iterator.zipWithIndex.map { case (n, r) => (n.i, n.j, r + 1L, n.dist) }
 
   /** O7/O8 — approximate kNN by z-order projections
     * (ref `TsneHelpers.scala:93-160`): the points (plus `iterations − 1`
@@ -351,4 +421,62 @@ object Knn {
           window = math.max(tunedWindow(points.count()), k))
       case _ => throw new IllegalArgumentException(s"Knn method '$method' not defined")
     }
+
+  /** A point's k nearest candidates so far: a bounded max-heap on
+    * `(dist, j)` in Spark's sort order — `java.lang.Double.compare` puts
+    * NaN last (a distance is never −0.0, where the two orders differ),
+    * ties go to the lower `j`. One instance serves any number of points:
+    * [[drain]] empties it. */
+  private[tsne] final class NeighborHeap(k: Int) {
+    private val cap = math.max(k, 0)
+    private val ds = new Array[Double](cap)
+    private val js = new Array[Long](cap)
+    private var size = 0
+
+    private def after(a: Int, b: Int): Boolean = {
+      val c = java.lang.Double.compare(ds(a), ds(b))
+      c > 0 || (c == 0 && js(a) > js(b))
+    }
+
+    private def swap(a: Int, b: Int): Unit = {
+      val d = ds(a); ds(a) = ds(b); ds(b) = d
+      val j = js(a); js(a) = js(b); js(b) = j
+    }
+
+    private def siftDown(from: Int, n: Int): Unit = {
+      var h = from
+      var done = false
+      while (!done) {
+        val l = 2 * h + 1
+        if (l >= n) done = true
+        else {
+          val c = if (l + 1 < n && after(l + 1, l)) l + 1 else l
+          if (after(c, h)) { swap(c, h); h = c } else done = true
+        }
+      }
+    }
+
+    def offer(dist: Double, j: Long): Unit =
+      if (size < cap) {
+        ds(size) = dist; js(size) = j
+        var h = size
+        size += 1
+        while (h > 0 && after(h, (h - 1) / 2)) { swap(h, (h - 1) / 2); h = (h - 1) / 2 }
+      } else if (cap > 0) {
+        val c = java.lang.Double.compare(dist, ds(0))
+        if (c < 0 || (c == 0 && j < js(0))) {
+          ds(0) = dist; js(0) = j
+          siftDown(0, size)
+        }
+      }
+
+    /** Point `i`'s neighbours, ascending; leaves the heap empty. */
+    def drain(i: Long): Array[Neighbor] = {
+      var n = size
+      while (n > 1) { n -= 1; swap(0, n); siftDown(0, n) }
+      val out = Array.tabulate(size)(r => Neighbor(i, js(r), ds(r)))
+      size = 0
+      out
+    }
+  }
 }

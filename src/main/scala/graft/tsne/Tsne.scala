@@ -90,17 +90,17 @@ object Tsne {
       // default would stay driver-local)
       maxLocalPEntries = opt("maxLocalPEntries", "2000000").toLong)
 
-    val knn: Dataset[Neighbor] =
+    // the kNN is built on the run path only: building it can run jobs
+    // (bruteforce reads `points.rdd`, projectKnn counts and ranks)
+    val input: Either[Dataset[Neighbor], Dataset[Point]] =
       if (a.contains("inputDistanceMatrix")) {
         val spark2 = spark
         import spark2.implicits._
-        IO.readCoo(spark, inputPath)
-          .map(e => Neighbor(e.i, e.j.toLong, e.v))
-      } else {
-        val points = IO.readInput(spark, inputPath, dimension)
-        Knn.byMethod(knnMethod, points, neighbors, metric, knnBlocks,
-          knnIterations, params.seed, dimension)
-      }
+        Left(IO.readCoo(spark, inputPath).map(e => Neighbor(e.i, e.j.toLong, e.v)))
+      } else Right(IO.readInput(spark, inputPath, dimension))
+    def knnOf(points: Dataset[Point]): Dataset[Neighbor] =
+      Knn.byMethod(knnMethod, points, neighbors, metric, knnBlocks,
+        knnIterations, params.seed, dimension)
 
     // validate the recall report arguments BEFORE any Spark work: failing
     // after a multi-minute pipeline has already run (and written output)
@@ -111,73 +111,85 @@ object Tsne {
         s"--recallK must be in [1, --neighbors]; got $k with neighbors=$neighbors")
       (path, k)
     }
-    val executionPlan = a.contains("executionPlan")
 
-    val lossAcc = new MapAccumulator
-    spark.sparkContext.register(lossAcc, "loss")
-    // --recallOut reads the kNN graph a second time (as the recall truth);
-    // persist it so that read is a cache hit, not a re-run of the full
-    // kNN lineage (for bruteforce, a second N² pass)
-    val wantRecall = recallOut.nonEmpty && !executionPlan
-    if (wantRecall) knn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      runBody(knn, params, lossAcc, outputPath, lossFile, executionPlan, recallOut)
-    } finally if (wantRecall) knn.unpersist()
+    if (a.contains("executionPlan")) {
+      // the kNN is dumped over an empty point set, like the affinity
+      // kernel below (projectKnn still runs its count and ranking jobs)
+      import spark.implicits._
+      val empty = spark.emptyDataset[Point]
+      writePlan(spark, params, input match {
+        case Left(knn) => "== kNN ==\n" + knn.queryExecution.toString
+        case Right(points) =>
+          "== points ==\n" + points.queryExecution.toString +
+            "\n== kNN (over an empty point set) ==\n" +
+            (if (knnMethod == "bruteforce")
+              Knn.bruteForceKernel(empty, neighbors, metric).toDebugString
+            else knnOf(empty).queryExecution.toString)
+      })
+    } else {
+      val knn = input.fold(identity, knnOf)
+      val lossAcc = new MapAccumulator
+      spark.sparkContext.register(lossAcc, "loss")
+      // --recallOut reads the kNN graph a second time (as the recall truth);
+      // persist it so that read is a cache hit, not a re-run of the full
+      // kNN lineage (for bruteforce, a second N² pass)
+      if (recallOut.nonEmpty) knn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try runBody(knn, params, lossAcc, outputPath, lossFile, recallOut)
+      finally if (recallOut.nonEmpty) knn.unpersist()
+    }
+  }
+
+  /** ref Tsne.scala:89-95 — dump the plan INSTEAD OF executing, submitting
+    * ZERO Spark jobs: `knnPlan`, then the affinity kernel's lineage over an
+    * empty kNN, as the superstep is dumped over representative datasets.
+    * Built over real input, an RDD kernel would run the exchanges of that
+    * input's plan (`Dataset.rdd` materializes AQE stages). */
+  private def writePlan(spark: SparkSession, params: Optimizer.Params,
+                        knnPlan: String): Unit = {
+    import spark.implicits._
+    val kernel = Affinities.affinityRows(spark.emptyDataset[Neighbor], params.perplexity)
+    val pDs = spark.createDataset(kernel)
+    val ws0 = Optimizer.initWorkingSet(pDs, params.nComponents, params.seed)
+    val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
+    pw.write(knnPlan +
+      "\n== affinity kernel (RDD lineage, over an empty kNN) ==\n" +
+      kernel.toDebugString +
+      "\n== init working set ==\n" + ws0.queryExecution.toString +
+      "\n" + Optimizer.superstepPlanString(pDs, ws0, params))
+    pw.close()
   }
 
   /** The pipeline after argument validation: `recallOut` is the validated
     * `--recallOut` path and `--recallK`. */
   private def runBody(knn: Dataset[Neighbor], params: Optimizer.Params,
                       lossAcc: MapAccumulator, outputPath: String, lossFile: String,
-                      executionPlan: Boolean, recallOut: Option[(String, Int)]): Unit = {
-    if (executionPlan) {
-      // ref Tsne.scala:89-95 — dump the plan INSTEAD OF executing. This
-      // branch submits ZERO Spark jobs. The kNN is dumped as its lazy
-      // plan. The affinity kernel is an RDD, and building it over that
-      // kNN would run the kNN's exchanges (`Dataset.rdd` materializes AQE
-      // stages), so its lineage is dumped over an empty kNN, as the
-      // superstep is dumped over representative datasets
-      val spark = knn.sparkSession
-      import spark.implicits._
-      val kernel = Affinities.affinityRows(spark.emptyDataset[Neighbor], params.perplexity)
-      val pDs = spark.createDataset(kernel)
-      val ws0 = Optimizer.initWorkingSet(pDs, params.nComponents, params.seed)
-      val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
-      pw.write(
-        "== kNN ==\n" + knn.queryExecution.toString +
-          "\n== affinity kernel (RDD lineage, over an empty kNN) ==\n" +
-          kernel.toDebugString +
-          "\n== init working set ==\n" + ws0.queryExecution.toString +
-          "\n" + Optimizer.superstepPlanString(pDs, ws0, params))
-      pw.close()
-    } else {
-      val result = computeEmbedding(knn, params, Some(lossAcc))
-      IO.writeEmbeddingCsv(result, outputPath)
-      val pw = new java.io.PrintWriter(new java.io.File(lossFile))
-      pw.write(lossAcc.value.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k=$v" }.mkString("{", ", ", "}"))
-      pw.close()
-      // rebuild extension (no reference counterpart): --recallOut <path>
-      // writes the embedding's neighbor-recall@k — the quality gate a real
-      // t-SNE user checks on every run (see graft.tsne.Quality). The truth
-      // side re-reads the pipeline's own kNN graph (persisted above), so
-      // no kNN lineage re-runs.
-      recallOut.foreach { case (path, k) =>
-        val truth = Knn.topKPerPointRanked(
-          knn.toDF().select(col("i"), col("j"), col("dist")), k)
-        val row = Quality.neighborRecall(truth, result, k).head()
-        val n = row.getLong(row.fieldIndex("n_points"))
-        // denominator = actual truth pairs: a sparse graph (distance-matrix
-        // input with < k entries for some rows) must still report 1.0 when
-        // every truth neighborhood is preserved
-        val pairs = row.getLong(row.fieldIndex("truth_pairs"))
-        val recall =
-          if (pairs == 0) 0.0
-          else row.getLong(row.fieldIndex("hits")).toDouble / pairs.toDouble
-        val rw = new java.io.PrintWriter(new java.io.File(path))
-        rw.write(f"{n=$n, k=$k, recall=$recall%.6f}")
-        rw.close()
-      }
+                      recallOut: Option[(String, Int)]): Unit = {
+    val result = computeEmbedding(knn, params, Some(lossAcc))
+    IO.writeEmbeddingCsv(result, outputPath)
+    val pw = new java.io.PrintWriter(new java.io.File(lossFile))
+    pw.write(lossAcc.value.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"$k=$v" }.mkString("{", ", ", "}"))
+    pw.close()
+    // rebuild extension (no reference counterpart): --recallOut <path>
+    // writes the embedding's neighbor-recall@k — the quality gate a real
+    // t-SNE user checks on every run (see graft.tsne.Quality). The truth
+    // side re-reads the pipeline's own kNN graph (persisted above), so
+    // no kNN lineage re-runs.
+    recallOut.foreach { case (path, k) =>
+      val truth = Knn.topKPerPointRanked(
+        knn.toDF().select(col("i"), col("j"), col("dist")), k)
+      val row = Quality.neighborRecall(truth, result, k).head()
+      val n = row.getLong(row.fieldIndex("n_points"))
+      // denominator = actual truth pairs: a sparse graph (distance-matrix
+      // input with < k entries for some rows) must still report 1.0 when
+      // every truth neighborhood is preserved
+      val pairs = row.getLong(row.fieldIndex("truth_pairs"))
+      val recall =
+        if (pairs == 0) 0.0
+        else row.getLong(row.fieldIndex("hits")).toDouble / pairs.toDouble
+      val rw = new java.io.PrintWriter(new java.io.File(path))
+      rw.write(f"{n=$n, k=$k, recall=$recall%.6f}")
+      rw.close()
     }
   }
 

@@ -13,7 +13,7 @@ import graft.tsne.SparkTestBase
   * refactor can't silently regress them. Runs on sf0.001 (plan shapes are
   * scale-independent).
   */
-class PlanShapeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
+class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspectors with SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -55,19 +55,35 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     plan.sliding("HashAggregate".length).count(_ == "HashAggregate") should be >= 2
   }
 
-  "q_knn_bruteforce" should "keep the distance inside codegen and use the top-k operator" in {
-    val df = SparkEntry.queries("q_knn_bruteforce")(spark, dir)
+  "q_rrf_fusion" should "keep the distance inside codegen and use the top-k operator" in {
+    val df = SparkEntry.queries("q_rrf_fusion")(spark, dir)
     df.collect() // finalize adaptive plan
     val plan = df.queryExecution.executedPlan.toString
     plan should include("*(")
-    // the rank-filter window was rewritten to the bounded-heap operator:
-    // map-side partial heaps, a standard Tungsten hash exchange, then a
-    // spillable sort of the SURVIVORS ONLY feeding the streaming rank
-    // scan — the N² pair input itself is never sorted
+    // the rank-filter window over the filtered pair table was rewritten to
+    // the bounded-heap operator: map-side partial heaps, a standard
+    // Tungsten hash exchange, then a spillable sort of the SURVIVORS ONLY
+    // feeding the streaming rank scan — the pair input itself is never
+    // sorted
     plan should include("GroupedTopKLimitPartial")
     plan should include("GroupedTopKLimitFinal")
     (plan.linesIterator.exists(l =>
       l.contains("Exchange hashpartitioning(i#"))) shouldBe true
+  }
+
+  "q_knn_bruteforce" should "rank inside the kNN kernel, with no exchange but the output sort" in {
+    val df = SparkEntry.queries("q_knn_bruteforce")(spark, dir)
+    df.collect() // finalize adaptive plan
+    val plan = df.queryExecution.executedPlan.toString
+    // no pair table and no ranking window: the kernel's rows are scanned
+    // and range-partitioned once for the ORDER BY
+    plan should not include ("NestedLoopJoin")
+    plan should not include ("CartesianProduct")
+    plan should not include ("GroupedTopKLimit")
+    plan should not include ("Window")
+    forAll(plan.linesIterator.filter(_.contains("Exchange ")).toSeq) { l =>
+      l should include("rangepartitioning")
+    }
   }
 
   "q_source_cap" should "execute the per-source quota through the top-k operator" in {

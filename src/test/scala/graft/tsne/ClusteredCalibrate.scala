@@ -19,8 +19,7 @@ object ClusteredCalibrate {
     try for ((n, clusters, dim, perp) <- Seq(
       (2000, 200, 10, 5.0), (2000, 200, 10, 10.0), (2000, 250, 10, 5.0))) {
       val points = spark.createDataset(Quality.clusteredCloud(n, clusters, dim, seed = 4242L))
-      val ranked = Knn
-        .topKPerPointRanked(Knn.bruteForcePairs(points, "sqeuclidean"), 30)
+      val ranked = Knn.bruteForceRanked(points, 30, "sqeuclidean")
         .persist()
       val knn = ranked.select(col("i"), col("j"), col("dist")).as[Neighbor]
       val truth = ranked.where(col("rn") <= k)

@@ -1,5 +1,8 @@
 package graft.tsne
 
+import org.apache.spark.{ShuffleDependency, SparkException}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -143,5 +146,109 @@ class KnnSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspectors wi
         r.dist shouldBe fn(vecs(r.i), vecs(r.j)) +- 1e-12
       }
     }
+  }
+
+  // ---- the one-stage kernel against the former cross join + ranking window
+
+  private def cloud(n: Int, dim: Int, seed: Long): Seq[Point] = {
+    val rng = new scala.util.Random(seed)
+    (0 until n).map(i => Point(i.toLong, Array.fill(dim)(rng.nextGaussian())))
+  }
+
+  /** `(i, rn, j, dist bits)` of ranked rows, sorted. */
+  private def rankedBits(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().toSeq.map { r =>
+      (r.getAs[Long]("i"), r.getAs[Long]("rn"), r.getAs[Long]("j"),
+        java.lang.Double.doubleToLongBits(r.getAs[Double]("dist")))
+    }.sorted
+
+  /** `(i, j, dist bits)` of neighbour rows, sorted. */
+  private def neighbourBits(rows: Seq[Neighbor]): Seq[(Long, Long, Long)] =
+    rows.map(n => (n.i, n.j, java.lang.Double.doubleToLongBits(n.dist))).sorted
+
+  private val allMetrics = Seq("sqeuclidean", "euclidean", "cosine")
+
+  // (case, points, k, metrics): every one is run at 1 and 7 shuffle
+  // partitions on a shuffled row order
+  private lazy val pinCases: Seq[(String, Seq[Point], Int, Seq[String])] = {
+    val lattice = {
+      // coordinates in {0, 1, 2}: exact-duplicate vectors, distance ties
+      // everywhere, and all-zero vectors (NaN under cosine)
+      val rng = new scala.util.Random(11L)
+      (0 until 60).map(i => Point(i.toLong, Array.fill(3)(rng.nextInt(3).toDouble)))
+    }
+    val zeros = Seq(Point(1000L, Array.fill(8)(0.0)), Point(1001L, Array.fill(8)(0.0)))
+    val small = cloud(12, 4, 3L)
+    Seq(
+      ("a random cloud", cloud(300, 16, 1L), 10, allMetrics),
+      ("exact-duplicate vectors", lattice, 7, allMetrics),
+      ("an all-zero vector", cloud(100, 8, 2L) ++ zeros, 10, Seq("cosine")),
+      ("a duplicated id", cloud(40, 6, 4L) ++
+        Seq(Point(3L, Array.fill(6)(0.5)), Point(5L, cloud(40, 6, 4L)(5).vec)), 5, allMetrics),
+      ("k >= N", small, small.length + 3, allMetrics),
+      ("k = 0", small, 0, Seq("sqeuclidean")),
+      ("an empty input", Seq.empty[Point], 5, Seq("sqeuclidean")),
+      ("a single point", Seq(Point(7L, Array(1.0, 2.0))), 5, Seq("sqeuclidean")))
+  }
+
+  "bruteForce" should "equal the former cross join and ranking window bit for bit" in {
+    val s = spark
+    import s.implicits._
+    for ((name, points, k, metrics) <- pinCases; metric <- metrics; parts <- Seq(1, 7))
+      withClue(s"$name, $metric, $parts partitions: ") {
+        withShufflePartitions(parts) {
+          val ds = s.createDataset(new scala.util.Random(parts.toLong).shuffle(points))
+          val former = rankedBits(FormerKnn.bruteForceRanked(ds, k, metric))
+          rankedBits(Knn.bruteForceRanked(ds, k, metric)) shouldBe former
+          neighbourBits(Knn.bruteForce(ds, k, metric).collect().toSeq) shouldBe
+            former.map(r => (r._1, r._3, r._4)).sorted
+          if (name == "a random cloud") former.size shouldBe points.size * k
+        }
+      }
+  }
+
+  it should "sort a NaN distance last and break distance ties by the lower j" in {
+    val s = spark
+    import s.implicits._
+    val ds = s.createDataset(Seq(Point(1L, Array(1.0, 0.0)), Point(2L, Array(0.0, 0.0)),
+      Point(3L, Array(0.0, 1.0)), Point(4L, Array(0.0, 1.0))))
+    Knn.bruteForceRanked(ds, 3, "cosine").where("i = 1").orderBy("rn")
+      .collect().map(r => r.getAs[Long]("j")).toSeq shouldBe Seq(3L, 4L, 2L)
+  }
+
+  it should "reject vectors of different lengths" in {
+    val s = spark
+    import s.implicits._
+    // the cross-join form gave such a pair a null distance, ranked first
+    val ds = s.createDataset(Seq(Point(1L, Array(0.0, 1.0, 2.0)), Point(2L, Array(0.0, 1.0))))
+    intercept[SparkException] {
+      Knn.bruteForce(ds, 1, "sqeuclidean").collect()
+    }.getMessage should include("has length")
+  }
+
+  it should "run as one stage: no shuffle, and no more jobs than the cross join" in {
+    val s = spark
+    import s.implicits._
+    val ds = s.createDataset(cloud(200, 8, 5L))
+    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case d: ShuffleDependency[_, _, _] => d +: shuffles(d.rdd)
+        case d => shuffles(d.rdd)
+      }
+    shuffles(Knn.bruteForceKernel(ds, 10, "sqeuclidean")) shouldBe empty
+    val jobs = graft.SubmittedWork.of(s)(Knn.bruteForce(ds, 10, "sqeuclidean").count()).jobs
+    val former = graft.SubmittedWork.of(s)(FormerKnn.bruteForce(ds, 10, "sqeuclidean").count()).jobs
+    jobs should be <= former
+  }
+
+  "partitionKnn" should "equal bruteForce bit for bit on ties, NaN and a duplicated id" in {
+    val s = spark
+    import s.implicits._
+    for ((name, points, k, metrics) <- pinCases.take(4); metric <- metrics)
+      withClue(s"$name, $metric: ") {
+        val ds = s.createDataset(points)
+        rankedBits(Knn.partitionKnnRanked(ds, k, metric, 3)) shouldBe
+          rankedBits(Knn.bruteForceRanked(ds, k, metric))
+      }
   }
 }

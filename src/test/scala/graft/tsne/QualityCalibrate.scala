@@ -21,8 +21,7 @@ object QualityCalibrate {
     try args.foreach { dir =>
       val k = 10
       val points = IO.readEmbeddings(spark, dir)
-      val ranked = Knn
-        .topKPerPointRanked(Knn.bruteForcePairs(points, "sqeuclidean"), 30)
+      val ranked = Knn.bruteForceRanked(points, 30, "sqeuclidean")
         .persist()
       val knn = ranked.select(col("i"), col("j"), col("dist")).as[Neighbor]
       knn.count() // materialize the cached kNN before timing the pipeline

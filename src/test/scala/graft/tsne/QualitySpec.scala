@@ -64,8 +64,7 @@ class QualitySpec extends AnyFlatSpec with Matchers with SparkTestBase {
     import s.implicits._
     val k = 10
     val points = s.createDataset(Quality.clusteredCloud(2000, 200, 10, seed = 4242L))
-    val ranked = Knn
-      .topKPerPointRanked(Knn.bruteForcePairs(points, "sqeuclidean"), 30)
+    val ranked = Knn.bruteForceRanked(points, 30, "sqeuclidean")
       .persist()
     val knn = ranked.select(
       org.apache.spark.sql.functions.col("i"),
