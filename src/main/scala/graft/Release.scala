@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.{GraftBlocks, RDD}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -8,9 +9,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `localCheckpoint`'s blocks are RDD-level. */
 object Release {
 
+  /** Drops an RDD's blocks. A local checkpoint is freed quietly: its
+    * lineage is truncated by design, so `unpersist`'s WARN says nothing. */
+  def rdd(r: RDD[_]): Unit = GraftBlocks.release(r)
+
   /** Drops the blocks behind a `localCheckpoint`ed frame nothing reads. */
   def checkpoint(checkpointed: Dataset[_]): Unit =
-    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
+    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => rdd(r.rdd) }
 
   /** Runs `body`, then clears the Dataset cache and unpersists every RDD
     * that became persistent while it ran — the isolation between queries
@@ -21,7 +26,7 @@ object Release {
     try body
     finally {
       spark.catalog.clearCache()
-      sc.getPersistentRDDs.foreach { case (id, rdd) => if (!before(id)) rdd.unpersist() }
+      sc.getPersistentRDDs.foreach { case (id, r) => if (!before(id)) rdd(r) }
     }
   }
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.Partitioner
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle key of one map task's partial of a global quantity, bound for
-  * reduce partition `partition`: PageRank's dangling mass
-  * ([[graft.ops.Graph]]) and the affinity normalization total
-  * ([[graft.tsne.Affinities]]). */
+/** Shuffle key of what one map task sends reduce partition `partition` as
+  * one record: a partial of a global quantity (the affinity normalization
+  * total, [[graft.tsne.Affinities]]) or a packed block of ids and values
+  * (the graph superstep kernels, [[graft.ops.Graph]]). */
 private[graft] final case class ReduceShare(partition: Int)
 
 /** Hash partitioning of ids (the `HashPartitioner` rule) that sends each
@@ -17,9 +17,16 @@ private[graft] final case class SuperstepPartitioner(numPartitions: Int)
     extends Partitioner {
   def getPartition(key: Any): Int = key match {
     case ReduceShare(p) => p
-    case k =>
-      val m = k.hashCode % numPartitions
-      if (m < 0) m + numPartitions else m
+    case k => owner(k.hashCode)
+  }
+
+  /** The partition of id `v`, as [[getPartition]] places a boxed `Long`,
+    * without boxing it. */
+  def partitionOf(v: Long): Int = owner(java.lang.Long.hashCode(v))
+
+  private def owner(hash: Int): Int = {
+    val m = hash % numPartitions
+    if (m < 0) m + numPartitions else m
   }
 
   /** One copy of a map task's `partial` per reduce partition, each under

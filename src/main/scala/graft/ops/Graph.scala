@@ -1,13 +1,14 @@
 package graft.ops
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import graft.{ReduceShare, SuperstepPartitioner}
+import graft.{Release, ReduceShare, SuperstepPartitioner}
 
 /** Link-graph scoring — the crawl-curation signal family: PageRank-style
   * centrality over an edge table, the score CommonCrawl-derived pipelines
@@ -27,16 +28,20 @@ import graft.{ReduceShare, SuperstepPartitioner}
   * oracle's unrolled spelling).
   *
   * Scale shape: PageRank/PPR, k-core and the duplicate-cluster components
-  * run as co-partitioned RDD supersteps. The adjacency (|V| rows,
-  * neighbour arrays) is built once, hash-partitioned and checkpointed; a
-  * superstep is a narrow position-by-position join of the node state with
-  * it and ONE map-side-combined `reduceByKey` of messages (the label loop
-  * adds two shuffles for path halving). PageRank/PPR submit no job per
-  * iteration (the dangling mass rides the same shuffle); the peel and
-  * label loops submit one job per round, whose count both materializes the
-  * round's checkpoint and tests convergence. No cross product, no
-  * window, no driver data path. Alternatives measured and rejected are in
-  * LEDGER.md.
+  * run on one superstep kernel over packed blocks of primitive arrays.
+  * One narrow pass over the edge rows packs them into one block per map
+  * task and reduce partition; one shuffle of those blocks builds each
+  * partition's adjacency as a CSR (sorted node ids, offsets, neighbours),
+  * one `localCheckpoint`ed element per partition. The node state is a
+  * primitive array in CSR order. A superstep combines its messages per
+  * destination inside the map task and ships one block of ids and values
+  * per reduce partition, PageRank's dangling partial inside it, so every
+  * shuffle moves at most (map tasks × reduce partitions) records whatever
+  * the edge count. PageRank/PPR submit no job per iteration; the peel and
+  * label loops submit one job per round, whose count both materializes
+  * the round's checkpoint and tests convergence. No cross product, no
+  * window, no driver data path. The spellings measured before this one
+  * are in LEDGER.md.
   */
 object Graph {
 
@@ -79,20 +84,13 @@ object Graph {
                            checkpointEvery: Int = 6): DataFrame =
     rankSupersteps(edges, Some(seeds), iters, scale, checkpointEvery)
 
-  /** A node's static superstep state: its out-neighbours (duplicates kept,
-    * so multiplicity counts) and whether it takes restart and dangling
-    * mass (every node in PageRank, the seeds in PPR). */
-  private final case class Adjacency(out: Array[Long], restart: Boolean)
-
-  /** The PageRank/PPR superstep kernel. The adjacency is built once,
-    * partitioned by [[SuperstepPartitioner]] and `localCheckpoint`ed; the
-    * job that materializes it also counts the restart nodes. The rank RDD
-    * is always produced by walking the adjacency partition in order, so
-    * each superstep reads both sides position by position (a narrow,
-    * co-partitioned join) and runs ONE shuffle: a `reduceByKey` of the
-    * contributions keyed by `dst`, plus one dangling partial per map task
-    * for every reduce partition. No job runs per superstep — the caller's
-    * action executes all of them. */
+  /** The PageRank/PPR kernel. Each node's out-arcs keep their duplicates,
+    * so multiplicity counts; the flagged nodes (the seeds in PPR, every
+    * node in PageRank) take restart and dangling mass. The job that
+    * materializes the adjacency also counts them. A superstep is one
+    * [[exchange]] of rank contributions, the dangling partial riding it,
+    * and a narrow apply: no job runs per superstep — the caller's action
+    * executes all of them. */
   private def rankSupersteps(edges: DataFrame, seeds: Option[DataFrame],
                              iters: Int, scale: Long,
                              checkpointEvery: Int): DataFrame = {
@@ -102,77 +100,255 @@ object Graph {
     val spark = edges.sparkSession
     val part = SuperstepPartitioner.of(spark)
     val everyNode = seeds.isEmpty
-    val e = longPairs(edges.select("src", "dst"))
-    val seedIds = seeds.fold(spark.sparkContext.emptyRDD[(Long, Unit)])(
-      _.select(col("node").cast("long")).na.drop().rdd.map(r => (r.getLong(0), ())))
-    val adj = e.cogroup(e.map { case (_, d) => (d, ()) }, seedIds, part)
-      .mapValues { case (out, _, seed) =>
-        Adjacency(out.toArray, everyNode || seed.nonEmpty) }
-      .localCheckpoint()
-    val restartNodes = adj.aggregate(0L)(
-      (n, a) => if (a._2.restart) n + 1 else n, _ + _)
+    val arcs = pack(longRows(edges.select("src", "dst"), 2), part) { (p, r) =>
+      p.arc(r.getLong(0), r.getLong(1))
+      p.id(r.getLong(1))
+    }
+    val seedIds = seeds.map(s =>
+      pack(longRows(s.select("node"), 1), part)((p, r) => p.mark(r.getLong(0))))
+    val csr = adjacency(seedIds.fold(arcs)(arcs.union), part, markedOnly = false, distinct = false)
+    val restarts = (c: Csr, i: Int) => everyNode || c.flag(i)
+    val restartNodes = csr.map(c => c.ids.indices.count(restarts(c, _)).toLong).fold(0L)(_ + _)
     require(restartNodes > 0,
       if (everyNode) "pageRank needs a non-empty edge table"
       else "personalizedPageRank needs a non-empty seed set")
     val base = scale / restartNodes
 
-    var ranks = adj.mapValues(a => if (a.restart) base else 0L)
+    var ranks = csr.map(c => Array.tabulate(c.size)(i => if (restarts(c, i)) base else 0L))
     var it = 0
     while (it < iters) {
-      val sums = adj.zipPartitions(ranks) { (as, rs) =>
-        var dm = 0L
-        val contribs = as.zip(rs).flatMap { case ((_, a), (_, r)) =>
-          if (a.out.isEmpty) { dm += r; Iterator.empty }
+      val in = exchange(csr, ranks, part, 0L, _ + _) { (c, r, acc) =>
+        var dangling = 0L
+        var i = 0
+        while (i < c.size) {
+          val d = c.off(i + 1) - c.off(i)
+          if (d == 0) dangling += r(i)
           else {
-            val c = r / a.out.length
-            a.out.iterator.map(d => (d: Any, c))
+            val x = r(i) / d
+            var e = c.off(i)
+            while (e < c.off(i + 1)) { acc(c.slot(e)) += x; e += 1 }
           }
+          i += 1
         }
-        // `++` takes its operand by name: the partials are built after
-        // the contributions are drained, when `dm` is final
-        contribs ++ (if (dm == 0L) Iterator.empty else part.shares(dm))
-      }.reduceByKey(part, _ + _)
-      ranks = adj.zipPartitions(sums) { (as, ss) =>
-        val contrib = new mutable.LongMap[Long]
-        var dm = 0L
-        ss.foreach {
-          case (ReduceShare(_), x) => dm = x
-          case (v: Long, x) => contrib(v) = x
-        }
-        val share = dm / restartNodes
-        as.map { case (v, a) =>
-          val (b, d) = if (a.restart) (base, share) else (0L, 0L)
-          (v, (15L * b + 85L * (contrib.getOrElse(v, 0L) + d)) / 100L)
-        }
+        dangling
+      }
+      ranks = csr.zipPartitions(in) { (cs, ins) =>
+        val c = cs.next()
+        val m = ins.next()
+        val share = m.partial / restartNodes
+        Iterator(Array.tabulate(c.size) { i =>
+          if (restarts(c, i)) (15L * base + 85L * (m.values(i) + share)) / 100L
+          else 85L * m.values(i) / 100L
+        })
       }
       it += 1
       if (it % checkpointEvery == 0 && it < iters) ranks.localCheckpoint()
     }
-    spark.createDataFrame(ranks).toDF("node", "rank")
+    val rows = csr.zipPartitions(ranks) { (cs, rs) =>
+      val (c, r) = (cs.next(), rs.next())
+      c.ids.indices.iterator.map(i => (c.ids(i), r(i)))
+    }
+    spark.createDataFrame(rows).toDF("node", "rank")
   }
 
-  /** The first two columns of `df` as long pairs, rows with a null dropped. */
-  private def longPairs(df: DataFrame): RDD[(Long, Long)] =
-    df.select(df.columns.take(2).toSeq.map(c => col(c).cast("long")): _*)
-      .na.drop().rdd.map(r => (r.getLong(0), r.getLong(1)))
+  /** The first `n` columns of `df` cast to long, rows with a null dropped,
+    * as the plan's own rows (no conversion to external `Row`s). */
+  private def longRows(df: DataFrame, n: Int): RDD[InternalRow] =
+    df.select(df.columns.take(n).toSeq.map(c => col(c).cast("long")): _*)
+      .na.drop().queryExecution.toRdd
 
-  /** The undirected simple adjacency `node → distinct neighbours` of
-    * `edges` (self-loops dropped, parallel and reversed edges collapsed),
-    * partitioned by `part` and `localCheckpoint`ed; the caller's first job
-    * materializes it. With a `domain`, only its ids are keys, though their
-    * neighbour arrays may still name ids outside it. */
-  private def undirectedAdjacency(edges: RDD[(Long, Long)],
-                                  domain: Option[RDD[Long]],
-                                  part: Partitioner): RDD[(Long, Array[Long])] = {
-    val restricted = domain.isDefined
-    val arcs = edges.flatMap { case (a, b) =>
-      if (a == b) Iterator.empty else Iterator((a, b), (b, a)) }
-    val keys = domain.fold(edges.sparkContext.emptyRDD[(Long, Unit)])(
-      _.map(v => (v, ())))
-    arcs.cogroup(keys, part)
-      .filter { case (_, (ns, in)) => ns.nonEmpty && (!restricted || in.nonEmpty) }
-      .mapValues { case (ns, _) => ns.toArray.distinct }
+  /** One map task's share of an adjacency for one reduce partition: the
+    * arcs `src(i) → dst(i)` whose source the partition owns, the ids it
+    * owns that are nodes with or without an arc (`ids`: PageRank's arc
+    * targets), and the ids it owns that carry the kernel's flag
+    * (`marked`: the PPR seeds, the components id domain). */
+  private final case class ArcBlock(src: Array[Long], dst: Array[Long],
+                                    ids: Array[Long], marked: Array[Long])
+
+  /** A map task's [[ArcBlock]] buffers, one set per reduce partition. */
+  private final class ArcPacker(part: SuperstepPartitioner) {
+    private def buffers = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
+    private val (src, dst, ids, marked) = (buffers, buffers, buffers, buffers)
+
+    def arc(s: Long, d: Long): Unit = {
+      val q = part.partitionOf(s)
+      src(q) += s
+      dst(q) += d
+    }
+    def id(v: Long): Unit = ids(part.partitionOf(v)) += v
+    def mark(v: Long): Unit = marked(part.partitionOf(v)) += v
+
+    /** One block per reduce partition that receives anything; an id added
+      * more than once travels once. */
+    def blocks: Iterator[(Any, ArcBlock)] =
+      Iterator.range(0, part.numPartitions).flatMap { q =>
+        val b = ArcBlock(src(q).result(), dst(q).result(),
+          sortedDistinct(ids(q).result()), sortedDistinct(marked(q).result()))
+        if (b.src.isEmpty && b.ids.isEmpty && b.marked.isEmpty) None
+        else Some((ReduceShare(q), b))
+      }
+  }
+
+  /** One narrow pass over `rows` that packs what `add` makes of each row. */
+  private def pack(rows: RDD[InternalRow], part: SuperstepPartitioner)(
+      add: (ArcPacker, InternalRow) => Unit): RDD[(Any, ArcBlock)] =
+    rows.mapPartitions { it =>
+      val p = new ArcPacker(part)
+      it.foreach(add(p, _))
+      p.blocks
+    }
+
+  /** Packs each edge row `(a, b)` with a ≠ b as the arcs a → b and b → a. */
+  private def undirectedArcs(rows: RDD[InternalRow],
+                             part: SuperstepPartitioner): RDD[(Any, ArcBlock)] =
+    pack(rows, part) { (p, r) =>
+      val a = r.getLong(0)
+      val b = r.getLong(1)
+      if (a != b) { p.arc(a, b); p.arc(b, a) }
+    }
+
+  /** One partition's adjacency: its nodes' ids ascending, node `i`'s arcs
+    * at `off(i) until off(i + 1)`, and each arc's target as a slot of
+    * `dsts`, which holds the distinct targets grouped by owning partition
+    * (`dstOff(q) until dstOff(q + 1)`) and ascending within it. `flag(i)`
+    * says whether node `i` was marked. */
+  private final case class Csr(ids: Array[Long], off: Array[Int], slot: Array[Int],
+                               dsts: Array[Long], dstOff: Array[Int],
+                               flag: Array[Boolean]) {
+    def size: Int = ids.length
+  }
+
+  /** `a` ascending without repeats; sorts `a` in place. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var w = 0
+    for (r <- a.indices) if (r == 0 || a(r) != a(r - 1)) { a(w) = a(r); w += 1 }
+    java.util.Arrays.copyOf(a, w)
+  }
+
+  /** Builds a partition's [[Csr]] from its blocks. The nodes are the arc
+    * sources, `ids` and `marked`, or with `markedOnly` just `marked` (arcs
+    * from any other source are dropped). With `distinct` a node keeps one
+    * copy of each neighbour. */
+  private def buildCsr(blocks: Array[ArcBlock], part: SuperstepPartitioner,
+                       markedOnly: Boolean, distinct: Boolean): Csr = {
+    def all(f: ArcBlock => Array[Long]): Array[Long] = Array.concat(blocks.toSeq.map(f): _*)
+    val (src, dst, marked) = (all(_.src), all(_.dst), all(_.marked))
+    val ids = sortedDistinct(
+      if (markedOnly) marked.clone() else Array.concat(src, all(_.ids), marked))
+    val n = ids.length
+    val flag = new Array[Boolean](n)
+    marked.foreach(v => flag(java.util.Arrays.binarySearch(ids, v)) = true)
+
+    // arcs by source node, a counting sort
+    val at = src.map(java.util.Arrays.binarySearch(ids, _))
+    val off = new Array[Int](n + 1)
+    at.foreach(i => if (i >= 0) off(i + 1) += 1)
+    for (i <- 0 until n) off(i + 1) += off(i)
+    val nbr = new Array[Long](off(n))
+    val fill = java.util.Arrays.copyOf(off, n)
+    for (a <- at.indices if at(a) >= 0) { nbr(fill(at(a))) = dst(a); fill(at(a)) += 1 }
+    if (distinct) {
+      var w = 0
+      for (i <- 0 until n) {
+        val (from, to) = (off(i), off(i + 1))
+        java.util.Arrays.sort(nbr, from, to)
+        off(i) = w
+        for (r <- from until to) if (r == from || nbr(r) != nbr(r - 1)) { nbr(w) = nbr(r); w += 1 }
+      }
+      off(n) = w
+    }
+
+    // distinct targets, grouped by the partition that owns them
+    val targets = sortedDistinct(java.util.Arrays.copyOf(nbr, off(n)))
+    val owner = targets.map(part.partitionOf)
+    val dstOff = new Array[Int](part.numPartitions + 1)
+    owner.foreach(q => dstOff(q + 1) += 1)
+    for (q <- 0 until part.numPartitions) dstOff(q + 1) += dstOff(q)
+    val dsts = new Array[Long](targets.length)
+    val pos = new Array[Int](targets.length)
+    val next = java.util.Arrays.copyOf(dstOff, part.numPartitions)
+    for (t <- targets.indices) {
+      val q = owner(t)
+      pos(t) = next(q)
+      dsts(next(q)) = targets(t)
+      next(q) += 1
+    }
+    val slot = Array.tabulate(off(n))(e => pos(java.util.Arrays.binarySearch(targets, nbr(e))))
+    Csr(ids, off, slot, dsts, dstOff, flag)
+  }
+
+  /** The [[Csr]] adjacency of `blocks`: one shuffle of the packed blocks,
+    * one element per partition, `localCheckpoint`ed; the caller's first
+    * job materializes it. */
+  private def adjacency(blocks: RDD[(Any, ArcBlock)], part: SuperstepPartitioner,
+                        markedOnly: Boolean, distinct: Boolean): RDD[Csr] =
+    blocks.partitionBy(part)
+      .mapPartitions(bs => Iterator(buildCsr(bs.map(_._2).toArray, part, markedOnly, distinct)))
       .localCheckpoint()
+
+  /** One map task's messages for one reduce partition: `values(i)` for node
+    * `ids(i)`, and the task's share of a global sum (PageRank's dangling
+    * mass). */
+  private final case class Messages(ids: Array[Long], values: Array[Long], partial: Long)
+
+  /** A map task's `(id, value)` buffers, one per reduce partition. */
+  private final class Outbox(part: SuperstepPartitioner) {
+    private def buffers = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
+    private val (ids, values) = (buffers, buffers)
+
+    def add(q: Int, id: Long, value: Long): Unit = { ids(q) += id; values(q) += value }
+    def send(id: Long, value: Long): Unit = add(part.partitionOf(id), id, value)
+
+    /** One [[Messages]] block for each reduce partition that has
+      * messages, or for every one when the partial is not zero. */
+    def blocks(partial: Long): Iterator[(Any, Messages)] =
+      Iterator.range(0, part.numPartitions).flatMap { q =>
+        val m = Messages(ids(q).result(), values(q).result(), partial)
+        if (m.ids.isEmpty && partial == 0L) None else Some((ReduceShare(q), m))
+      }
+  }
+
+  /** A partition's received messages, combined per node in CSR order
+    * (`empty` where none arrived), and the sum of the partials. */
+  private final case class Inbox(values: Array[Long], partial: Long)
+
+  /** The [[Inbox]] of a partition whose nodes are `ids` (ascending). */
+  private def receive(ids: Array[Long], ms: Iterator[Messages], empty: Long,
+                      combine: (Long, Long) => Long): Inbox = {
+    val values = Array.fill(ids.length)(empty)
+    var partial = 0L
+    ms.foreach { m =>
+      partial += m.partial
+      for (k <- m.ids.indices) {
+        val i = java.util.Arrays.binarySearch(ids, m.ids(k))
+        if (i >= 0) values(i) = combine(values(i), m.values(k))
+      }
+    }
+    Inbox(values, partial)
+  }
+
+  /** One superstep's exchange, the step every kernel here shares. In each
+    * partition `send` writes its nodes' messages into one slot per distinct
+    * target (`acc`, filled with `empty` first; `send` combines) and
+    * returns the partition's partial. Every slot that is not `empty`
+    * travels in one [[Messages]] block per reduce partition, and each
+    * partition combines what reaches its nodes with `combine`. One
+    * shuffle, no job. */
+  private def exchange[S: ClassTag](csr: RDD[Csr], state: RDD[S], part: SuperstepPartitioner,
+                                    empty: Long, combine: (Long, Long) => Long)(
+      send: (Csr, S, Array[Long]) => Long): RDD[Inbox] = {
+    val sent = csr.zipPartitions(state) { (cs, ss) =>
+      val c = cs.next()
+      val acc = Array.fill(c.dsts.length)(empty)
+      val partial = send(c, ss.next(), acc)
+      val out = new Outbox(part)
+      for (q <- 0 until part.numPartitions; t <- c.dstOff(q) until c.dstOff(q + 1))
+        if (acc(t) != empty) out.add(q, c.dsts(t), acc(t))
+      out.blocks(partial)
+    }.partitionBy(part)
+    csr.zipPartitions(sent)((cs, ms) =>
+      Iterator(receive(cs.next().ids, ms.map(_._2), empty, combine)))
   }
 
   /** Exact per-node triangle counts on an undirected graph — the local
@@ -292,83 +468,104 @@ object Graph {
     * regardless of removal order), every round is integer counting — no
     * float anywhere — so the result is partition- and engine-invariant.
     *
-    * Scale shape: the state is each node's live degree (−1 once dead). Per
-    * round every node below k dies and sends one loss to each neighbour
-    * (ONE `reduceByKey`, shuffle ∝ the peeled edges), then a narrow apply
-    * and a `localCheckpoint` whose job also counts the nodes the NEXT
-    * round peels: one job per round, and a zero count is the fixpoint.
-    * Rounds = cascade depth, NOT diameter; a cascade deeper than
-    * `maxRounds` fails loudly rather than returning a half-peeled set. */
+    * Scale shape: the adjacency is undirected and simple (self-loops
+    * dropped, parallel and reversed edges collapsed); the state is each
+    * node's live degree (−1 once dead). Per round every node below k dies
+    * and sends one loss to each neighbour (one [[exchange]], shuffle ∝ the
+    * peeled edges), then a narrow apply and a `localCheckpoint` whose job
+    * also counts the nodes the NEXT round peels: one job per round, and a
+    * zero count is the fixpoint. Rounds = cascade depth, NOT diameter; a
+    * cascade deeper than `maxRounds` fails loudly rather than returning a
+    * half-peeled set. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges.sparkSession
     val part = SuperstepPartitioner.of(spark)
     val idType = edges.select(least(col("src"), col("dst"))).schema.head.dataType
-    val adj = undirectedAdjacency(longPairs(edges.select("src", "dst")), None, part)
+    val csr = adjacency(undirectedArcs(longRows(edges.select("src", "dst"), 2), part), part,
+      markedOnly = false, distinct = true)
     val peels = (d: Int) => d >= 0 && d < k
-    var deg = adj.mapValues(_.length).localCheckpoint()
-    var dying = deg.filter(v => peels(v._2)).count()
+    val dying = (s: Degrees) => s.deg.count(peels).toLong
+    var deg = csr.map(c => Degrees(c.ids, Array.tabulate(c.size)(i => c.off(i + 1) - c.off(i))))
+      .localCheckpoint()
+    var peeling = deg.map(dying).fold(0L)(_ + _)
     var rounds = 0
-    while (dying > 0) {
+    while (peeling > 0) {
       if (rounds == maxRounds)
         throw new IllegalStateException(
           s"kCore(k=$k) did not reach the fixpoint in $maxRounds rounds " +
             "(pathologically deep cascade) — raise maxRounds")
-      val lost = adj.zipPartitions(deg) { (as, ds) =>
-        as.zip(ds).flatMap { case ((_, ns), (_, d)) =>
-          if (peels(d)) ns.iterator.map(n => (n, 1)) else Iterator.empty }
-      }.reduceByKey(part, _ + _)
+      val lost = exchange(csr, deg, part, 0L, _ + _) { (c, s, acc) =>
+        for (i <- 0 until c.size if peels(s.deg(i)); e <- c.off(i) until c.off(i + 1))
+          acc(c.slot(e)) += 1
+        0L
+      }
       val next = deg.zipPartitions(lost) { (ds, ls) =>
-        val m = mutable.LongMap.from(ls)
-        ds.map { case (v, d) => (v, if (d < k) -1 else d - m.getOrElse(v, 0)) }
+        val (s, l) = (ds.next(), ls.next())
+        Iterator(Degrees(s.ids, Array.tabulate(s.ids.length)(i =>
+          if (s.deg(i) < k) -1 else s.deg(i) - l.values(i).toInt)))
       }.localCheckpoint()
-      dying = next.filter(v => peels(v._2)).count()
-      deg.unpersist()
+      peeling = next.map(dying).fold(0L)(_ + _)
+      Release.rdd(deg)
       deg = next
       rounds += 1
     }
-    adj.unpersist()
-    spark.createDataFrame(deg.filter(_._2 >= k).mapValues(_.toLong))
+    Release.rdd(csr)
+    val core = deg.flatMap(s => s.ids.indices.iterator.filter(s.deg(_) >= k)
+      .map(i => (s.ids(i), s.deg(i).toLong)))
+    spark.createDataFrame(core)
       .toDF("node", "deg").select(col("node").cast(idType), col("deg"))
   }
 
+  /** A partition's live degrees in CSR node order, with the CSR's ids. */
+  private final case class Degrees(ids: Array[Long], deg: Array[Int])
+
+  /** A partition's labels in CSR node order, with the CSR's ids, and
+    * whether each changed in the last round. */
+  private final case class Labels(ids: Array[Long], label: Array[Long], fresh: Array[Boolean])
+
   /** The connected-components kernel of
     * [[graft.pipeline.Dedup.duplicateClusters]], which states the contract.
-    * The state is each connected node's label and whether it changed last
-    * round (only a changed label is sent). Per round: ONE `reduceByKey` of
-    * neighbour minima, a narrow apply, from the third round
-    * [[halvePaths]], then a `localCheckpoint` whose job counts the changed
-    * labels. Ids without an edge skip the rounds and are unioned back. */
+    * The nodes are the ids of `nodes`, each with its distinct neighbours
+    * (which may lie outside `nodes`, and then receive nothing). The state
+    * is each node's label and whether it changed last round (only a
+    * changed label is sent). Per round: one [[exchange]] of neighbour
+    * minima, a narrow apply, from the third round [[halvePaths]], then a
+    * `localCheckpoint` whose job counts the changed labels. An id without
+    * an edge keeps its own label. */
   private[graft] def components(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     val part = SuperstepPartitioner.of(spark)
     val id = nodes.schema.head
-    val ids = nodes.select(col(id.name).cast("long")).na.drop().rdd.map(_.getLong(0))
-    val adj = undirectedAdjacency(longPairs(edges), Some(ids), part)
-    var labels = adj.mapPartitions(_.map { case (v, _) => (v, (v, true)) },
-      preservesPartitioning = true)
+    val domain = pack(longRows(nodes, 1), part)((p, r) => p.mark(r.getLong(0)))
+    val csr = adjacency(undirectedArcs(longRows(edges, 2), part).union(domain), part,
+      markedOnly = true, distinct = true)
+    val min = (a: Long, b: Long) => math.min(a, b)
+    var labels = csr.map(c => Labels(c.ids, c.ids, Array.fill(c.size)(true)))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
-      val nbrMin = adj.zipPartitions(labels) { (as, ls) =>
-        as.zip(ls).flatMap { case ((_, ns), (_, (l, fresh))) =>
-          if (fresh) ns.iterator.map(n => (n, l)) else Iterator.empty }
-      }.reduceByKey(part, math.min(_, _))
-      val prop = labels.zipPartitions(nbrMin, preservesPartitioning = true) { (ls, ms) =>
-        val m = mutable.LongMap.from(ms)
-        ls.map { case (v, (l, _)) => val b = math.min(l, m.getOrElse(v, l)); (v, (b, b < l)) }
+      val nbrMin = exchange(csr, labels, part, Long.MaxValue, min) { (c, s, acc) =>
+        for (i <- 0 until c.size if s.fresh(i); e <- c.off(i) until c.off(i + 1))
+          acc(c.slot(e)) = math.min(acc(c.slot(e)), s.label(i))
+        0L
+      }
+      val prop = labels.zipPartitions(nbrMin) { (ls, ms) =>
+        val (s, m) = (ls.next(), ms.next())
+        val label = Array.tabulate(s.ids.length)(i => math.min(s.label(i), m.values(i)))
+        Iterator(Labels(s.ids, label, Array.tabulate(label.length)(i => label(i) < s.label(i))))
       }
       // plain propagation settles the shallow stars of real near-dup
       // graphs in two rounds; halving from the third keeps a deep chain
       // at O(log D) rounds
       val next = (if (rounds < 2) prop else halvePaths(prop, part)).localCheckpoint()
-      changed = next.filter(_._2._2).count()
-      labels.unpersist()
+      changed = next.map(_.fresh.count(identity).toLong).fold(0L)(_ + _)
+      Release.rdd(labels)
       labels = next
       rounds += 1
     }
-    adj.unpersist()
+    Release.rdd(csr)
     // convergence is a CORRECTNESS property, not best-effort: exiting on
     // the round cap with changes still flowing would silently return split
     // components for any duplicate chain of diameter > cap
@@ -376,30 +573,42 @@ object Graph {
       s"duplicateClusters did not converge after $rounds rounds " +
         "(a duplicate chain longer than the round cap exists); " +
         "raise the cap or pre-collapse exact duplicates first")
-    val singletons = ids.map(v => (v, ())).subtractByKey(labels, part)
-      .map { case (v, _) => (v, v) }
-    spark.createDataFrame(labels.mapValues(_._1).union(singletons))
+    val rows = labels.flatMap(s => s.ids.indices.iterator.map(i => (s.ids(i), s.label(i))))
+    spark.createDataFrame(rows)
       .toDF("id", "cluster")
       .select(col("id").cast(id.dataType), col("cluster").cast(id.dataType))
   }
 
   /** One path-halving step, `l(v) ← min(l(v), l(l(v)))`: every label is
     * a node of the same state, so each node asks its label's owner (two
-    * shuffles, there and back) and a chain's depth halves. */
-  private def halvePaths(labels: RDD[(Long, (Long, Boolean))],
-                         part: Partitioner): RDD[(Long, (Long, Boolean))] = {
-    val asks = labels.flatMap { case (v, (l, _)) =>
-      if (l == v) Iterator.empty else Iterator((l, v)) }.partitionBy(part)
-    val answers = labels.zipPartitions(asks) { (ls, qs) =>
-      val own = mutable.LongMap.from(ls.map { case (v, (l, _)) => (v, l) })
-      qs.map { case (t, v) => (v, own(t)) }
+    * shuffles of packed blocks, there and back) and a chain's depth
+    * halves. */
+  private def halvePaths(labels: RDD[Labels], part: SuperstepPartitioner): RDD[Labels] = {
+    val asks = labels.mapPartitions { ls =>
+      val s = ls.next()
+      val out = new Outbox(part)
+      for (i <- s.ids.indices if s.label(i) != s.ids(i)) out.send(s.label(i), s.ids(i))
+      out.blocks(0L)
     }.partitionBy(part)
-    labels.zipPartitions(answers, preservesPartitioning = true) { (ls, as) =>
-      val m = mutable.LongMap.from(as)
-      ls.map { case (v, (l, fresh)) =>
-        val j = m.getOrElse(v, l)
-        if (j < l) (v, (j, true)) else (v, (l, fresh))
+    val answers = labels.zipPartitions(asks) { (ls, qs) =>
+      val s = ls.next()
+      val out = new Outbox(part)
+      qs.foreach { case (_, m) =>
+        for (k <- m.ids.indices)
+          out.send(m.values(k), s.label(java.util.Arrays.binarySearch(s.ids, m.ids(k))))
       }
+      out.blocks(0L)
+    }.partitionBy(part)
+    labels.zipPartitions(answers) { (ls, as) =>
+      val s = ls.next()
+      val in = receive(s.ids, as.map(_._2), Long.MaxValue, (a, b) => math.min(a, b))
+      val label = s.label.clone()
+      val fresh = s.fresh.clone()
+      for (i <- label.indices if in.values(i) < label(i)) {
+        label(i) = in.values(i)
+        fresh(i) = true
+      }
+      Iterator(Labels(s.ids, label, fresh))
     }
   }
 

@@ -50,29 +50,6 @@ object Jsonl {
         .json(path)
   }
 
-  /** Streaming face of [[readDocuments]]: the same declared schema and
-    * quarantine column over `spark.readStream.json` — a JSONL drop
-    * directory becomes an incremental ingest source (each newly landed
-    * file is one micro-batch; no inference pass, no schema drift between
-    * batches, corrupt lines carried per-row exactly like batch). Pair
-    * with [[graft.pipeline.Dedup.minHashIncremental]] downstream for
-    * continuous near-dup-free ingest. `JsonlSpec` pins streaming ≡ batch
-    * row-for-row, quarantine included. */
-  def readDocumentsStream(spark: SparkSession, path: String,
-                          strict: Boolean = false): DataFrame = {
-    if (strict)
-      spark.readStream
-        .schema(documentsSchema)
-        .option("mode", "FAILFAST")
-        .json(path)
-    else
-      spark.readStream
-        .schema(documentsSchema.add("_corrupt", StringType))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(path)
-  }
-
   /** Write a corpus as JSONL (one object per line, UTF-8) — the sink side
     * of the interchange. Plain `df.write.json`; kept as a named seam so
     * compression/partitioning policy lives in one place. */

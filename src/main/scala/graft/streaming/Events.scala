@@ -661,15 +661,13 @@ object Events {
   // OR when they have run for `cap` since their first event (billing
   // periods, bot-trap cutoffs, "sessions never exceed a shift"). The cap
   // makes the split sequential (each split resets the cap base), so it is
-  // not a window function — batch runs it through a sorted-group fold,
-  // streaming through flatMapGroupsWithState with an event-time timeout.
+  // not a window function; it runs as a sorted-group fold.
   // ------------------------------------------------------------------
 
   /** Sequential session fold over ts-sorted (tsUs, value) rows: start a
     * new session when the inactivity gap exceeds `gapUs` OR the span since
     * the CURRENT session's first event exceeds `capUs`. Returns (closed
-    * sessions in order, still-open session). Shared verbatim by the batch
-    * and streaming paths so the two cannot drift. */
+    * sessions in order, still-open session). */
   private[streaming] def foldSessions(
       open: Option[OpenSession], rows: Iterator[(Long, Double)],
       gapUs: Long, capUs: Long): (Vector[OpenSession], Option[OpenSession]) = {
@@ -704,55 +702,6 @@ object Events {
           foldSessions(None, rows.map(r => (r._2, r._4)), gapUs, capUs)
         (closed ++ open).map(o =>
           CappedSession(user, o.startUs, o.endUs, o.n, o.sum)).iterator
-      }
-  }
-
-  /** Streaming capped sessionization: keyed open-session state, closed
-    * sessions emitted in Append mode, the trailing session flushed by an
-    * event-time timeout `gap` past its last event (by then no on-time
-    * event can extend it; the cap needs no own timer — it can only fire
-    * on an arriving event, which the fold handles).
-    *
-    * Ordering contract: rows are sorted by ts WITHIN each micro-batch
-    * (an in-memory sort of that key's batch slice only); cross-batch
-    * order per key must be non-decreasing up to the watermark, the same
-    * assumption Spark's own sessionization pattern makes. Late events
-    * beyond the watermark are dropped by the upstream `withWatermark`. */
-  def cappedSessionsStream(events: DataFrame,
-                           gapUs: Long = 24L * 3600 * 1000000,
-                           capUs: Long = 48L * 3600 * 1000000): org.apache.spark.sql.Dataset[CappedSession] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    // the watermarked `ts` attribute must reach the stateful operator
-    // (the streaming checker tracks the watermark tag on the column, so
-    // projecting it away would reject EventTimeTimeout); ts_us rides next
-    // to it because the fold works in exact micros
-    events
-      .select(col("user_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, CappedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Double)],
-         state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val last = state.get
-            state.remove()
-            Iterator(CappedSession(user, last.startUs, last.endUs, last.n, last.sum))
-          } else {
-            val sorted = rows.toVector.sortBy(r => r._3)
-            val (closed, open) = foldSessions(
-              state.getOption, sorted.iterator.map(r => (r._3, r._4)),
-              gapUs, capUs)
-            open.foreach { o =>
-              state.update(o)
-              state.setTimeoutTimestamp(o.endUs / 1000 + gapUs / 1000)
-            }
-            closed.iterator.map(o =>
-              CappedSession(user, o.startUs, o.endUs, o.n, o.sum))
-          }
       }
   }
 }

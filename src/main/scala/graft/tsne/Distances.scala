@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * Two forms are provided:
   *   - Scala functions on `Array[Double]` for typed/imperative code paths
   *     (perplexity search, gradient kernels, driver-side math);
-  *   - `Column` expressions built from `zip_with`/`aggregate` so that
-  *     DataFrame pipelines stay inside whole-stage codegen (no UDF, no
-  *     deserialization) and remain DuckDB-oracle-expressible.
+  *   - `Column` expressions (native fused-loop Catalyst expressions) so
+  *     that DataFrame pipelines stay inside whole-stage codegen (no UDF,
+  *     no deserialization) and remain DuckDB-oracle-expressible.
   */
 object Distances {
 
@@ -52,8 +52,7 @@ object Distances {
   //
   // Native fused-loop Catalyst expressions (graft.expressions): a single
   // primitive loop over both ArrayData in place. The earlier composable
-  // `aggregate(zip_with(...))` forms (the dot product is kept below as
-  // dotColBuiltin for a cross-check) allocate an intermediate array per
+  // `aggregate(zip_with(...))` forms allocate an intermediate array per
   // row — on an N² kNN that allocation was most of the bench. Summation
   // order is identical, so results are bit-for-bit the same.
 
@@ -66,19 +65,11 @@ object Distances {
   def euclideanCol(a: Column, b: Column): Column =
     glue.column(EuclideanDistance(glue.expression(a), glue.expression(b)))
 
-  def dotCol(a: Column, b: Column): Column =
-    glue.column(DotProduct(glue.expression(a), glue.expression(b)))
-
   def cosineSimCol(a: Column, b: Column): Column =
     glue.column(CosineSimilarity(glue.expression(a), glue.expression(b)))
 
   def cosineDistCol(a: Column, b: Column): Column =
     lit(1.0) - cosineSimCol(a, b)
-
-  // The composable built-in form, retained for the expression cross-check
-  // in tests.
-  def dotColBuiltin(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def colByName(name: String): (Column, Column) => Column = name match {
     case "sqeuclidean" => sqEuclideanCol

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.SuperstepPartitioner
+import graft.{Release, SuperstepPartitioner}
 
 /** t-SNE optimizer: init, iteration loop and 3-phase schedule
   * (ref: `TsneHelpers.scala:198-219` init, `:371-394` iteration,
@@ -145,7 +145,7 @@ object Optimizer {
         "\n== superstep state update (job B: update, localCheckpoint, collect positions) ==\n" +
         next.toDebugString
     } finally {
-      Seq(next, forces, static).foreach(_.unpersist())
+      Seq(next, forces, static).foreach(Release.rdd)
       bc.destroy()
     }
   }
@@ -401,14 +401,14 @@ object Optimizer {
       if (needLoss) lossAcc.foreach(_.add((lossIter, lossPre + pSum * math.log(sumQ))))
       val next = updatedState(forces, params, momentum, sumQ)
       ys = positionsOf(next)._2 // the ids never change
-      forces.unpersist()
+      Release.rdd(forces)
       bc.destroy()
-      state.unpersist()
+      Release.rdd(state)
       state = next
     }
     if (needCenter) centerInPlace(ys)
-    static.unpersist()
-    state.unpersist()
+    Release.rdd(static)
+    Release.rdd(state)
     spark.createDataset(ids.indices.map(k => Point(ids(k), ys(k))))
   }
 

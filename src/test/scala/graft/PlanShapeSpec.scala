@@ -586,11 +586,19 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "Graph.kCore and Dedup.duplicateClusters" should "leave at most one RDD persistent" in {
     import spark.implicits._
     val path = (0L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
-    SubmittedWork.persistedBy(spark)(
+    SubmittedWork.storedBy(spark)(
       ops.Graph.kCore(path, 2).collect()) should be <= 1
     val (nodes, pairs) = twoStars
-    SubmittedWork.persistedBy(spark)(
+    SubmittedWork.storedBy(spark)(
       pipeline.Dedup.duplicateClusters(nodes, pairs).collect()) should be <= 1
+  }
+
+  "Graph.pageRank" should "leave at most one RDD stored" in {
+    import spark.implicits._
+    // the adjacency, which the lazy result's supersteps read
+    val path = (0L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
+    SubmittedWork.storedBy(spark)(
+      ops.Graph.pageRank(path, 5).collect()) should be <= 1
   }
 
   /** 60 random 20-token docs over six words plus 12 near-copies. */
@@ -615,10 +623,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
 
   "Dedup.minHashNearDups and minHashIncremental" should "leave at most one RDD persistent" in {
     val docs = nearDupCorpus
-    SubmittedWork.persistedBy(spark)(
+    SubmittedWork.storedBy(spark)(
       pipeline.Dedup.minHashNearDups(docs, 3, 0.5).collect()) should be <= 1
     val (batch, corpus) = (docs.where("doc_id >= 100"), docs.where("doc_id < 100"))
-    SubmittedWork.persistedBy(spark)(
+    SubmittedWork.storedBy(spark)(
       pipeline.Dedup.minHashIncremental(batch, corpus, None, 3, 0.5).collect()) should be <= 1
   }
 

@@ -4,6 +4,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 import org.scalatest.Inspectors
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.tsne.{Distances, SparkTestBase}
@@ -19,6 +20,15 @@ class ArrayDistancesSpec extends AnyFlatSpec with Matchers with Inspectors with 
     (0 until 50).map(i => (i.toLong, Array.fill(17)(rnd.nextGaussian() * 3)))
   }
 
+  /** The dot product as its native expression, and in the composable
+    * `aggregate(zip_with(...))` form it replaces. */
+  private def dot(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.{graftglue => glue}
+    glue.column(DotProduct(glue.expression(a), glue.expression(b)))
+  }
+  private def dotBuiltin(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
   private def pairsDf = {
     val s = spark
     import s.implicits._
@@ -31,7 +41,7 @@ class ArrayDistancesSpec extends AnyFlatSpec with Matchers with Inspectors with 
     val rows = pairsDf.select(col("i"), col("j"),
       Distances.sqEuclideanCol(col("va"), col("vb")).as("sq"),
       Distances.euclideanCol(col("va"), col("vb")).as("eu"),
-      Distances.dotCol(col("va"), col("vb")).as("dot"),
+      dot(col("va"), col("vb")).as("dot"),
       Distances.cosineSimCol(col("va"), col("vb")).as("cos"))
       .collect()
     val byId = vecs.toMap
@@ -54,8 +64,7 @@ class ArrayDistancesSpec extends AnyFlatSpec with Matchers with Inspectors with 
 
   it should "agree bit-for-bit with the composable built-in forms" in {
     val rows = pairsDf.select(
-      (Distances.dotCol(col("va"), col("vb")) ===
-        Distances.dotColBuiltin(col("va"), col("vb"))).as("dotOk"))
+      (dot(col("va"), col("vb")) === dotBuiltin(col("va"), col("vb"))).as("dotOk"))
       .collect()
     forAll(rows.toSeq) { r => r.getBoolean(0) shouldBe true }
   }

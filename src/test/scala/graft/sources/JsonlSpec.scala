@@ -74,42 +74,6 @@ class JsonlSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     ex.getMessage.toLowerCase should include("error while reading file")
   }
 
-  it should "stream a JSONL drop directory identically to the batch read" in {
-    val s = spark
-    val root = java.nio.file.Files.createTempDirectory("jsonl-stream")
-    val dir = root.toString + "/drop"
-    new java.io.File(dir).mkdirs()
-    // first landed file: real docs via the sink; second: hand-written with
-    // one corrupt line — streaming quarantine must behave exactly like batch
-    val docs = s.read.parquet(s"$parquetDir/documents.parquet").limit(50)
-    val staging = root.toString + "/staging"
-    Jsonl.writeDocuments(docs, staging)
-    new java.io.File(staging).listFiles()
-      .filter(_.getName.endsWith(".json"))
-      .foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(dir, f.getName))
-      }
-    val good =
-      """{"doc_id": 900001, "text": "late file", "lang": "en", "source": "s", "n_chars": 9}"""
-    val bad = """{"doc_id": broken"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/late.json"),
-      (good + "\n" + bad + "\n").getBytes("UTF-8"))
-    val pattern = s"$dir/*.json"
-    val q = Jsonl.readDocumentsStream(s, pattern)
-      .writeStream.format("memory").queryName("jsonl_stream_out")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = s.table("jsonl_stream_out")
-    val batch = Jsonl.readDocuments(s, pattern).cache()
-    batch.count() shouldBe 52L
-    streamed.count() shouldBe batch.count()
-    streamed.where(col("_corrupt").isNotNull).count() shouldBe 1L
-    val key = (df: org.apache.spark.sql.DataFrame) =>
-      df.orderBy("doc_id").collect().map(_.toSeq)
-    key(streamed) shouldBe key(batch)
-  }
-
   "schemaTypeTokens" should "class every top-level value by first char" in {
     val s = spark
     import s.implicits._

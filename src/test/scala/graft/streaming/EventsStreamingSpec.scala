@@ -471,37 +471,6 @@ class EventsStreamingSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     got shouldBe expectedSessions
   }
 
-  it should "emit the same sessions when streaming, trailing state flushed by event-time timeout" in {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-
-    val input = MemoryStream[Ev]
-    val q = Events.cappedSessionsStream(
-      Events.withEventWatermark(input.toDF(), "10 minutes"), gapUs, capUs)
-      .writeStream.format("memory").queryName("capped_out")
-      .outputMode("append").start()
-    try {
-      // mid-session batch boundaries: state must carry open sessions over
-      input.addData(cappedSample.filter(e => e.ts.getTime <= ts(40).getTime): _*)
-      q.processAllAvailable()
-      input.addData(cappedSample.filter(e => e.ts.getTime > ts(40).getTime): _*)
-      q.processAllAvailable()
-      // watermark mover: a far-future event on a sentinel user pushes the
-      // watermark past every open session's gap timeout → final flush
-      input.addData(cev(99, 9L, 100000))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val epoch0 = ts(0).getTime * 1000
-    val streamed = s.table("capped_out")
-      .where(col("user_id") < 9L)
-      .withColumn("session_start_us", col("session_start_us") - epoch0)
-      .withColumn("session_end_us", col("session_end_us") - epoch0)
-      .collect().map(asMinutes).toSet
-    streamed shouldBe expectedSessions
-  }
-
   "propsStats" should "extract the k property" in {
     val s = spark
     import s.implicits._
