@@ -60,10 +60,14 @@ object Md5Prefix60 {
 
   /** Static kernel (called from generated code): digest → first 8 bytes
     * big-endian >>> 4 — numerically the first 15 hex chars in base 16. */
-  def hashBytes(bytes: Array[Byte]): Long = {
+  def hashBytes(bytes: Array[Byte]): Long = hashBytes(bytes, 0, bytes.length)
+
+  /** [[hashBytes]] of the `len` bytes of `bytes` from `off`. */
+  def hashBytes(bytes: Array[Byte], off: Int, len: Int): Long = {
     val d = localDigest.get()
     d.reset()
-    val h = d.digest(bytes)
+    d.update(bytes, off, len)
+    val h = d.digest()
     (((h(0) & 0xFFL) << 56) | ((h(1) & 0xFFL) << 48) |
       ((h(2) & 0xFFL) << 40) | ((h(3) & 0xFFL) << 32) |
       ((h(4) & 0xFFL) << 24) | ((h(5) & 0xFFL) << 16) |

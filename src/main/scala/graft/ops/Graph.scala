@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import graft.{Release, ReduceShare, SuperstepPartitioner}
+import graft.{Messages, Outbox, Release, ReduceShare, SuperstepPartitioner}
+import graft.Outbox.sortedDistinct
 
 /** Link-graph scoring — the crawl-curation signal family: PageRank-style
   * centrality over an edge table, the score CommonCrawl-derived pipelines
@@ -218,14 +219,6 @@ object Graph {
     def size: Int = ids.length
   }
 
-  /** `a` ascending without repeats; sorts `a` in place. */
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(a)
-    var w = 0
-    for (r <- a.indices) if (r == 0 || a(r) != a(r - 1)) { a(w) = a(r); w += 1 }
-    java.util.Arrays.copyOf(a, w)
-  }
-
   /** Builds a partition's [[Csr]] from its blocks. The nodes are the arc
     * sources, `ids` and `marked`, or with `markedOnly` just `marked` (arcs
     * from any other source are dropped). With `distinct` a node keeps one
@@ -286,28 +279,6 @@ object Graph {
     blocks.partitionBy(part)
       .mapPartitions(bs => Iterator(buildCsr(bs.map(_._2).toArray, part, markedOnly, distinct)))
       .localCheckpoint()
-
-  /** One map task's messages for one reduce partition: `values(i)` for node
-    * `ids(i)`, and the task's share of a global sum (PageRank's dangling
-    * mass). */
-  private final case class Messages(ids: Array[Long], values: Array[Long], partial: Long)
-
-  /** A map task's `(id, value)` buffers, one per reduce partition. */
-  private final class Outbox(part: SuperstepPartitioner) {
-    private def buffers = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
-    private val (ids, values) = (buffers, buffers)
-
-    def add(q: Int, id: Long, value: Long): Unit = { ids(q) += id; values(q) += value }
-    def send(id: Long, value: Long): Unit = add(part.partitionOf(id), id, value)
-
-    /** One [[Messages]] block for each reduce partition that has
-      * messages, or for every one when the partial is not zero. */
-    def blocks(partial: Long): Iterator[(Any, Messages)] =
-      Iterator.range(0, part.numPartitions).flatMap { q =>
-        val m = Messages(ids(q).result(), values(q).result(), partial)
-        if (m.ids.isEmpty && partial == 0L) None else Some((ReduceShare(q), m))
-      }
-  }
 
   /** A partition's received messages, combined per node in CSR order
     * (`empty` where none arrived), and the sum of the partials. */

@@ -1,11 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
+import scala.collection.mutable
 import scala.util.Random
 
-import graft.Release
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{graftglue => glue}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.{Messages, Outbox, Release, ReduceShare, SuperstepPartitioner}
+import graft.Outbox.sortedDistinct
+import graft.expressions.TokenGramHashes
 
 /** Deduplication operators over the `documents` table — exact, n-gram
   * Jaccard, MinHash+LSH and SimHash. The four standard tiers of a
@@ -32,47 +39,25 @@ object Dedup {
     * (nothing to compare). Pure array expressions — one narrow projection. */
   def shingles(docs: DataFrame, n: Int = 3, keepPos: Boolean = false,
                carry: Seq[String] = Nil): DataFrame = {
-    val exploded = gramHashes(docs, n, "doc_id" +: carry, Nil).select(
+    val exploded = gramHashes(docs, n, "doc_id" +: carry).select(
       col("doc_id") +: posexplode(col("g")).as(Seq("pos", "sh_hash")) +: carry.map(col): _*)
     if (keepPos) exploded
     else exploded.select("doc_id", "sh_hash").distinct()
   }
 
   /** `docs`' `keep` columns plus `g`: the hashes of the token `n`-grams of
-    * its `text`, in order — empty under `n` tokens and for null text. The
-    * one definition of a shingle. Repartitioned on `by` (round-robin when
-    * empty) before the tokenize map. */
-  private def gramHashes(docs: DataFrame, n: Int, keep: Seq[String],
-                         by: Seq[Column]): DataFrame = {
+    * its `text`, in order ([[TokenGramHashes]], the one definition of a
+    * shingle) — empty under `n` tokens and for null text. Repartitioned
+    * round-robin before the tokenize map. */
+  private[pipeline] def gramHashes(docs: DataFrame, n: Int, keep: Seq[String]): DataFrame = {
     // repartition first: the tokenize+hash map is the CPU hot spot of
     // every shingle consumer, and a small-file scan would run it all on
-    // one core. The token array gets its own projection: a lambda that
-    // references the raw split(...) expression re-evaluates the regex
-    // split on every element_at inside the transform (3n× per shingle)
+    // one core
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val tokenized = docs.select(("text" +: keep).map(col): _*)
-      .repartition(parallelism, by: _*)
-      .select(keep.map(col) :+ TextOps.tokens(col("text")).as("t"): _*)
-    val t = col("t")
-    // guard: sequence(0, x) with x < 0 generates a *descending* sequence
-    val idxs = when(size(t) >= n, sequence(lit(0), size(t) - n))
-      .otherwise(array().cast("array<int>"))
-    val grams = transform(idxs,
-      i => Hashing.hash60(
-        concat_ws(" ", (0 until n).map(o => element_at(t, i + o + 1)): _*)))
-    tokenized.select(keep.map(col) :+ grams.as("g"): _*)
+    docs.select(("text" +: keep).map(col): _*)
+      .repartition(parallelism)
+      .select(keep.map(col) :+ glue.column(TokenGramHashes(glue.expression(col("text")), n)).as("g"): _*)
   }
-
-  /** One row per document, `(doc_id, sh)`: `sh` is the sorted, distinct
-    * `array<bigint>` of the shingle hashes [[shingles]] gives it. Rows
-    * sharing a `doc_id` give the union of their shingles; a document
-    * without shingles has no row. Hashed on `doc_id` before the tokenize
-    * map, so the merge needs no second exchange. */
-  private[pipeline] def shingleSets(docs: DataFrame, n: Int): DataFrame =
-    gramHashes(docs, n, Seq("doc_id"), Seq(col("doc_id")))
-      .groupBy("doc_id")
-      .agg(array_sort(array_distinct(flatten(collect_list("g")))).as("sh"))
-      .where(size(col("sh")) > 0)
 
   /** N-gram novelty of a candidate batch against a reference corpus: per
     * batch document, the fraction of its distinct shingles NOT present
@@ -193,13 +178,14 @@ object Dedup {
         k += 1
       }
     }
-    /** The LSH band keys of a shingle set, `numHashes / rowsPerBand` of
-      * them: key b is one 64-bit mix of (b, the band's minhashes), so two
-      * sets that agree on band b share key b. A mix collision can only add
-      * a candidate, which the exact verify then drops. */
-    def bandKeys(shingleHashes: Iterable[Long], rowsPerBand: Int): Array[Long] = {
+    /** The LSH band keys of the shingle set `sh(from until until)`,
+      * `numHashes / rowsPerBand` of them: key b is one 64-bit mix of (b,
+      * the band's minhashes), so two sets that agree on band b share key
+      * b. A mix collision can only add a candidate, which the exact verify
+      * then drops. */
+    def bandKeys(sh: Array[Long], from: Int, until: Int, rowsPerBand: Int): Array[Long] = {
       val s = Array.fill(numHashes)(Long.MaxValue)
-      shingleHashes.foreach(update(s, _))
+      for (x <- from until until) update(s, sh(x))
       Array.tabulate(numHashes / rowsPerBand) { b =>
         var h = mix64(b.toLong)
         for (r <- 0 until rowsPerBand) h = mix64(h ^ s(b * rowsPerBand + r))
@@ -231,101 +217,355 @@ object Dedup {
     * shingle Jaccard and filtered at θ. With r=2, b=64 the probability of
     * missing a pair at s=0.7 is (1−0.49)⁶⁴ ≈ 1e−19 — the output is the
     * exact ≥θ pair set with overwhelming probability, which is what the
-    * DuckDB oracle checks. Plan: one row per document with its shingle
-    * set and band keys ([[keyedSets]]: the docs' one exchange, on
-    * `doc_id`); one exchange of the N·bands band keys for the bucket
-    * self-join; the verify joins the set table on `i` and on `j`. No
-    * all-pairs, no row per shingle. Eager: returns the verified
-    * `(i, j, jaccard)` pairs `localCheckpoint`ed and releases the rest. */
+    * DuckDB oracle checks. Plan: a kernel over packed blocks of primitive
+    * arrays, one job. One exchange of the `(doc_id, text)` rows builds each
+    * document's shingle set ([[shingleSets]], `localCheckpoint`ed); one
+    * exchange of `(bkey, doc_id)` blocks gathers each band bucket, which
+    * emits its `i < j` pairs; [[verify]] scores each distinct pair by a
+    * sorted merge of the two sets. Every shuffle moves one block per map
+    * task and reduce partition; no SQL join, no UDF, no row per shingle.
+    * Eager: returns the verified `(i, j, jaccard)` pairs `localCheckpoint`ed,
+    * ids in `doc_id`'s type, and releases the rest. A row with a null
+    * `doc_id` or null text is ignored. */
   def minHashNearDups(docs: DataFrame, n: Int = 3, theta: Double = 0.7,
                       bands: Int = 64, rowsPerBand: Int = 2,
                       seed: Long = 42L): DataFrame = {
-    // read three times (band keys, both verify sides): checkpointed, the
-    // tokenize+hash+minhash map runs once and every read plans against a leaf
-    val sets = keyedSets(docs, n, bands, rowsPerBand, seed).localCheckpoint()
-    val keys = bandRows(sets)
-    val cands = keys.as("a")
-      .join(keys.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-    // checkpointed: each consumer (collect, clusters, keep-best, backfill,
-    // source overlap) would otherwise re-run the band join and the verify
-    val pairs = verifySets(cands, sets, theta).localCheckpoint()
-    Release.checkpoint(sets)
+    val part = SuperstepPartitioner.of(docs.sparkSession)
+    val fam = MinHashFamily(seed, bands * rowsPerBand)
+    // read by the band keys and by both sides of the verify
+    val sets = shingleSets(docs, n, part).localCheckpoint()
+    val cands = bandKeyBlocks(sets, fam, rowsPerBand, part).partitionBy(part)
+      .mapPartitions { ms =>
+        val (keys, ids) = concat(ms)
+        val buckets = group(keys, ids)
+        val out = new Outbox(part)
+        for (g <- buckets.keys.indices if buckets.size(g) > 1) {
+          val members = buckets.distinctValues(g)
+          for (b <- 1 until members.length; a <- 0 until b) out.send(members(b), members(a))
+        }
+        out.blocks(0L)
+      }
+    val pairs = verify(sets, cands, theta, part)
+    Release.rdd(sets)
+    pairFrame(pairs, idField(docs), docs.sparkSession)
+  }
+
+  /** One map task's texts for one reduce partition: text `k`, of document
+    * `ids(k)`, is the UTF-8 bytes `off(k) until off(k + 1)` of `bytes`. */
+  private final case class Texts(ids: Array[Long], off: Array[Int], bytes: Array[Byte])
+
+  /** One partition's documents that have shingles, ids ascending: the
+    * sorted distinct shingle hashes of document `ids(k)` are
+    * `off(k) until off(k + 1)` of `sh`. */
+  private[pipeline] final case class ShingleSets(ids: Array[Long], off: Array[Int], sh: Array[Long])
+
+  /** `docs`' shingle sets, one [[ShingleSets]] per partition of `part`,
+    * each document in the partition that owns its id: one narrow pass
+    * packs the `(doc_id, text)` rows, read as the plan's rows, into one
+    * [[Texts]] block per reduce partition; after one exchange each reduce
+    * task hashes its texts' shingles ([[TokenGramHashes]], as [[shingles]]
+    * does), and the rows of one id give the union of their shingles. Rows
+    * with a null id or text are dropped; a document without shingles has
+    * no entry. */
+  private[pipeline] def shingleSets(docs: DataFrame, n: Int,
+                                    part: SuperstepPartitioner): RDD[ShingleSets] = {
+    idField(docs)
+    docs.select(col("doc_id").cast("long"), col("text")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ids = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
+        val off = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofInt += 0)
+        val bytes = Array.fill(part.numPartitions)(new java.io.ByteArrayOutputStream)
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val q = part.partitionOf(r.getLong(0))
+            ids(q) += r.getLong(0)
+            r.getUTF8String(1).writeTo(bytes(q))
+            off(q) += bytes(q).size
+          }
+        }
+        Iterator.range(0, part.numPartitions).collect { case q if ids(q).length > 0 =>
+          (ReduceShare(q), Texts(ids(q).result(), off(q).result(), bytes(q).toByteArray))
+        }
+      }
+      .partitionBy(part)
+      .mapPartitions { ts =>
+        val texts = ts.map(_._2).toSeq
+        val docIds = sortedDistinct(Array.concat(texts.map(_.ids): _*))
+        val union = Array.fill(docIds.length)(new mutable.ArrayBuilder.ofLong)
+        for (t <- texts; k <- t.ids.indices) {
+          val text = UTF8String.fromBytes(t.bytes, t.off(k), t.off(k + 1) - t.off(k))
+          union(java.util.Arrays.binarySearch(docIds, t.ids(k))) ++= TokenGramHashes.hashes(text, n)
+        }
+        val (ids, off, sh) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofInt,
+          new mutable.ArrayBuilder.ofLong)
+        off += 0
+        for (d <- docIds.indices) {
+          val set = sortedDistinct(union(d).result())
+          if (set.nonEmpty) { ids += docIds(d); sh ++= set; off += sh.length }
+        }
+        Iterator(ShingleSets(ids.result(), off.result(), sh.result()))
+      }
+  }
+
+  /** Each document's band keys ([[MinHashFamily.bandKeys]]) as `bkey →
+    * doc_id` messages, routed by key. */
+  private def bandKeyBlocks(sets: RDD[ShingleSets], fam: MinHashFamily, rowsPerBand: Int,
+                            part: SuperstepPartitioner): RDD[(Any, Messages)] =
+    sets.mapPartitions { ss =>
+      val s = ss.next()
+      val out = new Outbox(part)
+      for (k <- s.ids.indices)
+        fam.bandKeys(s.sh, s.off(k), s.off(k + 1), rowsPerBand).foreach(out.send(_, s.ids(k)))
+      out.blocks(0L)
+    }
+
+  /** The keys and values of a reduce task's messages, concatenated. */
+  private def concat(ms: Iterator[(Any, Messages)]): (Array[Long], Array[Long]) = {
+    val blocks = ms.map(_._2).toSeq
+    (Array.concat(blocks.map(_.ids): _*), Array.concat(blocks.map(_.values): _*))
+  }
+
+  /** Entries grouped by key: group `g` is key `keys(g)` (ascending) with
+    * the values `off(g) until off(g + 1)` of `values`. */
+  private final case class Groups(keys: Array[Long], off: Array[Int], values: Array[Long]) {
+    def size(g: Int): Int = off(g + 1) - off(g)
+    def distinctValues(g: Int): Array[Long] =
+      sortedDistinct(java.util.Arrays.copyOfRange(values, off(g), off(g + 1)))
+  }
+
+  /** `values(e)` grouped by `keys(e)`, a counting sort. */
+  private def group(keys: Array[Long], values: Array[Long]): Groups = {
+    val distinct = sortedDistinct(keys.clone())
+    val at = keys.map(java.util.Arrays.binarySearch(distinct, _))
+    val off = new Array[Int](distinct.length + 1)
+    at.foreach(g => off(g + 1) += 1)
+    for (g <- distinct.indices) off(g + 1) += off(g)
+    val grouped = new Array[Long](values.length)
+    val fill = java.util.Arrays.copyOf(off, distinct.length)
+    for (e <- at.indices) { grouped(fill(at(e))) = values(e); fill(at(e)) += 1 }
+    Groups(distinct, off, grouped)
+  }
+
+  /** Candidate pairs for one reduce partition, by their greater id: `js(t)`
+    * with its shingle set, `shOff(t) until shOff(t + 1)` of `sh`, and the
+    * lesser ids `iOff(t) until iOff(t + 1)` of `is`, which the partition
+    * owns. */
+  private final case class Probes(js: Array[Long], shOff: Array[Int], sh: Array[Long],
+                                  iOff: Array[Int], is: Array[Long])
+
+  /** A map task's [[Probes]] buffers, one set per reduce partition. */
+  private final class ProbeBox(part: SuperstepPartitioner) {
+    private def longs = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
+    private def offsets = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofInt += 0)
+    private val (js, sh, is) = (longs, longs, longs)
+    private val (shOff, iOff) = (offsets, offsets)
+
+    /** Sends `j`'s set, `set(from until until)`, to the owner of each id in
+      * `lesser`. */
+    def add(j: Long, set: Array[Long], from: Int, until: Int, lesser: Array[Long]): Unit = {
+      val owner = lesser.map(part.partitionOf)
+      for (q <- owner.distinct) {
+        js(q) += j
+        sh(q).addAll(set, from, until - from)
+        shOff(q) += sh(q).length
+        for (x <- lesser.indices if owner(x) == q) is(q) += lesser(x)
+        iOff(q) += is(q).length
+      }
+    }
+
+    def blocks: Iterator[(Any, Probes)] =
+      Iterator.range(0, part.numPartitions).collect { case q if js(q).length > 0 =>
+        (ReduceShare(q), Probes(js(q).result(), shOff(q).result(), sh(q).result(),
+          iOff(q).result(), is(q).result()))
+      }
+  }
+
+  /** A partition's verified pairs. */
+  private final case class Pairs(i: Array[Long], j: Array[Long], jaccard: Array[Double])
+
+  /** The exact Jaccard of the candidate pairs, those ≥ θ kept. `cands`
+    * holds each candidate `(i, j)`, `i < j`, as the message `j → i`,
+    * repeats allowed; `sets` is read twice, so the caller persists it. The
+    * owner of `j` drops repeats and sends `j`'s set to the owner of `i`
+    * ([[Probes]]), where `c = |si ∩ sj|` is a sorted merge and `jaccard =
+    * c / (ni + nj − c)`, as [[jaccardOfShingles]]. A pair with an id that
+    * has no set is dropped. Returns the pairs `localCheckpoint`ed and
+    * materialized: one job. */
+  private def verify(sets: RDD[ShingleSets], cands: RDD[(Any, Messages)], theta: Double,
+                     part: SuperstepPartitioner): RDD[Pairs] = {
+    val probes = sets.zipPartitions(cands.partitionBy(part)) { (ss, ms) =>
+      val s = ss.next()
+      val (js, is) = concat(ms)
+      val byJ = group(js, is)
+      val out = new ProbeBox(part)
+      for (g <- byJ.keys.indices) {
+        val k = java.util.Arrays.binarySearch(s.ids, byJ.keys(g))
+        if (k >= 0) out.add(byJ.keys(g), s.sh, s.off(k), s.off(k + 1), byJ.distinctValues(g))
+      }
+      out.blocks
+    }.partitionBy(part)
+    val pairs = sets.zipPartitions(probes) { (ss, ps) =>
+      val s = ss.next()
+      val (is, js, jaccards) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong,
+        new mutable.ArrayBuilder.ofDouble)
+      ps.foreach { case (_, p) =>
+        for (t <- p.js.indices; x <- p.iOff(t) until p.iOff(t + 1)) {
+          val k = java.util.Arrays.binarySearch(s.ids, p.is(x))
+          if (k >= 0) {
+            val c = common(s.sh, s.off(k), s.off(k + 1), p.sh, p.shOff(t), p.shOff(t + 1))
+            val ni = s.off(k + 1) - s.off(k)
+            val nj = p.shOff(t + 1) - p.shOff(t)
+            val jaccard = c.toDouble / (ni + nj - c)
+            if (jaccard >= theta) { is += p.is(x); js += p.js(t); jaccards += jaccard }
+          }
+        }
+      }
+      Iterator(Pairs(is.result(), js.result(), jaccards.result()))
+    }.localCheckpoint()
+    pairs.count()
     pairs
   }
 
-  /** [[shingleSets]] plus `bk`, the document's band keys
-    * ([[MinHashFamily.bandKeys]]), computed in the same narrow pass. */
-  private def keyedSets(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
-                        seed: Long): DataFrame = {
-    val fam = MinHashFamily(seed, bands * rowsPerBand)
-    val keysOf = udf((sh: scala.collection.Seq[Long]) => fam.bandKeys(sh, rowsPerBand))
-    shingleSets(docs, n).withColumn("bk", keysOf(col("sh")))
+  /** How many values the ascending ranges `a(af until au)` and
+    * `b(bf until bu)` share. */
+  private def common(a: Array[Long], af: Int, au: Int, b: Array[Long], bf: Int, bu: Int): Int = {
+    var x = af
+    var y = bf
+    var c = 0
+    while (x < au && y < bu) {
+      if (a(x) < b(y)) x += 1
+      else if (a(x) > b(y)) y += 1
+      else { c += 1; x += 1; y += 1 }
+    }
+    c
   }
 
-  /** `(doc_id, band, bkey)` rows of a [[keyedSets]] table; `bkey` encodes
-    * its band, so an equi-join on `bkey` alone finds every band collision. */
-  private def bandRows(keyed: DataFrame): DataFrame =
-    keyed.select(col("doc_id"), posexplode(col("bk")).as(Seq("band", "bkey")))
+  /** `docs`' `doc_id` field. The kernels carry ids as longs and give them
+    * back in this type. */
+  private def idField(docs: DataFrame): StructField = {
+    val f = docs.schema("doc_id")
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+      s"doc_id must be an integral type, got ${f.dataType.simpleString}")
+    f
+  }
 
-  /** Exact Jaccard of candidate pairs `(i, j)` on a shingle-set table:
-    * c = |si ∩ sj|, jaccard = c / (ni + nj − c), as [[jaccardOfShingles]]. */
-  private def verifySets(cands: DataFrame, sets: DataFrame, theta: Double): DataFrame = {
-    def side(k: String) = sets.select(col("doc_id").as(k), col("sh").as(s"s$k"))
-    val c = size(array_intersect(col("si"), col("sj")))
-    cands.join(side("i"), "i").join(side("j"), "j")
-      .select(col("i"), col("j"),
-        (c.cast("double") / (size(col("si")) + size(col("sj")) - c)).as("jaccard"))
-      .where(col("jaccard") >= theta)
+  /** A long id as a value of `id`'s type. */
+  private def idValue(id: StructField): Long => Any = id.dataType match {
+    case IntegerType => _.toInt
+    case ShortType => _.toShort
+    case ByteType => _.toByte
+    case _ => identity
+  }
+
+  /** The verified pairs as `(i, j, jaccard)`: `i` and `j` are fields like
+    * `id`, and `jaccard` is nullable, as the join spelling gave them. */
+  private def pairFrame(pairs: RDD[Pairs], id: StructField, spark: SparkSession): DataFrame = {
+    val toId = idValue(id)
+    val rows = pairs.flatMap(p =>
+      p.i.indices.iterator.map(k => Row(toId(p.i(k)), toId(p.j(k)), p.jaccard(k))))
+    spark.createDataFrame(rows, StructType(Seq(id.copy(name = "i"), id.copy(name = "j"),
+      StructField("jaccard", DoubleType))))
   }
 
   /** The corpus's MinHash band keys `(doc_id, band, bkey)` as a standalone
     * table — the SIGNATURE STORE a production ingest pipeline persists
     * between crawls (parquet keyed by the `bigint` `bkey`): `bands` rows
-    * per corpus doc, so a batch probe touches corpus text only to verify
-    * the candidates LSH surfaces. Valid only for probes with the same
-    * (n, bands, rowsPerBand, seed). */
+    * per corpus doc with shingles, so a batch probe touches corpus text
+    * only to verify the candidates LSH surfaces. Valid only for probes
+    * with the same (n, bands, rowsPerBand, seed). Lazy; rows with a null
+    * `doc_id` are dropped, as no probe could match them. */
   def signatureStore(docs: DataFrame, n: Int = 3, bands: Int = 64,
-                     rowsPerBand: Int = 2, seed: Long = 42L): DataFrame =
-    bandRows(keyedSets(docs, n, bands, rowsPerBand, seed))
+                     rowsPerBand: Int = 2, seed: Long = 42L): DataFrame = {
+    val spark = docs.sparkSession
+    val fam = MinHashFamily(seed, bands * rowsPerBand)
+    val id = idField(docs)
+    val toId = idValue(id)
+    val rows = shingleSets(docs, n, SuperstepPartitioner.of(spark)).flatMap { s =>
+      s.ids.indices.iterator.flatMap { k =>
+        val keys = fam.bandKeys(s.sh, s.off(k), s.off(k + 1), rowsPerBand)
+        keys.indices.iterator.map(b => Row(toId(s.ids(k)), b, keys(b)))
+      }
+    }
+    spark.createDataFrame(rows, StructType(Seq(id,
+      StructField("band", IntegerType, nullable = false),
+      StructField("bkey", LongType, nullable = false))))
+  }
 
   /** Incremental near-duplicate detection — the MinHash twin of
     * [[exactIncremental]]: find every (corpus doc, new doc) pair with
     * shingle Jaccard ≥ θ, WITHOUT recomputing anything corpus×corpus.
     * The new batch's band keys probe the corpus signature store
-    * (`corpusStore`; omitted, it is built from `corpus` in this call);
-    * candidates are exact-verified on shingle sets, touching corpus TEXT
-    * only for candidate docs (an id semi join). Only cross pairs are
+    * (`corpusStore`; omitted, the corpus's band keys are computed in this
+    * call); candidates are exact-verified on shingle sets, touching corpus
+    * TEXT only for candidate docs (an id semi join). Only cross pairs are
     * emitted — intra-batch near-dups are [[minHashNearDups]]'s job. Eager
-    * like it: `(i, j, jaccard)` with i < j, `localCheckpoint`ed; ids must
-    * be unique across corpus ∪ batch. Shuffle ∝ batch·bands + candidates
-    * — nothing scales with corpus size but the store probe itself. */
+    * like it, on the same set builder and [[verify]]: `(i, j, jaccard)`
+    * with i < j, `localCheckpoint`ed; ids must be unique across corpus ∪
+    * batch. Shuffle ∝ batch·bands + candidates — nothing scales with
+    * corpus size but the store probe itself. */
   def minHashIncremental(newDocs: DataFrame, corpus: DataFrame,
                          corpusStore: Option[DataFrame] = None,
                          n: Int = 3, theta: Double = 0.7,
                          bands: Int = 64, rowsPerBand: Int = 2,
                          seed: Long = 42L): DataFrame = {
-    val newSets = keyedSets(newDocs, n, bands, rowsPerBand, seed).localCheckpoint()
-    val store = corpusStore.getOrElse(
-      signatureStore(corpus, n, bands, rowsPerBand, seed))
+    val spark = newDocs.sparkSession
+    val part = SuperstepPartitioner.of(spark)
+    val fam = MinHashFamily(seed, bands * rowsPerBand)
+    val newSets = shingleSets(newDocs, n, part)
+    val storeKeys = corpusStore.fold(bandKeyBlocks(shingleSets(corpus, n, part), fam, rowsPerBand, part)) {
+      store =>
+        store.select(col("bkey"), col("doc_id").cast("long")).na.drop().queryExecution.toRdd
+          .mapPartitions { rows =>
+            val out = new Outbox(part)
+            rows.foreach(r => out.send(r.getLong(0), r.getLong(1)))
+            out.blocks(0L)
+          }
+    }
     // store side × batch side: every candidate is a cross pair by
-    // construction (no corpus×corpus, no batch×batch)
-    val cands0 = store.as("a")
-      .join(bandRows(newSets).as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("cid"), col("b.doc_id").as("nid"))
-      .distinct()
-    val candCorpus = corpus.join(
-      cands0.select(col("cid").as("doc_id")).distinct(), Seq("doc_id"),
-      "left_semi")
-    val sets = newSets.select("doc_id", "sh").unionByName(shingleSets(candCorpus, n))
-    val cands = cands0.select(least(col("cid"), col("nid")).as("i"),
-      greatest(col("cid"), col("nid")).as("j")).distinct()
-    val pairs = verifySets(cands, sets, theta).localCheckpoint()
-    Release.checkpoint(newSets)
-    pairs
+    // construction (no corpus×corpus, no batch×batch). Read twice: for the
+    // candidate corpus ids and for the verify
+    val cross = storeKeys.partitionBy(part)
+      .zipPartitions(bandKeyBlocks(newSets, fam, rowsPerBand, part).partitionBy(part)) { (cs, bs) =>
+        val (keys, cids) = concat(cs)
+        val (batchKeys, nids) = concat(bs)
+        val batch = group(batchKeys, nids)
+        val (cand, fresh) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+        for (e <- keys.indices) {
+          val g = java.util.Arrays.binarySearch(batch.keys, keys(e))
+          if (g >= 0) for (x <- batch.off(g) until batch.off(g + 1) if batch.values(x) != cids(e)) {
+            cand += cids(e)
+            fresh += batch.values(x)
+          }
+        }
+        Iterator(Messages(cand.result(), fresh.result(), 0L))
+      }
+      .localCheckpoint()
+    val corpusId = idField(corpus)
+    val candIds = spark.createDataset(cross.flatMap(m => sortedDistinct(m.ids.clone())))(
+      Encoders.scalaLong).toDF("doc_id").select(col("doc_id").cast(corpusId.dataType))
+    val candCorpus = corpus.join(candIds, Seq("doc_id"), "left_semi")
+    // read by both sides of the verify
+    val sets = shingleSets(newDocs.select("doc_id", "text")
+      .unionByName(candCorpus.select("doc_id", "text")), n, part).localCheckpoint()
+    val cands = cross.mapPartitions { ms =>
+      val m = ms.next()
+      val out = new Outbox(part)
+      for (x <- m.ids.indices)
+        out.send(math.max(m.ids(x), m.values(x)), math.min(m.ids(x), m.values(x)))
+      out.blocks(0L)
+    }
+    val pairs = verify(sets, cands, theta, part)
+    Seq(cross, sets).foreach(Release.rdd)
+    val storeId = corpusStore.fold(corpusId)(_.schema("doc_id"))
+    pairFrame(pairs, leastField(storeId, idField(newDocs)), spark)
+  }
+
+  /** The field `least(a, b)` of two integral id fields gives: the wider
+    * type, nullable when both are. */
+  private def leastField(a: StructField, b: StructField): StructField = {
+    val widths = Seq(ByteType, ShortType, IntegerType, LongType)
+    StructField("doc_id", widths(math.max(widths.indexOf(a.dataType), widths.indexOf(b.dataType))),
+      a.nullable && b.nullable)
   }
 
   /** Duplicate-cluster assignment — the step a real dedup pipeline runs

@@ -357,10 +357,10 @@ object TextOps {
     * mean token length (gibberish proxy). Composite in [0, 1]. */
   /** All four quality signals from ONE tokenization: the token array is
     * bound in its own projection (an alias referenced many times is not
-    * re-inlined by CollapseProject — the [[graft.pipeline.Dedup.shingles]]
-    * discipline), so the split+filter runs once per row instead of the 9×
-    * the inline spelling paid (each ratio referenced [[tokens]] 2×, the
-    * composite another 5×). Values are bit-identical to the inline form. */
+    * re-inlined by CollapseProject), so the split+filter runs once per row
+    * instead of the 9× the inline spelling paid (each ratio referenced
+    * [[tokens]] 2×, the composite another 5×). Values are bit-identical to
+    * the inline form. */
   def qualityScore(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("text"), tokens(col("text")).as("__toks"))

@@ -612,13 +612,24 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     (base ++ dups).toDF("doc_id", "text")
   }
 
-  "Dedup.minHashNearDups" should "submit at most seven jobs on a small corpus" in {
-    // set table checkpoint (its exchange + the checkpoint), the band-key
-    // broadcast, the candidate distinct, one set-table broadcast reused
-    // for both verify joins, the pair checkpoint, the caller's collect
+  "Dedup.minHashNearDups" should "submit at most three jobs on a small corpus" in {
+    // the kernel's one job (the set and pair checkpoints, four shuffles of
+    // packed blocks inside it) and the caller's collect; seven before the
+    // kernel, one more allowed
     val docs = nearDupCorpus
     SubmittedWork.of(spark)(
-      pipeline.Dedup.minHashNearDups(docs, 3, 0.5).collect()).jobs should be <= 7
+      pipeline.Dedup.minHashNearDups(docs, 3, 0.5).collect()).jobs should be <= 3
+  }
+
+  "Dedup.shingles" should "plan no lambda function" in {
+    // the grams come from one native expression, not a transform lambda
+    // over element_at/concat_ws (interpreted: ArrayTransform is
+    // CodegenFallback)
+    val plan = pipeline.Dedup.shingles(nearDupCorpus, 3).queryExecution.optimizedPlan
+    plan.find(_.expressions.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.LambdaFunction]))) shouldBe None
+    plan.toString should not include "lambda"
+    plan.toString should include("token_gram_hashes")
   }
 
   "Dedup.minHashNearDups and minHashIncremental" should "leave at most one RDD persistent" in {

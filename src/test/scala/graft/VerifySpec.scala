@@ -76,10 +76,17 @@ class VerifySpec extends AnyFlatSpec with Matchers with SparkTestBase {
     // clearCache alone leaves a localCheckpoint's RDD resident
     val checkpointed: (SparkSession, String) => DataFrame =
       (s, _) => s.range(25).toDF("id").localCheckpoint()
-    SubmittedWork.persistedBy(spark) {
-      Verify.dumpQueries(spark, "unused", out,
-        Seq("q_checkpointed" -> checkpointed)) shouldBe empty
+    SubmittedWork.storedBy(spark) {
+      SubmittedWork.persistedBy(spark) {
+        Verify.dumpQueries(spark, "unused", out,
+          Seq("q_checkpointed" -> checkpointed)) shouldBe empty
+      } shouldBe 0
     } shouldBe 0
+    // positive control: the same checkpoint made outside dumpQueries stays
+    // stored
+    var leaked: DataFrame = null
+    SubmittedWork.storedBy(spark) { leaked = checkpointed(spark, "unused") } shouldBe 1
+    Release.checkpoint(leaked)
     spark.read.parquet(s"$out/q_checkpointed").count() shouldBe 25
   }
 }

@@ -20,6 +20,12 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     rows.toDF("doc_id", "text")
   }
 
+  /** [[Dedup.shingleSets]] at n = 3 as a map from id to set. */
+  private def setsOf(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+    Dedup.shingleSets(d, 3, graft.SuperstepPartitioner.of(spark)).collect().toSeq
+      .flatMap(s => s.ids.indices.map(k => s.ids(k) -> s.sh.slice(s.off(k), s.off(k + 1)).toSeq))
+      .toMap
+
   "Hashing.hash60" should "agree between the JVM and Column forms" in {
     val s = spark
     import s.implicits._
@@ -146,7 +152,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     import s.implicits._
     val d = Seq[(Long, String)]((1L, null), (2L, null), (3L, "a b"), (4L, "a b"),
       (5L, "x y z w"), (6L, "x y z w")).toDF("doc_id", "text")
-    Dedup.shingleSets(d, 3).select("doc_id").as[Long].collect().sorted shouldBe Array(5L, 6L)
+    setsOf(d).keys.toSeq.sorted shouldBe Seq(5L, 6L)
     Dedup.minHashNearDups(d, 3, 0.7).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe Seq((5L, 6L))
   }
@@ -161,15 +167,14 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
       .toDF("doc_id", "text")
     val want = Dedup.shingles(d, 3).as[(Long, Long)].collect()
       .groupBy(_._1).map { case (id, rows) => id -> rows.map(_._2).sorted.toSeq }
-    val got = Dedup.shingleSets(d, 3).as[(Long, Seq[Long])].collect().toMap
+    val got = setsOf(d)
     want should not be empty
     got shouldBe want
   }
 
   it should "give a doc_id present in two rows the union of their shingles" in {
     val d = docs((1L, "a b c d"), (1L, "x y z a b c"), (2L, "a b c d"))
-    val sets = Dedup.shingleSets(d, 3).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val sets = setsOf(d)
     val one = Dedup.shingles(docs((1L, "a b c d"), (1L, "x y z a b c")), 3)
       .collect().map(_.getLong(1)).sorted.toSeq
     sets(1L) shouldBe one
