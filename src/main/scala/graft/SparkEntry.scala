@@ -41,7 +41,7 @@ object SparkEntry {
   private def knnQuery(s: SparkSession, dir: String, method: String,
                        metric: String = "sqeuclidean"): DataFrame = {
     val points = IO.readEmbeddings(s, dir)
-    // ranked forms: the top-k operator emits the rank itself — no second
+    // ranked forms: the ranking window emits the rank itself — no second
     // window over already-ranked output
     val ranked = method match {
       case "bruteforce" =>
@@ -361,8 +361,8 @@ object SparkEntry {
 
     // §2.2 vocabulary — grouped top-k with rank() tie semantics: tie groups
     // straddling k survive whole, so groups emit >k rows. Executes through
-    // the same GroupedTopKLimit operator in RankMode (tie-aware partial
-    // keepers instead of bounded heaps); the DuckDB RANK() oracle
+    // Spark's WindowGroupLimit in rank() mode (each key keeps the tie
+    // groups that start within k); the DuckDB RANK() oracle
     // machine-checks the gap numbering and the whole-group survivors.
     "q_rank_topk" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey").orderBy(col("o_year").desc)
@@ -1647,8 +1647,8 @@ object SparkEntry {
 
     // per-registered-domain quota (the domain-cap curation gate): at most
     // 3 docs per pay-level domain, largest-first — the row_number+filter
-    // shape executes through GroupedTopKLimit, so no domain is ever
-    // fully sorted however many pages it contributed
+    // shape executes through Spark's WindowGroupLimit, so no domain is
+    // ever ranked whole however many pages it contributed
     "q_domain_cap" -> ((s, dir) =>
       pipeline.UrlOps.domainCap(urlEnrichedDocs(s, dir), k = 3)
         .orderBy("domain", "rn")),
@@ -1814,8 +1814,8 @@ object SparkEntry {
     // honor) → per-domain fetch budget = clamp(60 div delay, 1, 4) →
     // the UA gate × sitemap freshness schedule re-ranked under the
     // VARIABLE budget. The scalable quota shape: a CONSTANT rn <= 4
-    // pre-cap first (GroupedTopKLimit bounded heap — no domain's list
-    // fully sorted), then the per-domain budget refine as a plain
+    // pre-cap first (the WindowGroupLimit bound — no domain's list
+    // ranked whole), then the per-domain budget refine as a plain
     // filter on the survivors.
     "q_crawl_budget" -> ((s, dir) => {
       val en = urlEnrichedDocs(s, dir)
@@ -2093,8 +2093,8 @@ object SparkEntry {
     // frontier runs every cycle): fetch a URL iff robots ALLOWS it and
     // the sitemap says unknown-or-newer, then apply a per-domain
     // politeness quota of 2 per cycle, freshest lastmod first — the
-    // row_number+filter shape executes through GroupedTopKLimit, so no
-    // domain's candidate list is ever fully sorted. Both inputs are the
+    // row_number+filter shape executes through Spark's WindowGroupLimit,
+    // so no domain's candidate list is ever ranked whole. Both inputs are the
     // SAME fixtures q_robots_gate / q_sitemap_probe check piecewise (one
     // shared builder each — no drift); the oracle replays both
     // closed-form derivations plus the quota ranking, so the hash pins
@@ -2389,9 +2389,9 @@ object SparkEntry {
 
     // per-source quota (a standard curation cap: no single source may
     // contribute more than k docs — largest-first, deterministic tiebreak).
-    // The row_number + filter shape executes through the GroupedTopKLimit
-    // plan operator, so the cap never sorts whole sources
-    // (PlanShapeSpec pins the rewrite fires here)
+    // The row_number + filter shape executes through Spark's
+    // WindowGroupLimit, so the cap never ranks whole sources
+    // (PlanShapeSpec pins the group limit here)
     "q_source_cap" -> ((s, dir) => {
       val w = Window.partitionBy("source")
         .orderBy(col("n_chars").desc, col("doc_id"))
@@ -2561,7 +2561,7 @@ object SparkEntry {
     // split only (the deterministic hash split), score EVERY doc with a
     // pure map-side projection (Fit.predict), keep each source's top-5 by
     // integer-rounded predicted quality — the ranking executes through
-    // the GroupedTopKLimit bounded-heap operator, so no source is sorted
+    // Spark's WindowGroupLimit, so no source is ranked whole
     "q_quality_model_topk" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // materialized once: consumed by the train-slice moment pass AND
@@ -2725,7 +2725,7 @@ object SparkEntry {
 
     // what production dedup actually keeps: the BEST-quality member of
     // each near-dup cluster (not the min-id) — clusters via MinHash + CC,
-    // representative via quality rank through the top-k operator (k=1)
+    // representative via quality rank through WindowGroupLimit (k=1)
     "q_dedup_keep_best" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val pairs = pipeline.Dedup.minHashNearDups(docs, n = 3, theta = 0.7)
@@ -3226,8 +3226,8 @@ object SparkEntry {
     }),
 
     // prototypicality (SemDeDup/D4 pruning signal): cosine to the cluster
-    // centroid, top-5 most prototypical per label through the bounded-heap
-    // top-k operator — exact, so the oracle recomputes it in full
+    // centroid, top-5 most prototypical per label through Spark's
+    // WindowGroupLimit — exact, so the oracle recomputes it in full
     "q_prototypes" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"),
@@ -3498,7 +3498,7 @@ object SparkEntry {
     // Lucene idf): queries are every 97th doc's first 5 tokens; each
     // (query, term, doc) contribution is quantized to 1e-6-grid longs
     // BEFORE summing so the score is an order-free integer sum, ranked by
-    // (score_u, doc_id) through the GroupedTopK bounded heap. The oracle
+    // (score_u, doc_id) through Spark's WindowGroupLimit. The oracle
     // replays idf, length norm, quantization, and the rank rule
     // association-order-exactly.
     "q_bm25_topk" -> ((s, dir) => {
@@ -4068,8 +4068,8 @@ object SparkEntry {
     }),
 
     // first-touch attribution: the FIRST event per (user, event_type) —
-    // a k=1 grouped top-k, executed through the bounded-heap Catalyst
-    // operator instead of a full per-group sort
+    // a k=1 grouped top-k, executed through Spark's WindowGroupLimit
+    // instead of a window over every (user, event_type) group
     "q_first_touch" -> ((s, dir) => {
       val ev = streaming.Events.readEvents(s, dir)
       val w = Window.partitionBy("user_id", "event_type")
@@ -4084,8 +4084,8 @@ object SparkEntry {
 
     // fixed-COUNT per-stratum sample: exactly min(k, |stratum|) rows per
     // source in reproducible hash order — the deterministic reservoir
-    // replacement; the rank executes through the bounded-heap top-k
-    // operator, so a web-sized stratum costs O(k) memory, never a sort
+    // replacement; the rank executes through Spark's WindowGroupLimit, so
+    // a web-sized stratum shuffles O(k) rows per task, never all of them
     "q_sample_fixed_k" -> ((s, dir) => {
       ops.Sampling.fixedKPerStratum(
         s.read.parquet(s"$dir/documents.parquet"),
@@ -4359,8 +4359,8 @@ object SparkEntry {
     // per-source n-gram signature: top-5 most over-represented 3-grams by
     // lift = p(gram|source)/p(gram|corpus) — the source-fingerprinting
     // signal a mix designer reads ("what does this source add"); exact
-    // integer counts, ONE division, ranked through the bounded-heap
-    // grouped top-k operator (min support 3 to drop singleton noise)
+    // integer counts, ONE division, ranked through Spark's
+    // WindowGroupLimit (min support 3 to drop singleton noise)
     "q_source_signature" -> ((s, dir) => {
       val sh = pipeline.Dedup.shingles(
         s.read.parquet(s"$dir/documents.parquet"),
@@ -4686,8 +4686,8 @@ object SparkEntry {
 
     // reciprocal-rank fusion of two retrieval rankings (sqeuclidean and
     // cosine kNN over the probe set): score = Σ 1/(60 + rank), absent
-    // lists contribute 0. Both input rankings execute through the
-    // GroupedTopKLimit bounded heaps; the fusion is a (i, j) full outer
+    // lists contribute 0. Both input rankings execute through Spark's
+    // WindowGroupLimit; the fusion is a (i, j) full outer
     // join of two ≤20-row-per-probe lists. Every arithmetic step is an
     // IEEE double op in a fixed association order, so the score — and the
     // fused ranking — is bit-identical cross-engine
@@ -4717,8 +4717,8 @@ object SparkEntry {
     }),
 
     // exact per-source top tokens: corpus token counts ranked within each
-    // source through the GroupedTopKLimit bounded heaps — a whole
-    // source's vocabulary is never sorted
+    // source through Spark's WindowGroupLimit — a whole source's
+    // vocabulary is never ranked
     "q_top_tokens_source" -> ((s, dir) => {
       val c = s.read.parquet(s"$dir/documents.parquet")
         .select(col("source"),

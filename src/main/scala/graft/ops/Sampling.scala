@@ -161,11 +161,11 @@ object Sampling {
     * adding rows to a stratum only displaces, never reshuffles, the
     * selection order.
     *
-    * Shape at scale: the rank is a `row_number` window that the
-    * GroupedTopKLimit rewrite executes as bounded two-phase heaps (≤ k
-    * rows of state per stratum per task) around one hash exchange — a
-    * whole stratum is never sorted, so a web-dominated mix with one giant
-    * stratum costs O(k) memory, not O(|stratum| log |stratum|). */
+    * Shape at scale: the rank is a `row_number` window that Spark plans
+    * as `WindowGroupLimit`: each task cuts its rows to k per stratum
+    * before the one hash exchange and again after it, so a web-dominated
+    * mix with one giant stratum shuffles O(k) rows of it per task, and the
+    * window ranks only those — never the whole stratum. */
   def fixedKPerStratum(df: DataFrame, keyCol: String, strataCol: String,
                        k: Int, salt: String = "fixedk"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")

@@ -750,8 +750,9 @@ object Ann {
     * must be excluded or the loss fights itself — the standard hard-
     * negative recipe, cf. DPR/SimCSE practice). Same scan shape as
     * [[bruteTopK]] (broadcast queries × corpus stream) with the band
-    * filter applied BEFORE ranking, so near-dups never enter the heaps;
-    * ranking executes through the bounded-heap grouped top-k operator.
+    * filter applied BEFORE ranking, so near-dups never enter the ranking;
+    * ranking executes through Spark's `WindowGroupLimit` (k rows per
+    * query and task cross the exchange).
     * For web-scale corpora swap the brute scan for any index family here
     * (LSH/IVF/PQ shortlist, then band-filter + rank the shortlist). */
   def hardNegatives(corpus: Dataset[Point], queries: Dataset[Point], k: Int,

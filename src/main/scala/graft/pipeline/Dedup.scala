@@ -5,7 +5,6 @@ import scala.util.Random
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.{graftglue => glue}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,7 +55,7 @@ object Dedup {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
     docs.select(("text" +: keep).map(col): _*)
       .repartition(parallelism)
-      .select(keep.map(col) :+ glue.column(TokenGramHashes(glue.expression(col("text")), n)).as("g"): _*)
+      .select(keep.map(col) :+ Hashing.tokenGramHashes(col("text"), n).as("g"): _*)
   }
 
   /** N-gram novelty of a candidate batch against a reference corpus: per
@@ -929,8 +928,9 @@ object Dedup {
     * Scale: [[duplicateClusters]] bounds the graph work (O(log D)
     * rounds); the vote is one (cluster, label) hash aggregation over
     * LABELED MEMBERS OF NON-SINGLETON CLUSTERS ONLY — far smaller than
-    * the corpus — ranked through the grouped-top-k operator (k=1, never a
-    * full sort), then joined back id-keyed. No step touches text. */
+    * the corpus — ranked through Spark's `WindowGroupLimit` (k=1, never a
+    * window over a whole cluster), then joined back id-keyed. No step
+    * touches text. */
   def labelBackfill(docs: DataFrame, pairs: DataFrame,
                     labelCol: String = "lang",
                     unlabeled: org.apache.spark.sql.Column,

@@ -36,27 +36,22 @@ import graft.ops.Sampling
 object Dsir {
 
   /** One row per token-unigram and token-bigram OCCURRENCE:
-    * `(doc_id, is_target, bucket)` with `bucket = hash60(gram) % buckets`.
+    * `(doc_id, is_target, bucket)` with `bucket = hash60(gram) % buckets`,
+    * the grams being the shared token shingles at n = 1 and n = 2
+    * ([[Hashing.tokenGramHashes]]), unigrams first.
     * The target flag rides the projection (a boolean per row) so neither
     * consumer needs a corpus-scale join to recover it. Docs with no
     * tokens produce no rows. */
   private[pipeline] def gramBuckets(docs: DataFrame, isTarget: Column,
                                     buckets: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val tokenized = docs
-      .select(col("doc_id"), isTarget.as("is_target"), col("text"))
+    val text = col("text")
+    docs
+      .select(col("doc_id"), isTarget.as("is_target"), text)
       .repartition(parallelism)
       .select(col("doc_id"), col("is_target"),
-        TextOps.tokens(col("text")).as("t"))
-    val t = col("t")
-    val bigramIdxs = when(size(t) >= 2, sequence(lit(0), size(t) - 2))
-      .otherwise(array().cast("array<int>"))
-    val bigrams = transform(bigramIdxs, i =>
-      Hashing.hash60(concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2))))
-    val unigrams = transform(t, w => Hashing.hash60(w))
-    tokenized
-      .select(col("doc_id"), col("is_target"),
-        explode(concat(unigrams, bigrams)).as("gh"))
+        explode(concat(Hashing.tokenGramHashes(text, 1),
+          Hashing.tokenGramHashes(text, 2))).as("gh"))
       .select(col("doc_id"), col("is_target"),
         (col("gh") % buckets).as("bucket"))
   }

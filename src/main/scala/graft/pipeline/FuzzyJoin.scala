@@ -43,8 +43,9 @@ import org.apache.spark.sql.functions._
   * the verify touches candidates only; the dense path broadcasts a set
   * that is small by definition (strings under ~q·(d+1) chars). No
   * cartesian product anywhere on the long path. The prefix ranking runs
-  * through `row_number() <= k`, i.e. the [[graft.plans.GroupedTopKLimit]]
-  * bounded-heap operator — no per-doc sort of the full gram list.
+  * through `row_number() <= k`, which Spark plans as `WindowGroupLimit` —
+  * each doc's grams are cut to k per task before the exchange, so no
+  * doc's full gram list is shuffled or ranked.
   */
 object FuzzyJoin {
 

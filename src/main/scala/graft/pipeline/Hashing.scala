@@ -25,6 +25,14 @@ object Hashing {
     glue.column(graft.expressions.Md5Prefix60(glue.expression(c)))
   }
 
+  /** The [[hash60]]s of `text`'s token `n`-grams, in order — the one
+    * shingle definition ([[graft.expressions.TokenGramHashes]]) as a
+    * Column: empty under `n` tokens and for null text. */
+  def tokenGramHashes(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.{graftglue => glue}
+    glue.column(graft.expressions.TokenGramHashes(glue.expression(text), n))
+  }
+
   /** JVM form, bit-identical to [[hash60]]. */
   def hash60(s: String): Long = hash60(s.getBytes("UTF-8"))
 

@@ -13,10 +13,11 @@ import graft.tsne.Distances
   * relational: the centroid is a per-(cluster, dim) average via
   * `posexplode` + one hash aggregation (map-side partials — never a
   * per-cluster `collect`), the score one broadcast join + the codegen'd
-  * cosine expression, and the per-cluster top-k executes through the
-  * GroupedTopKLimit operator (bounded heaps, clusters never sorted
-  * whole). Scale shape: shuffle ∝ N·d for the centroid agg + N for the
-  * rank — no pairwise term anywhere, unlike the near-dup operators.
+  * cosine expression, and the per-cluster top-k executes through Spark's
+  * `WindowGroupLimit` (k rows per cluster and task cross the exchange;
+  * clusters are never ranked whole). Scale shape: shuffle ∝ N·d for the
+  * centroid agg + N for the rank — no pairwise term anywhere, unlike the
+  * near-dup operators.
   */
 object Prototypes {
 

@@ -953,8 +953,9 @@ object TextOps {
     * distinct (doc, term) pairs — dl rides the same rows, no second text
     * pass); query terms and their document frequencies are broadcast
     * (∝ |query vocabulary|, tiny); the score aggregation shuffles only
-    * postings that MATCH a query term; ranking runs through the
-    * bounded-heap GroupedTopK rewrite, never a full sort. Corpus stats
+    * postings that MATCH a query term; ranking runs through Spark's
+    * `WindowGroupLimit` (k rows per query cross the exchange from each
+    * task), never a window over every match. Corpus stats
     * (N, avgdl) are one 1-row broadcast. */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75,

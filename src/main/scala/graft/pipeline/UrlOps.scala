@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * regex — zero UDFs), so canonicalization is a narrow map with no
   * shuffle: embarrassingly parallel at 100 TB. The only shuffles in the
   * family are the one hash-aggregation of [[dedupByUrl]] and the
-  * [[domainCap]] ranking, which executes through the GroupedTopKLimit
-  * plan rewrite (bounded per-group heap — no full per-domain sort).
+  * [[domainCap]] ranking, which executes through Spark's
+  * `WindowGroupLimit` (k rows per domain and task cross the exchange —
+  * no domain is ranked whole).
   *
   * Canonical form (RFC 3986 §6 normalization, the subset that is safe
   * without scheme-specific knowledge):
@@ -630,9 +631,9 @@ object UrlOps {
 
   /** Per-registered-domain quota: keep at most `k` docs per domain,
     * largest-first with a deterministic id tiebreak — the row_number +
-    * filter shape that executes through the GroupedTopKLimit plan
-    * rewrite (bounded per-group heap), so no domain is ever fully
-    * sorted no matter how many pages it contributed. Emits the
+    * filter shape that Spark plans as `WindowGroupLimit`, so no domain
+    * is ever shuffled or ranked whole no matter how many pages it
+    * contributed. Emits the
     * surviving rows plus their in-domain rank. */
   def domainCap(docs: DataFrame, k: Int, urlCol: String = "url",
                 idCol: String = "doc_id",

@@ -31,15 +31,12 @@ object Knn {
   /** Grouped top-k with the rank kept: `(i, j, rn, dist)`, rank ordered by
     * `(dist, j)` ascending.
     *
-    * Deliberately written as the declarative ranking-window idiom: the
-    * engine's own optimizer rule (`graft.plans.RewriteRankFilterToTopK`,
-    * registered by `GraftExtensions`) rewrites it into the sort-free
-    * two-phase bounded-heap operators `GroupedTopKLimitPartialExec` →
-    * `GroupedTopKLimitFinalExec` — map-side k-heaps per key, a hash
-    * exchange of ≤ partitions·keys·k rows, per-key k-merge. Declaring the
-    * intent and letting the planner pick the
-    * physical strategy is the Spark-first shape; sessions without the
-    * extension still get Spark's built-in WindowGroupLimit pipeline. */
+    * Deliberately written as the declarative ranking-window idiom: Spark's
+    * `InferWindowGroupLimit` plans it as `WindowGroupLimit` — each key
+    * keeps its first k rows before the hash exchange (≤ partitions·keys·k
+    * rows cross it) and again after it, so the window ranks only those.
+    * Declaring the intent and letting the planner pick the physical
+    * strategy is the Spark-first shape. */
   def topKPerPointRanked(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("i").orderBy(col("dist"), col("j"))
     pairs

@@ -23,6 +23,14 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
   }
 
+  /** A collected query's ranking filter runs on Spark's WindowGroupLimit:
+    * the plan holds the group limit, and every ranking window sits directly
+    * on one, so no window ranks a whole key. */
+  private def rankedThroughGroupLimit(df: org.apache.spark.sql.DataFrame): Unit = {
+    df.queryExecution.executedPlan.toString should include("WindowGroupLimit")
+    RankLimits.unboundedRankingWindows(df.queryExecution.executedPlan) shouldBe empty
+  }
+
   "q_join_agg" should "broadcast the dimension tables" in {
     val plan = formattedPlan("q_join_agg")
     plan should include("BroadcastHashJoin")
@@ -60,13 +68,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     df.collect() // finalize adaptive plan
     val plan = df.queryExecution.executedPlan.toString
     plan should include("*(")
-    // the rank-filter window over the filtered pair table was rewritten to
-    // the bounded-heap operator: map-side partial heaps, a standard
-    // Tungsten hash exchange, then a spillable sort of the SURVIVORS ONLY
-    // feeding the streaming rank scan — the pair input itself is never
-    // sorted
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // the rank-filter window over the filtered pair table runs on a group
+    // limit: each key keeps its first k rows before and after the hash
+    // exchange, so the window ranks only the survivors
+    rankedThroughGroupLimit(df)
     (plan.linesIterator.exists(l =>
       l.contains("Exchange hashpartitioning(i#"))) shouldBe true
   }
@@ -79,7 +84,6 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     // and range-partitioned once for the ORDER BY
     plan should not include ("NestedLoopJoin")
     plan should not include ("CartesianProduct")
-    plan should not include ("GroupedTopKLimit")
     plan should not include ("Window")
     forAll(plan.linesIterator.filter(_.contains("Exchange ")).toSeq) { l =>
       l should include("rangepartitioning")
@@ -89,19 +93,15 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "q_source_cap" should "execute the per-source quota through the top-k operator" in {
     val df = SparkEntry.queries("q_source_cap")(spark, dir)
     df.collect() // finalize adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    // the curation cap must never sort whole sources — bounded heaps only
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // the curation cap must never rank whole sources — group limits only
+    rankedThroughGroupLimit(df)
   }
 
   "q_domain_cap" should "execute the per-domain quota through the top-k operator" in {
     val df = SparkEntry.queries("q_domain_cap")(spark, dir)
     df.collect() // finalize adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    // the domain cap must never sort whole domains — bounded heaps only
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // the domain cap must never rank whole domains — group limits only
+    rankedThroughGroupLimit(df)
   }
 
   "q_url_canonical" should "stay one whole-stage-codegen map over the scan (no shuffle before the output sort)" in {
@@ -148,12 +148,9 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "q_crawl_budget" should "bound the quota with the constant-cap heap and refine residually" in {
     val df = SparkEntry.queries("q_crawl_budget")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    // the variable per-domain budget must NOT force the window back in:
-    // rn <= 4 drives the bounded heap, rn <= budget filters above it
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
-    plan should not include "Window"
+    // the variable per-domain budget must NOT force an unbounded window:
+    // rn <= 4 is the group limit, rn <= budget filters above it
+    rankedThroughGroupLimit(df)
   }
 
   "q_gopher_rules" should "stay one codegen map over the scan (no shuffle before the output sort)" in {
@@ -201,8 +198,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     // gate⋈sitemap doc_id equi-join may sort-merge (both sides are
     // corpus-sized — broadcasting either would be wrong at scale) but
     // must never cross-product
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
     plan should not include "Cartesian"
   }
 
@@ -255,9 +251,9 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     val df = SparkEntry.queries("q_rank_topk")(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
-    plan should not include "Window" // the window idiom was fully rewritten
+    // the group limit runs in rank() mode, keeping tie groups whole
+    plan should include regex "WindowGroupLimit .*rank\\(o_year"
+    rankedThroughGroupLimit(df)
   }
 
   "q_range_join" should "plan bucketed hash joins, never a per-key cross product" in {
@@ -312,7 +308,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     val df = SparkEntry.queries("q_prototypes")(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
+    rankedThroughGroupLimit(df)
     plan should include("BroadcastHashJoin")
     plan should not include "SortMergeJoin" // the corpus side never shuffles for the join
   }
@@ -320,9 +316,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "q_dedup_keep_best" should "pick the representative through the top-k operator (argmax rewrite)" in {
     val df = SparkEntry.queries("q_dedup_keep_best")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_doc_chunks" should "stay a generate-over-scan with no shuffle" in {
@@ -361,9 +355,8 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // the q*d+1 prefix selection is a row_number <= k idiom — it must run
-    // through the bounded-heap operator, never a full per-doc gram sort
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // on a group limit, never rank a doc's full gram list
+    rankedThroughGroupLimit(df)
     // the candidate generator is an equi-join on gram; all-pairs shapes are
     // allowed only on the short-key dense side, which is a broadcast NLJ of
     // an (empty here) tiny set — never a CartesianProduct
@@ -373,10 +366,8 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "q_first_touch" should "execute the k=1 selection through the top-k operator" in {
     val df = SparkEntry.queries("q_first_touch")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
     // first-event-per-key must never sort whole (user, type) groups
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_inverted_index" should "prune the documents scan and partial-aggregate the postings" in {
@@ -397,9 +388,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   "q_sample_fixed_k" should "rank strata through the top-k operator, never a per-stratum sort" in {
     val df = SparkEntry.queries("q_sample_fixed_k")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_apply_changes" should "broadcast the changeset anti-join, never shuffle the snapshot" in {
@@ -476,11 +465,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   }
 
   "q_top_tokens_source" should "rank through the GroupedTopKLimit bounded heaps" in {
+    // name kept from the deleted GroupedTopK operator, so the test id stays stable
     val df = SparkEntry.queries("q_top_tokens_source")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_funnel and q_gap_fill" should "never plan a cartesian product or a one-task funnel" in {
@@ -536,11 +524,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   }
 
   "q_rrf_fusion" should "rank both input lists through the GroupedTopKLimit heaps" in {
+    // name kept from the deleted GroupedTopK operator, so the test id stays stable
     val df = SparkEntry.queries("q_rrf_fusion")(spark, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "Graph.pageRank" should "submit the same few jobs at 2 and 10 iterations" in {
@@ -662,6 +649,12 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     // bucket distribution and per-doc sums both partial-combine map-side
     plan.sliding("HashAggregate".length)
       .count(_ == "HashAggregate") should be >= 4
+    // the unigram and bigram hashes come from the shared native shingler,
+    // not transform lambdas (interpreted: ArrayTransform is CodegenFallback)
+    val optimized = w.queryExecution.optimizedPlan
+    optimized.find(_.expressions.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.LambdaFunction]))) shouldBe None
+    optimized.toString should include("token_gram_hashes")
   }
 
   "Bpe.segment" should "run the merge chain on the vocab side only — no cartesian, no window" in {
@@ -708,11 +701,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   }
 
   "q_quality_model_topk" should "rank per source through the bounded-heap operator" in {
+    // name kept from the deleted GroupedTopK operator, so the test id stays stable
     val df = SparkEntry.queries("q_quality_model_topk")(spark, dir)
     df.collect() // finalize adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_quantile_normalize" should "contain no window and no single-partition exchange" in {
@@ -777,11 +769,10 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   }
 
   "q_source_signature" should "rank lift per source through the bounded-heap operator" in {
+    // name kept from the deleted GroupedTopK operator, so the test id stays stable
     val df = SparkEntry.queries("q_source_signature")(spark, dir)
     df.collect() // finalize adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    rankedThroughGroupLimit(df)
   }
 
   "q_cdc_chunks" should "stay map-side: no join, no window, no aggregate before the sink" in {
@@ -826,6 +817,7 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
   }
 
   "q_bm25_topk" should "broadcast the query side and rank through the bounded heap" in {
+    // name kept from the deleted GroupedTopK operator, so the test id stays stable
     val df = SparkEntry.queries("q_bm25_topk")(spark, dir)
     df.collect() // finalize adaptive plan
     val plan = df.queryExecution.executedPlan.toString
@@ -835,9 +827,8 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     plan should include("BroadcastNestedLoopJoin") // 1-row stats
     plan should not include "SortMergeJoin"
     plan should not include "CartesianProduct"
-    // ranking rides the bounded heap, never a full per-query sort
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // ranking rides a group limit, never ranks a whole query's docs
+    rankedThroughGroupLimit(df)
   }
 
   "TextOps.luhnValidPii" should "be a pure map-side plan with no exchange" in {
@@ -926,5 +917,30 @@ class PlanShapeSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
 
   "the flagship entry" should "smoke-run on sf0.001 with rows > 0" in {
     SparkEntry.entry(spark).count() should be > 0L
+  }
+
+  "every ranking-filter query" should "plan Spark's WindowGroupLimit under its rank filter" in {
+    // the queries whose plans filter a row_number()/rank()/dense_rank()
+    // window on a bound (the census in LEDGER.md "GroupedTopK vs
+    // WindowGroupLimit (deleted)"). Spark infers the group limit only up
+    // to spark.sql.optimizer.windowGroupLimitThreshold (1000): past it, or
+    // on a bound it cannot read, the window silently ranks every row of
+    // every key
+    val rankFilterQueries = Seq(
+      "q_ann_cosine", "q_ann_ivf", "q_ann_ivfpq", "q_ann_ivfpq_refine",
+      "q_ann_lsh", "q_ann_pca", "q_ann_pq", "q_ann_rp", "q_ann_sq",
+      "q_bm25_topk", "q_crawl_budget", "q_crawl_frontier",
+      "q_dedup_keep_best", "q_dense_rank_topk", "q_domain_cap",
+      "q_first_touch", "q_fuzzy_join", "q_hard_negatives", "q_knn_project",
+      "q_label_backfill", "q_prototypes", "q_quality_model_topk",
+      "q_rank_topk", "q_rrf_fusion", "q_sample_fixed_k", "q_source_cap",
+      "q_source_signature", "q_top_tokens_source", "q_topk_orders")
+    forAll(rankFilterQueries) { q =>
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      withClue(s"$q: ") {
+        RankLimits.hasGroupLimit(plan) shouldBe true
+        RankLimits.unlimitedRankFilters(plan) shouldBe empty
+      }
+    }
   }
 }

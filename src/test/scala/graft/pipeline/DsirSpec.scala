@@ -96,6 +96,33 @@ class DsirSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     w(200L) shouldBe ((0L, 0L))
   }
 
+  it should "equal the former lambda-built grams on edge-case texts at 1 and 7 partitions" in {
+    val s = spark
+    import s.implicits._
+    val edge: Seq[(Long, Option[String], Boolean)] = Seq(
+      (300L, None, true), (301L, Some(""), false), (302L, Some(" \t\n\r "), true),
+      (303L, Some("solo"), false), (304L, Some("  lead and trail  "), true),
+      (305L, Some("tab\tsep\nnew line\r\nend\u000b\u000cx"), false),
+      (306L, Some("héllo wörld 日本語 テキスト ñandú"), true),
+      (307L, Some("émoji 🙂 text 🙂 text"), false),
+      (308L, Some("nbsp\u00a0stays inside\u00a0a token"), true))
+    val docs = (corpus.map { case (id, tx, tg) => (id, Option(tx), tg) } ++ edge)
+      .toDF("doc_id", "text", "tgt")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    def grams(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2))).toSeq.sorted
+    for (parts <- Seq(1, 7)) withShufflePartitions(parts) {
+      withClue(s"$parts partitions: ") {
+        grams(Dsir.gramBuckets(docs, col("tgt"), B)) shouldBe
+          grams(FormerDsir.gramBuckets(docs, col("tgt"), B))
+        val got = rows(Dsir.importanceWeights(docs, col("tgt"), B))
+        got shouldBe rows(FormerDsir.importanceWeights(docs, col("tgt"), B))
+        got.length shouldBe docs.count()
+      }
+    }
+  }
+
   "Dsir.resample" should "keep exactly ceil(n·num/den) docs, ranked by perturbed weight" in {
     val kept = Dsir.resample(mkDocs(corpus), col("tgt"), B,
       keepNum = 1L, keepDen = 4L, salt = "t0").collect()

@@ -598,10 +598,11 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     TextOps.bm25TopK(d.repartition(7), q.repartition(3), k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq.sorted shouldBe got.toSeq.sorted
-    // ranking runs through the bounded-heap rewrite, not a full window sort
-    val plan = TextOps.bm25TopK(d, q, k = 3).queryExecution.executedPlan.toString
-    plan should include("GroupedTopKLimitPartial")
-    plan should include("GroupedTopKLimitFinal")
+    // ranking runs on a group limit, not a window over every candidate
+    val ranked = TextOps.bm25TopK(d, q, k = 3)
+    ranked.collect()
+    ranked.queryExecution.executedPlan.toString should include("WindowGroupLimit")
+    graft.RankLimits.unboundedRankingWindows(ranked.queryExecution.executedPlan) shouldBe empty
   }
 
   "TextOps.tfidf" should "assemble vectors that scatter the long format and bridge text into cosine space" in {
