@@ -78,10 +78,11 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // name order throughout, so two dumps of the same code are identical
     val failures = dumpQueries(spark, sfDir, outDir,
-      SparkEntry.queries.toSeq
+      SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) })
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // failure sidecar (always written, empty object when all green): the

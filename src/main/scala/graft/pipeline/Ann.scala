@@ -15,6 +15,13 @@ import scala.util.Random
   */
 object Ann {
 
+  /** The `k` most similar `j` per `i` of `scored(i, j, sim)` as
+    * `(i, j, rn, sim)`: Knn's top-k over the negated similarity. */
+  private[pipeline] def topKBySim(scored: DataFrame, k: Int): DataFrame =
+    Knn.topKPerPointRanked(
+      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
+      .select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+
   /** Exact top-k by cosine similarity: queries × corpus with the codegen'd
     * dot/norm expressions, ranking window per query. The right choice when
     * the query set is small (broadcast the queries) or recall must be 1. */
@@ -31,9 +38,7 @@ object Ann {
       .where(col("i") =!= col("j"))
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("va"), col("vb")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      pairs.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(pairs, k)
   }
 
   /** IVF (inverted-file) index: a coarse k-means quantizer over the corpus,
@@ -248,9 +253,7 @@ object Ann {
       .where(col("i") =!= col("j"))
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("qvec"), col("vec")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 
   // ---------------- product quantization (PQ) ---------------------------
@@ -422,9 +425,7 @@ object Ann {
         }
       }
     }.toDF("i", "j", "sim")
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 
   // ---------------- IVF-PQ composition ----------------------------------
@@ -534,9 +535,7 @@ object Ann {
           }
       }
     }.toDF("i", "j", "sim")
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 
   /** IVF-PQ with exact refinement (the FAISS `IndexRefineFlat` shape):
@@ -565,9 +564,7 @@ object Ann {
       .join(qv, "i")
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("qv"), col("cv")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      rescored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(rescored, k)
   }
 
   /** Signed random-hyperplane signature: bit m = sign(v · r_m). Hyperplanes
@@ -671,9 +668,7 @@ object Ann {
     val scored = cands.join(broadcast(q), "i").join(c, "j")
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("va"), col("vb")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 
   /** Deterministic ±1 Johnson–Lindenstrauss projection matrix (d × m) —
@@ -738,9 +733,7 @@ object Ann {
     val scored = short.join(broadcast(qv), "i").join(cv, "j")
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("va"), col("vb")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 
   /** Hard-negative mining for contrastive training: per query, the k MOST
@@ -767,9 +760,7 @@ object Ann {
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("va"), col("vb")).as("sim"))
       .where(col("sim") < lit(thetaDup))
-    val ranked = Knn.topKPerPointRanked(
-      pairs.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(pairs, k)
   }
 
   /** Scalar-quantization index (the FAISS `IndexScalarQuantizer` QT_8bit
@@ -879,8 +870,6 @@ object Ann {
         }
       }
     }.toDF("i", "j", "sim")
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    topKBySim(scored, k)
   }
 }

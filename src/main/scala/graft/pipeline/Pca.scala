@@ -210,9 +210,7 @@ object Pca {
     val scored = short.join(broadcast(qv), "i").join(cv, "j")
       .select(col("i"), col("j"),
         Distances.cosineSimCol(col("va"), col("vb")).as("sim"))
-    val ranked = Knn.topKPerPointRanked(
-      scored.select(col("i"), col("j"), (-col("sim")).as("dist")), k)
-    ranked.select(col("i"), col("j"), col("rn"), (-col("dist")).as("sim"))
+    Ann.topKBySim(scored, k)
   }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix (in-place on a

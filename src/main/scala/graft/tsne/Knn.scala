@@ -19,15 +19,6 @@ import graft.SuperstepPartitioner
   */
 object Knn {
 
-  /** Grouped top-k: the ranking-window idiom — Spark's native form of the
-    * reference's `groupBy.sortGroup(dist).first(k)`. Expects columns
-    * `(i, j, dist)`. */
-  private def topKPerPoint(pairs: DataFrame, k: Int): Dataset[Neighbor] = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    topKPerPointRanked(pairs, k).select(col("i"), col("j"), col("dist")).as[Neighbor]
-  }
-
   /** Grouped top-k with the rank kept: `(i, j, rn, dist)`, rank ordered by
     * `(dist, j)` ascending.
     *
@@ -275,7 +266,9 @@ object Knn {
     val pairs = allCandidates.join(va, "i").join(vb, "j")
       .select(col("i"), col("j"),
         Distances.colByName(metric)(col("va"), col("vb")).as("dist"))
-    topKPerPoint(pairs, k)
+    val spark = points.sparkSession
+    import spark.implicits._
+    topKPerPointRanked(pairs, k).select(col("i"), col("j"), col("dist")).as[Neighbor]
   }
 
   /** The deduplicated ±window rank-neighborhood candidate pairs of
@@ -343,14 +336,11 @@ object Knn {
     * A `row_number() OVER (PARTITION BY proj)` would gather each whole
     * projection into one task; this keeps the sort distributed and is
     * exact (not partition-dependent): the rank is a pure function of the
-    * (proj, z, id) total order. */
-  private[tsne] def rankWithinProjection(
-      keyed: Dataset[(Int, Long, Array[Byte])]): Dataset[(Int, Long, Long)] =
-    rankWithinProjectionWithCount(keyed)._1
-
-  /** [[rankWithinProjection]] plus the exact total row count — free here
-    * (the count pass already ran on the driver), and it lets callers make
-    * size-based planning decisions without an extra job. */
+    * (proj, z, id) total order.
+    *
+    * Also returns the exact total row count — free here (the count pass
+    * already ran on the driver), and it lets callers make size-based
+    * planning decisions without an extra job. */
   private[tsne] def rankWithinProjectionWithCount(
       keyed: Dataset[(Int, Long, Array[Byte])]): (Dataset[(Int, Long, Long)], Long) = {
     val spark = keyed.sparkSession
@@ -393,8 +383,6 @@ object Knn {
     (ranked, counts.iterator.flatMap(_.valuesIterator).sum)
   }
 
-  /** kNN method dispatch mirroring the CLI surface
-    * (ref `Tsne.scala:74-79`). */
   /** The ±window rule shared by the driver query (`q_knn_project`) and the
     * CLI dispatch (VERDICT r4 #7): 5.5% of N — measured to hold recall
     * ≥ 0.9 on isotropic fixtures — floored at 50 and CAPPED at 512 so the
@@ -404,6 +392,8 @@ object Knn {
   def tunedWindow(nPoints: Long): Int =
     math.min(512, math.max(50, math.ceil(nPoints * 0.055).toInt))
 
+  /** kNN method dispatch mirroring the CLI surface
+    * (ref `Tsne.scala:74-79`). */
   def byMethod(method: String, points: Dataset[Point], k: Int, metric: String,
                blocks: Int, knnIterations: Int, seed: Long = 42L,
                dimension: Int = -1): Dataset[Neighbor] =

@@ -89,10 +89,4 @@ class VerifySpec extends AnyFlatSpec with Matchers with SparkTestBase {
     Release.checkpoint(leaked)
     spark.read.parquet(s"$out/q_checkpointed").count() shouldBe 25
   }
-
-  "SparkEntry" should "hold an oracle SQL text for exactly the queries it registers" in {
-    // a query without an oracle text is never cross-checked, and an
-    // oracle text without a query checks nothing
-    SparkEntry.queries.keySet shouldBe SparkEntry.oracleSql.keySet
-  }
 }

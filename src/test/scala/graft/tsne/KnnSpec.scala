@@ -70,7 +70,7 @@ class KnnSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspectors wi
         (proj, i.toLong, ZOrderKey.morton(Array(rnd.nextDouble(), rnd.nextDouble())))
       }
     }
-    val got = Knn.rankWithinProjection(s.createDataset(rows).repartition(7))
+    val got = Knn.rankWithinProjectionWithCount(s.createDataset(rows).repartition(7))._1
       .collect().map { case (p, id, r) => (p, id) -> r }.toMap
     // ground truth: index in the (z, id)-sorted order, per projection
     implicit val byteOrd: Ordering[Array[Byte]] =
